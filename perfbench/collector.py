@@ -3,9 +3,10 @@
 Everything here observes the program from outside:
 
 - ``Wrappers`` times calls into the public functions of the program's
-  layer modules (``session``, ``catalog``, ``tables``, ``delta_log``,
-  ``streaming.*``) by rebinding them, for the duration of
-  a traced pass, in every loaded module of the package.
+  layer modules (``session``, ``catalog``, ``pipeline``, ``datagen``,
+  ``sources``, ``tables``, ``delta_log``, ``streaming.*``) by
+  rebinding them, for the duration of a traced op, in every loaded
+  module of the package.
 - ``SparkProbe`` reads each op's jobs, stages and SQL executions from
   Spark's status stores right after the op (``statusTracker`` /
   ``AppStatusStore`` for jobs and stages, the SQL status store for the
@@ -52,51 +53,87 @@ class Wrappers:
     def __init__(self):
         self.acc: dict[str, float] = defaultdict(float)
         self._patched: list[tuple[object, str, object]] = []
+        self._depth: dict[str, int] = defaultdict(int)
+        self._pending: dict[int, tuple[object, object]] = {}
+        self._layers: list | None = None
 
     def _timed(self, metric: str, fn, after=None):
         acc = self.acc
+        depth = self._depth
 
         @functools.wraps(fn)
         def wrapper(*args, **kwargs):
+            # a call made inside another call to the same metric's
+            # functions is already in the outer call's time
+            depth[metric] += 1
             t0 = time.perf_counter()
             try:
                 out = fn(*args, **kwargs)
             finally:
-                acc[metric] += time.perf_counter() - t0
+                depth[metric] -= 1
+                if not depth[metric]:
+                    acc[metric] += time.perf_counter() - t0
             if after is not None:
                 after(out, *args, **kwargs)
             return out
 
         return wrapper
 
-    def _rebind(self, orig, wrapped) -> None:
+    def wrap(self, module, fname: str, metric: str, after=None) -> None:
+        orig = getattr(module, fname)
+        self._pending[id(orig)] = (orig, self._timed(metric, orig, after))
+
+    def _bind(self) -> list[tuple[object, str, object, object]]:
+        """Every (module, attribute, original, wrapper) of the pending
+        wrappers in the loaded modules of the package, in one sweep."""
+        targets = []
         for mod in list(sys.modules.values()):
             name = getattr(mod, "__name__", "")
             if not (name.startswith("beauty_lakehouse_spark") or name == "__spark_entry__"):
                 continue
             for attr, val in list(vars(mod).items()):
-                if val is orig:
-                    setattr(mod, attr, wrapped)
-                    self._patched.append((mod, attr, orig))
+                hit = self._pending.get(id(val))
+                if hit is not None and hit[0] is val:
+                    targets.append((mod, attr, val, hit[1]))
+        self._pending.clear()
+        return targets
 
-    def wrap(self, module, fname: str, metric: str, after=None) -> None:
-        orig = getattr(module, fname)
-        self._rebind(orig, self._timed(metric, orig, after))
+    def _install(self, targets) -> None:
+        for mod, attr, orig, wrapped in targets:
+            setattr(mod, attr, wrapped)
+            self._patched.append((mod, attr, orig))
 
     def install_setup(self) -> None:
         from beauty_lakehouse_spark import catalog, session
 
         self.wrap(session, "get_spark", "session.get_spark_s")
         self.wrap(catalog, "load", "catalog.load_s")
+        self._install(self._bind())
         orig = catalog.Catalog.table
         catalog.Catalog.table = self._timed("catalog.load_s", orig)
         self._patched.append((catalog.Catalog, "table", orig))
 
     def install_layers(self) -> None:
-        from beauty_lakehouse_spark import delta_log, tables
+        """Wrap the layer modules' functions. The targets are found on
+        the first call and reused; the first traced op comes after the
+        untraced ops of the cold pass have imported every module the
+        workload uses."""
+        if self._layers is None:
+            self._layers = self._layer_targets()
+        self._install(self._layers)
+
+    def _layer_targets(self):
+        from beauty_lakehouse_spark import datagen, delta_log, pipeline, sources, tables
         from beauty_lakehouse_spark.streaming import pipelines, stateful
 
         acc = self.acc
+        self.wrap(pipeline, "run_lakehouse_pipeline", "pipeline.lakehouse_s")
+        self.wrap(datagen, "generate", "pipeline.datagen_s")
+        for fname in (
+            "write_csv", "read_csv", "write_curated", "read_curated",
+            "validate_curated", "write_metadata",
+        ):
+            self.wrap(sources, fname, "pipeline.sources_s")
 
         def written(version, _first, path, *_a, **_k):
             # write_versioned(df, path, ...) and merge_upsert(spark, path, ...)
@@ -125,11 +162,12 @@ class Wrappers:
             finally:
                 acc[f"streaming.{layer}.drain_s"] += time.perf_counter() - t0
 
-        self._rebind(orig_drain, drain)
+        self._pending[id(orig_drain)] = (orig_drain, drain)
         for mod in (pipelines, stateful):
             for fname in dir(mod):
                 if fname.endswith("_finish") and callable(getattr(mod, fname)):
                     self.wrap(mod, fname, "streaming.finish_s")
+        return self._bind()
 
     def uninstall(self) -> None:
         for mod, attr, orig in reversed(self._patched):
@@ -181,7 +219,7 @@ _UNITS = {
     "B": 1.0, "KiB": 1024.0, "MiB": 1024.0**2, "GiB": 1024.0**3, "TiB": 1024.0**4,
 }
 _PY_METRICS = {
-    "time to start Python workers": "python.workers_start_s",
+    "time to initialize Python workers": "python.workers_init_s",
     "time to run Python workers": "python.run_s",
     "data sent to Python workers": "python.bytes_sent",
     "data returned from Python workers": "python.bytes_returned",

@@ -7,8 +7,9 @@ is the identity order. A fresh directory per pass means every
 path-keyed memo in the program misses on its first use in that pass.
 
 The ``ingest_merge_stream`` workload also gets a sequence of MERGE
-batches (upserts and deletes against the orders table), drawn from the
-seed alone and written as parquet files into each copy.
+batches (upserts and deletes against the orders table), split from the
+program's own MERGE scenario by the seed and written as parquet files
+into each copy.
 """
 
 from __future__ import annotations
@@ -93,47 +94,30 @@ def merge_base(scale: str) -> pa.Table:
 def merge_batches(
     scale: str, seed: int, n_batches: int
 ) -> list[tuple[pa.Table, pa.Table]]:
-    """``n_batches`` (upserts, deletes) pairs drawn from the seed.
+    """``n_batches`` (upserts, deletes) pairs: the program's own MERGE
+    scenario (``tables._merge_scenario``: keys % 7 get +1.00 on the
+    price, keys % 11 are inserted again under key + 10,000,000, keys %
+    13 are deleted), split into batches by the seed.
 
-    Like a change feed, each batch touches recent data: it updates ~6 %
-    and deletes ~1.5 % of the live keys of the two latest years (price
-    and status; one in ten updates moves the row from the older of the
-    two years to the latest one) and inserts ~3 % new keys into the
-    latest year. Keys are unique within a batch and never both upserted
-    and deleted."""
-    rng = np.random.default_rng([seed, 7919])
-    state = merge_base(scale).to_pandas().set_index(MERGE_KEY, drop=False)
-    last_year = int(state["order_year"].max())
-    statuses = np.array(sorted(state["o_orderstatus"].unique()))
-    custkeys = state["o_custkey"].to_numpy()
-    next_key = int(state[MERGE_KEY].max()) + 1
+    The seed assigns every touched key to a batch; a key's update,
+    insert and delete land in the same batch, so the end state is the
+    scenario's for every seed. The mix is uniform over the years, so
+    every batch touches every partition."""
+    base = merge_base(scale).to_pandas()
+    key = base[MERGE_KEY].to_numpy()
+    upd, ins, dele = key % 7 == 0, key % 11 == 0, key % 13 == 0
+    touched = np.unique(key[upd | ins | dele])
+    batch_of = np.empty(len(touched), dtype=np.int64)
+    batch_of[permutation(seed, 7919, len(touched))] = np.arange(len(touched)) % n_batches
+    batch = np.full(len(key), -1)
+    hit = upd | ins | dele
+    batch[hit] = batch_of[np.searchsorted(touched, key[hit])]
+    updates = base[upd].assign(o_totalprice=np.round(base.loc[upd, "o_totalprice"] + 1.0, 2))
+    inserts = base[ins].assign(**{MERGE_KEY: base.loc[ins, MERGE_KEY] + 10_000_000})
     out = []
-    for _ in range(n_batches):
-        recent = state["order_year"] >= last_year - 1
-        live = np.sort(state.loc[recent, MERGE_KEY].to_numpy())
-        n_upd, n_ins, n_del = len(live) * 6 // 100, len(live) * 3 // 100, len(live) * 3 // 200
-        picked = rng.choice(live, n_upd + n_del, replace=False)
-        upd_keys, del_keys = np.sort(picked[:n_upd]), np.sort(picked[n_upd:])
-        upd = state.loc[upd_keys].copy()
-        upd["o_totalprice"] = np.round(
-            upd["o_totalprice"].to_numpy() * rng.uniform(0.9, 1.1, n_upd), 2
-        )
-        upd["o_orderstatus"] = rng.choice(statuses, n_upd)
-        move = (rng.random(n_upd) < 0.1) & (upd["order_year"].to_numpy() < last_year)
-        upd.loc[move, "order_year"] = last_year
-        ins_keys = np.arange(next_key, next_key + n_ins, dtype=np.int64)
-        next_key += n_ins
-        ins = pd.DataFrame({
-            "o_orderkey": ins_keys,
-            "o_custkey": rng.choice(custkeys, n_ins),
-            "o_orderstatus": rng.choice(statuses, n_ins),
-            "o_totalprice": np.round(rng.uniform(900.0, 500_000.0, n_ins), 2),
-            "order_year": np.full(n_ins, last_year, dtype=np.int32),
-        }).set_index(MERGE_KEY, drop=False)
-        ups = pd.concat([upd, ins])[MERGE_COLUMNS]
-        ups["order_year"] = ups["order_year"].astype(np.int32)
-        dels = pd.DataFrame({MERGE_KEY: del_keys.astype(np.int64)})
-        state = pd.concat([state.drop(index=np.concatenate([upd_keys, del_keys])), ups])
+    for b in range(n_batches):
+        ups = pd.concat([updates[batch[upd] == b], inserts[batch[ins] == b]])[MERGE_COLUMNS]
+        dels = base.loc[dele & (batch == b), [MERGE_KEY]]
         out.append((
             pa.Table.from_pandas(ups, preserve_index=False),
             pa.Table.from_pandas(dels, preserve_index=False),

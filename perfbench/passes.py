@@ -44,13 +44,20 @@ class Runner:
         self.oracles = verify.Oracles(args.scale, args.cache)
         n_batches = workloads.WORKLOADS[args.workload].get("merge_batches", 0)
         self.batches = inputs.merge_batches(args.scale, args.seed, n_batches) if n_batches else []
-        self.warm_passes = workloads.WORKLOADS[args.workload].get("warm_passes", 1)
         self.attempted = 0
         self.failures: list[dict] = []
         self.records: list[dict] = []
 
-    def run_pass(self, pass_no: int, tracer=None) -> tuple[float, workloads.Pass]:
-        """Run every op once; returns (wall seconds, the pass)."""
+    def run_pass(
+        self, pass_no: int, tracer=None, parity: int | None = None
+    ) -> tuple[float, workloads.Pass]:
+        """Run every op once (run-once ops in pass 1 only); returns
+        (wall seconds, the pass).
+
+        With a ``tracer``, the run-once ops and the ops whose index has
+        the given ``parity`` run traced: the collector is switched on
+        for them alone, and their span (``span_s``) includes all of its
+        work."""
         a, spark = self.args, self.spark
         fx = inputs.write_copy(a.scale, os.path.join(a.rundir, f"fx{pass_no}"), a.seed, pass_no)
         batch_paths = (
@@ -63,20 +70,25 @@ class Runner:
         )
         os.makedirs(p.work)
         results = []
-        wall = 0.0
         t_first = time.perf_counter()
-        for op in self.ops:
+        for i, op in enumerate(self.ops):
+            if op.once and pass_no > 1:
+                continue
             spark.sparkContext.setJobGroup(op.name, f"{a.workload} pass {pass_no}")
-            rec = {"pass": pass_no, "op": op.name, "module": op.module}
+            traced = tracer is not None and (op.once or i % 2 == parity)
+            rec = {
+                "pass": pass_no, "index": i, "op": op.name, "module": op.module, "traced": traced,
+            }
             self.attempted += 1
-            before = tracer.probe.mark() if tracer else None
+            t_span = time.perf_counter()
+            before = tracer.begin() if traced else None
             e0 = time.time()
             t0 = time.perf_counter()
             res = err = None
             try:
                 built = op.build(p)
                 t1 = time.perf_counter()
-                mid = tracer.probe.mark()[0] if tracer else None
+                mid = tracer.probe.mark()[0] if traced else None
                 t2 = time.perf_counter()
                 res = materialize(built)
                 t3 = time.perf_counter()
@@ -85,12 +97,11 @@ class Runner:
                 t1 = t2 = t3 = time.perf_counter()
                 mid = None
             rec["build_s"], rec["exec_s"] = t1 - t0, t3 - t2
-            wall += rec["build_s"] + rec["exec_s"]
-            if tracer:
+            if traced:
                 tracer.after_op(rec, before, mid, e0, time.time())
+            rec["span_s"] = time.perf_counter() - t_span
             results.append((op, res, err, rec))
-        if tracer is None:
-            wall = time.perf_counter() - t_first
+        wall = time.perf_counter() - t_first
         for op, res, err, rec in results:
             if err is None:
                 try:
@@ -105,7 +116,8 @@ class Runner:
 
 
 class Tracer:
-    """Collector for the traced pass: wrappers, listener, status stores."""
+    """Collector for traced ops: wrappers, listener, status stores.
+    ``begin``/``after_op`` switch it on and off around one op."""
 
     def __init__(self, spark, wrappers: collector.Wrappers):
         self.spark = spark
@@ -113,12 +125,17 @@ class Tracer:
         self.probe = collector.SparkProbe(spark)
         self.listener = collector.StreamListener()
         self.acc: dict[str, float] = defaultdict(float)
-        spark.streams.addListener(self.listener)
         wrappers.acc.clear()
-        wrappers.install_layers()
+
+    def begin(self):
+        self.wrappers.install_layers()
+        self.spark.streams.addListener(self.listener)
+        return self.probe.mark()
 
     def after_op(self, rec: dict, before, mid, e0: float, e1: float) -> None:
         after = self.probe.mark()
+        self.spark.streams.removeListener(self.listener)
+        self.wrappers.uninstall()
         got = self.probe.collect(
             before, mid if mid is not None else after[0], after,
             e0, e1, rec["build_s"] + rec["exec_s"],
@@ -129,9 +146,7 @@ class Tracer:
             self.acc[k] += v
         self.listener.take_state()
 
-    def close(self) -> dict[str, float]:
-        self.wrappers.uninstall()
-        self.spark.streams.removeListener(self.listener)
+    def totals(self) -> dict[str, float]:
         out = defaultdict(float, self.acc)
         for src in (self.wrappers.acc, self.listener.acc):
             for k, v in src.items():

@@ -7,11 +7,10 @@ Run from the repository root. The run starts a fresh Spark driver
 process (``worker.py``) on ``local[<cores>]``, which sets up, runs a
 cold pass and then warm passes of the workload's ops, each pass on its
 own seed-permuted fixture copy, and checks every output against its
-DuckDB twin. A second process gives a second ``setup_s`` sample and, when
-the first cold pass was short, a second cold pass; the run reports
-medians. With ``--trace 0`` the last line
-of stdout holds the end-to-end metrics, with ``--trace 1`` the
-per-layer ones (see ``layers.py``).
+DuckDB twin. A second process sets up once more, for a second
+``setup_s`` sample; the run reports the median. With ``--trace 0`` the
+last line of stdout holds the end-to-end metrics, with ``--trace 1``
+the per-layer ones (see ``layers.py``).
 
 Everything the run writes stays under ``.perfbench/`` in the current
 directory: the per-run scratch (removed at the end), the DuckDB oracle
@@ -37,10 +36,6 @@ ROOT = os.path.dirname(HERE)
 WORKLOADS = ["warehouse_reads", "ingest_merge_stream"]
 END_TO_END = {"setup_s": "s", "wall_s": "s", "cold_wall_s": "s", "peak_rss_mb": "MB"}
 RUN_DEADLINE_S = 170.0
-# Cold passes are short and noisy, so an untraced run measures at least
-# this much of them: when the first process's cold pass is shorter, the
-# second process (which always gives the second setup_s sample) repeats it.
-MIN_COLD_S = 18.0
 DRIVER_MEM = "1g"
 
 
@@ -143,22 +138,13 @@ def main() -> int:
         res, t_spawn = _spawn(args, env, rundir, "worker", RUN_DEADLINE_S - 30, [])
         if res is None:
             return 1
-        setups, colds = [res["ready"] - t_spawn], [res["cold_wall_s"]]
+        setups = [res["ready"] - t_spawn]
         if not args.trace:
             left = RUN_DEADLINE_S - (time.monotonic() - t_begin)
-            cold = colds[0] < MIN_COLD_S
-            probe, t_probe = _spawn(
-                args, env, rundir, "probe", left, ["--cold-only" if cold else "--setup-only"]
-            )
+            probe, t_probe = _spawn(args, env, rundir, "probe", left, ["--setup-only"])
             if probe is None:
                 return 1
             setups.append(probe["ready"] - t_probe)
-            if cold:
-                colds.append(probe["cold_wall_s"])
-                res["ops"] += probe["ops"]
-                res["failures"] += probe["failures"]
-                res["attempted"] += probe["attempted"]
-                res["failed"] += probe["failed"]
     finally:
         shutil.rmtree(rundir, ignore_errors=True)
 
@@ -171,11 +157,11 @@ def main() -> int:
         values = {
             "setup_s": statistics.median(setups),
             "wall_s": statistics.median(res["warm_walls"]),
-            "cold_wall_s": statistics.median(colds),
+            "cold_wall_s": res["cold_wall_s"],
             "peak_rss_mb": res["peak_rss_mb"],
         }
         metrics = {k: {"value": v, "unit": END_TO_END[k]} for k, v in values.items()}
-    record = dict(res, setups=setups, colds=colds, args=vars(args))
+    record = dict(res, setups=setups, args=vars(args))
     out_dir = os.path.join(args.state, "out")
     os.makedirs(out_dir, exist_ok=True)
     name = f"{args.workload}-{args.scale}-seed{args.seed}-trace{args.trace}.json"

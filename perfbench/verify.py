@@ -6,7 +6,9 @@ correctness gate does, rows sorted) and compared with the digest of its
 ``__spark_entry__.oracle_sql()`` twin run in DuckDB on the unpermuted
 fixture. Oracle digests depend only on the SQL text and the fixture, so
 they are cached on disk. The MERGE end state and change feed are
-checked against a DuckDB replay of the batch files.
+checked against a DuckDB replay of the batch files, and the lakehouse
+pipeline's warehouse outputs against DuckDB over the raw CSV zone the
+pipeline wrote.
 """
 
 from __future__ import annotations
@@ -128,3 +130,30 @@ def merge_replay(scale: str, batch_paths: list[tuple[str, str]]) -> tuple[list, 
     ).fetchall()
     con.close()
     return end, changes
+
+
+def lakehouse_replay(raw_dir: str) -> dict[str, tuple[list, list]]:
+    """The pipeline's ``fact_sales`` and ``revenue_by_category``
+    computed by DuckDB from its raw CSV zone: {name: (columns, rows)}."""
+    con = duckdb.connect()
+    con.sql("SET threads TO 2")
+    for t in ("customers", "products", "orders", "order_items"):
+        con.sql(f"CREATE VIEW {t} AS FROM read_csv('{raw_dir}/{t}/*.csv', header = true)")
+    con.sql(
+        "CREATE VIEW fact AS SELECT i.order_item_id, i.order_id, o.customer_id, "
+        "i.product_id, p.category, o.order_date, o.status, i.quantity, i.line_total "
+        "FROM order_items i JOIN orders o USING (order_id) "
+        "JOIN products p USING (product_id)"
+    )
+    out = {}
+    for name, sql in {
+        "fact_sales": "SELECT * FROM fact",
+        "revenue_by_category": (
+            "SELECT category, round(sum(line_total::DECIMAL(14, 2)), 2)::DOUBLE AS revenue, "
+            "count(*) AS n_lines FROM fact WHERE status = 'completed' GROUP BY category"
+        ),
+    }.items():
+        res = con.sql(sql)
+        out[name] = (list(res.columns), res.fetchall())
+    con.close()
+    return out

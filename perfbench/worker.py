@@ -6,12 +6,15 @@ Closed loop, one client, one op at a time:
    ``catalog.load``; the launcher times this from the interpreter's
    start to the ready time this process reports;
 2. cold pass: every op of the workload once, on its own fixture copy;
-3. warm passes, each on a fresh copy: the workload's number of them,
-   and more until ``--seconds`` of timed work has accumulated. With
-   ``--trace 1`` there are exactly two warm passes: one untraced, then
-   one with the collector on.
+3. warm passes, each on a fresh copy, until ``--seconds`` of timed
+   work has accumulated (at least one); ops marked run-once are left
+   out. With ``--trace 1`` there are exactly two warm passes instead:
+   every op runs traced in one of them and untraced in the other
+   (even-indexed ops traced in the first, odd-indexed in the second),
+   so the trace overhead compares each op with itself at balanced
+   positions; run-once ops run traced in the cold pass.
 
-``--setup-only`` stops after step 1 and ``--cold-only`` after step 2.
+``--setup-only`` stops after step 1.
 """
 
 import argparse
@@ -25,8 +28,6 @@ sys.path[:0] = [HERE, os.path.dirname(HERE)]
 
 import collector  # noqa: E402
 
-MAX_WARM_PASSES = 4
-
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -39,7 +40,6 @@ def main() -> int:
     ap.add_argument("--cache", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--setup-only", action="store_true")
-    ap.add_argument("--cold-only", action="store_true")
     args = ap.parse_args()
 
     wrappers = collector.Wrappers() if args.trace else None
@@ -69,30 +69,24 @@ def main() -> int:
     jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
     runner = Runner(args, spark)
 
-    cold_wall, _ = runner.run_pass(1)
+    tracer = Tracer(spark, wrappers) if args.trace else None
+    cold_wall, cold = runner.run_pass(1, tracer)
     spark.catalog.clearCache()
     warm = []
-    if args.cold_only:
-        pass
-    elif args.trace:
-        w, untraced = runner.run_pass(2)
-        spark.catalog.clearCache()
-        tracer = Tracer(spark, wrappers)
-        traced_wall, traced = runner.run_pass(3, tracer)
-        acc = tracer.close()
+    if tracer:
+        passes = {1: cold}
+        for pass_no, parity in ((2, 0), (3, 1)):
+            _, passes[pass_no] = runner.run_pass(pass_no, tracer, parity)
+            spark.catalog.clearCache()
         out["layers"] = layers.per_layer(
-            acc, setup_acc, [r for r in runner.records if r["pass"] == 3], traced, untraced,
-            traced_wall, w, spark.sparkContext.defaultParallelism,
+            tracer.totals(), setup_acc, runner.records, passes,
+            spark.sparkContext.defaultParallelism,
         )
-        warm = [w]
     else:
-        while True:
+        while not warm or sum(warm) < args.seconds:
             w, _ = runner.run_pass(2 + len(warm))
             spark.catalog.clearCache()
             warm.append(w)
-            done = len(warm) >= runner.warm_passes and sum(warm) >= args.seconds
-            if done or len(warm) >= MAX_WARM_PASSES:
-                break
     out.update({
         "cold_wall_s": cold_wall,
         "warm_walls": warm,

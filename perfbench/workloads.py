@@ -31,6 +31,8 @@ class Op:
     module: str
     build: Callable[[Pass], Any]
     check: Callable[[Pass, Any], str | None]
+    # run in the cold pass only
+    once: bool = False
 
 
 def _module_of(fn) -> str:
@@ -119,27 +121,76 @@ def _check_log(p: Pass, report) -> str | None:
     return None
 
 
+# -- the lakehouse pipeline ----------------------------------------------------
+
+# customers, products, orders: the pipeline's cost is mostly its ~100
+# Spark jobs, not its rows, so a small generated dataset suffices
+LAKEHOUSE_SIZE = (100, 30, 300)
+
+
+def _lakehouse(p: Pass):
+    from beauty_lakehouse_spark import pipeline
+
+    res = pipeline.run_lakehouse_pipeline(
+        p.spark, os.path.join(p.work, "lakehouse"), *LAKEHOUSE_SIZE
+    )
+    m = res.manifest
+    p.state["lakehouse_raw"] = res.raw_dir
+    p.state["lakehouse_rows"] = sum(
+        m[k] for k in ("n_customers", "n_products", "n_orders", "n_order_items")
+    )
+    return {
+        "quality": res.quality,
+        "fact_sales": res.fact_sales,
+        "revenue_by_category": res.revenue_by_category,
+    }
+
+
+def _check_lakehouse(p: Pass, res) -> str | None:
+    cols, _, rows = res["quality"]
+    report = {r[cols.index("rule")]: r[cols.index("violations")] for r in rows}
+    if len(report) != 14 or any(report.values()):
+        return f"quality report is not 14 clean rules: {report}"
+    want = verify.lakehouse_replay(p.state["lakehouse_raw"])
+    for name, (wcols, wrows) in want.items():
+        cols, _, rows = res[name]
+        if verify.digest(cols, rows) != verify.digest(wcols, wrows):
+            return f"{name} ({len(rows)} rows) differs from DuckDB over the raw zone ({len(wrows)} rows)"
+    return None
+
+
 INGEST_STEPS = [
     Op("orders_merge", "tables", _orders_merge, _check_merge),
     Op("orders_changes", "tables", _orders_changes, _check_changes),
     Op("orders_delta_log", "delta_log", _orders_log, _check_log),
 ]
 
-MERGE_BATCHES = 4
+MERGE_BATCHES = 2
 
 WORKLOADS: dict[str, dict] = {
-    # scan / join / shuffle execution; no writes, drains or Python
+    # read-only registered queries, one from each operators module but
+    # multimodal (whose ops run Python workers)
     "warehouse_reads": {
-        # a pass is only ~4 s, so the warm phase averages two
-        "warm_passes": 2,
         "ops": [
-            "pricing_summary", "shipping_priority", "local_supplier_volume",
-            "purchase_time_since_view", "events_sessions",
+            "pricing_summary", "purchase_time_since_view", "events_sessions",
+            "late_ship_priority_orders", "order_revenue", "segment_priority_chisq",
+            "copurchase_edges", "order_docs_stats", "token_counts", "dedup_exact",
+            "train_val_test_split", "knn_brute",
         ],
     },
-    # the only writer: versioned MERGE table, JVM- and Python-state drains
+    # the writers (versioned MERGE table, pipeline zones), JVM- and
+    # Python-state drains and the Python-worker media op. An application
+    # builds its lakehouse once and then serves the recurring MERGE,
+    # drain and media work: the pipeline runs last in the cold pass only,
+    # so it counts in cold_wall_s but not in wall_s. (Run in every pass,
+    # it would add ~10 s per run, more than the benchmark's time budget
+    # allows.)
     "ingest_merge_stream": {
-        "ops": INGEST_STEPS + ["events_hourly_streamed", "kaplan_meier_streamed"],
+        "ops": INGEST_STEPS + [
+            "events_hourly_streamed", "kaplan_meier_streamed",
+            "media_audio_pairs_exactint",
+            Op("lakehouse_pipeline", "pipeline", _lakehouse, _check_lakehouse, once=True),
+        ],
         "merge_batches": MERGE_BATCHES,
     },
 }
