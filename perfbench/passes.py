@@ -5,6 +5,7 @@ timed region."""
 from __future__ import annotations
 
 import os
+import statistics
 import time
 import traceback
 from collections import defaultdict
@@ -113,6 +114,15 @@ class Runner:
                 self.failures.append(rec)
             self.records.append(rec)
         return wall, p
+
+    def warm_op_wall(self) -> float:
+        """The sum over ops of each op's low median time (build call to
+        collected result) over the warm passes."""
+        times: dict[str, list[float]] = defaultdict(list)
+        for rec in self.records:
+            if rec["pass"] > 1:
+                times[rec["op"]].append(rec["build_s"] + rec["exec_s"])
+        return sum(statistics.median_low(v) for v in times.values())
 
 
 class Tracer:

@@ -7,10 +7,10 @@ Run from the repository root. The run starts a fresh Spark driver
 process (``worker.py``) on ``local[<cores>]``, which sets up, runs a
 cold pass and then warm passes of the workload's ops, each pass on its
 own seed-permuted fixture copy, and checks every output against its
-DuckDB twin. A second process sets up once more, for a second
-``setup_s`` sample; the run reports the median. With ``--trace 0`` the
-last line of stdout holds the end-to-end metrics, with ``--trace 1``
-the per-layer ones (see ``layers.py``).
+DuckDB twin; ``wall_s`` sums each op's low median over the warm
+passes (see ``worker.py``). With ``--trace 0`` the last line of stdout
+holds the end-to-end metrics, with ``--trace 1`` the per-layer ones
+(see ``layers.py``).
 
 Everything the run writes stays under ``.perfbench/`` in the current
 directory: the per-run scratch (removed at the end), the DuckDB oracle
@@ -26,7 +26,6 @@ import json
 import os
 import shutil
 import signal
-import statistics
 import subprocess
 import sys
 import time
@@ -35,7 +34,8 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORKLOADS = ["warehouse_reads", "ingest_merge_stream"]
 END_TO_END = {"setup_s": "s", "wall_s": "s", "cold_wall_s": "s", "peak_rss_mb": "MB"}
-RUN_DEADLINE_S = 170.0
+# the worker's limit; stopping it takes up to 10 s more, within 180 s
+RUN_DEADLINE_S = 160.0
 DRIVER_MEM = "1g"
 
 
@@ -67,7 +67,7 @@ def _stop_group(pgid: int) -> None:
             time.sleep(0.05)
 
 
-def _spawn(args, env, rundir: str, tag: str, timeout: float, extra: list[str]) -> tuple[dict | None, float]:
+def _spawn(args, env, rundir: str, tag: str, timeout: float) -> tuple[dict | None, float]:
     """Run worker.py to completion; returns (its result, spawn time)."""
     out = os.path.join(rundir, f"{tag}.json")
     log = os.path.join(rundir, f"{tag}.log")
@@ -76,7 +76,7 @@ def _spawn(args, env, rundir: str, tag: str, timeout: float, extra: list[str]) -
         "--workload", args.workload, "--seed", str(args.seed),
         "--seconds", str(args.seconds), "--trace", str(args.trace),
         "--scale", args.scale, "--rundir", os.path.join(rundir, tag),
-        "--cache", os.path.join(args.state, "cache"), "--out", out, *extra,
+        "--cache", os.path.join(args.state, "cache"), "--out", out,
     ]
     with open(log, "w") as logf:
         t_spawn = time.monotonic()
@@ -116,7 +116,6 @@ def main() -> int:
         print("beauty_lakehouse_spark / __spark_entry__.py not found next to "
               "perfbench/: run from a full checkout of the repository", file=sys.stderr)
         return 2
-    t_begin = time.monotonic()
     args.state = os.path.join(os.getcwd(), ".perfbench")
     rundir = os.path.join(args.state, "runs", f"{args.workload}-{args.seed}-{os.getpid()}")
     shutil.rmtree(rundir, ignore_errors=True)
@@ -135,16 +134,9 @@ def main() -> int:
         "PYSPARK_PYTHON": sys.executable,
     })
     try:
-        res, t_spawn = _spawn(args, env, rundir, "worker", RUN_DEADLINE_S - 30, [])
+        res, t_spawn = _spawn(args, env, rundir, "worker", RUN_DEADLINE_S)
         if res is None:
             return 1
-        setups = [res["ready"] - t_spawn]
-        if not args.trace:
-            left = RUN_DEADLINE_S - (time.monotonic() - t_begin)
-            probe, t_probe = _spawn(args, env, rundir, "probe", left, ["--setup-only"])
-            if probe is None:
-                return 1
-            setups.append(probe["ready"] - t_probe)
     finally:
         shutil.rmtree(rundir, ignore_errors=True)
 
@@ -155,13 +147,13 @@ def main() -> int:
         metrics = {k: {"value": v, "unit": units[k]} for k, v in res["layers"].items()}
     else:
         values = {
-            "setup_s": statistics.median(setups),
-            "wall_s": statistics.median(res["warm_walls"]),
+            "setup_s": res["ready"] - t_spawn,
+            "wall_s": res["wall_s"],
             "cold_wall_s": res["cold_wall_s"],
             "peak_rss_mb": res["peak_rss_mb"],
         }
         metrics = {k: {"value": v, "unit": END_TO_END[k]} for k, v in values.items()}
-    record = dict(res, setups=setups, args=vars(args))
+    record = dict(res, setup_s=res["ready"] - t_spawn, args=vars(args))
     out_dir = os.path.join(args.state, "out")
     os.makedirs(out_dir, exist_ok=True)
     name = f"{args.workload}-{args.scale}-seed{args.seed}-trace{args.trace}.json"

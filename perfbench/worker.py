@@ -7,14 +7,15 @@ Closed loop, one client, one op at a time:
    start to the ready time this process reports;
 2. cold pass: every op of the workload once, on its own fixture copy;
 3. warm passes, each on a fresh copy, until ``--seconds`` of timed
-   work has accumulated (at least one); ops marked run-once are left
-   out. With ``--trace 1`` there are exactly two warm passes instead:
-   every op runs traced in one of them and untraced in the other
-   (even-indexed ops traced in the first, odd-indexed in the second),
-   so the trace overhead compares each op with itself at balanced
-   positions; run-once ops run traced in the cold pass.
-
-``--setup-only`` stops after step 1.
+   work has accumulated and at least ``MIN_WARM_PASSES`` have run; ops
+   marked run-once are left out. ``wall_s`` sums, over the ops, each
+   op's low median over the warm passes: with two passes, its faster
+   one, mostly the second, since the ops keep speeding up over the
+   first warm passes. With ``--trace 1`` there are exactly two warm
+   passes instead: every op runs traced in one of them and untraced in
+   the other (even-indexed ops traced in the first, odd-indexed in the
+   second), so the trace overhead compares each op with itself at
+   balanced positions; run-once ops run traced in the cold pass.
 """
 
 import argparse
@@ -28,6 +29,8 @@ sys.path[:0] = [HERE, os.path.dirname(HERE)]
 
 import collector  # noqa: E402
 
+MIN_WARM_PASSES = 2
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -39,7 +42,6 @@ def main() -> int:
     ap.add_argument("--rundir", required=True)
     ap.add_argument("--cache", required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--setup-only", action="store_true")
     args = ap.parse_args()
 
     wrappers = collector.Wrappers() if args.trace else None
@@ -54,8 +56,6 @@ def main() -> int:
     spark = get_spark("perfbench")
     catalog.load(spark, os.path.join(HERE, "fixtures", args.scale)).lineitem.count()
     out: dict = {"ready": time.monotonic()}
-    if args.setup_only:
-        return _write(args.out, out)
 
     # the benchmark's own modules load after set-up, outside setup_s
     import layers
@@ -83,10 +83,11 @@ def main() -> int:
             spark.sparkContext.defaultParallelism,
         )
     else:
-        while not warm or sum(warm) < args.seconds:
+        while len(warm) < MIN_WARM_PASSES or sum(warm) < args.seconds:
             w, _ = runner.run_pass(2 + len(warm))
             spark.catalog.clearCache()
             warm.append(w)
+        out["wall_s"] = runner.warm_op_wall()
     out.update({
         "cold_wall_s": cold_wall,
         "warm_walls": warm,
