@@ -29,6 +29,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import memo
+
 # Expected logical schemas for the driver fixture tables
 # (/root/repo/FIXTURES.md §B). Integer widths may be narrower on disk
 # (int32 vs int64) — compatibility, not identity, is asserted.
@@ -137,39 +139,30 @@ class Catalog:
             self.table(name).createOrReplaceTempView(name)
 
 
-#: Session-scoped TABLE-HANDLE cache — the metastore role (r14 §1/§6):
-#: resolving a path-based parquet read costs a driver round-trip plus a
-#: footer schema-inference job EVERY time (~0.12 s/table measured), and
-#: every operator rebuild re-paid it. The cache stores only the
-#: resolved, schema-checked DataFrame HANDLE (logical plan metadata) —
-#: never rows, never computed results: every execution still scans the
-#: parquet files. Keyed by (application, path, file size+mtime) so a
-#: rewritten fixture re-resolves; a production deployment gets the same
-#: effect from catalog tables instead of path reads.
-_TABLE_HANDLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _resolve_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The resolved, schema-checked table HANDLE, memoized per session
+    and per table fingerprint (`memo`) — the metastore role: resolving
+    a path-based parquet read costs a driver round-trip plus a footer
+    schema-inference job (~0.12 s/table measured), and every operator
+    rebuild re-paid it. Only the handle (logical plan metadata) is
+    kept, never rows: every execution still scans the parquet files.
+    A table rewritten in place, including one part file of a directory
+    table, re-resolves; a production deployment gets the same effect
+    from catalog tables instead of path reads."""
+    return memo.get_or_build(
+        "table", spark, os.path.join(sf_dir, f"{name}.parquet"), _read_table, name
+    )
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     import re
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        stamp = (st.st_size, st.st_mtime_ns)
-    except OSError:
-        stamp = None  # non-local FS: resolve fresh every time
-    key = (spark.sparkContext.applicationId, path, stamp)
-    if stamp is not None and key in _TABLE_HANDLE_CACHE:
-        return _TABLE_HANDLE_CACHE[key]
-    # batch reads glob their paths too — escape metacharacters in
-    # sf_dir so e.g. a bracketed fixture dir resolves the literal path
-    # instead of failing/matching wrong files
-    esc = re.sub(r"([\[\]{}*?\\])", r"\\\1", sf_dir)
-    df = spark.read.parquet(f"{esc}/{name}.parquet")
+    # batch reads glob their paths too — escape metacharacters so e.g.
+    # a bracketed fixture dir resolves the literal path instead of
+    # failing/matching wrong files
+    df = spark.read.parquet(re.sub(r"([\[\]{}*?\\])", r"\\\1", path))
     df = _normalize_nanos(df)
     _assert_schema(name, df)
-    if stamp is not None:
-        _TABLE_HANDLE_CACHE[key] = df
     return df
 
 

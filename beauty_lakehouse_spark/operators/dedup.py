@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..catalog import load
 from ..functions import normalized_text_hash, halfup_div, portable_hash64
 
@@ -802,31 +803,23 @@ def connected_components(
     return labels
 
 
-#: Session-scoped memo of the fixture corpus' cluster table, keyed by
-#: (Spark application id, sf_dir). The cluster assignment is a shared
-#: artifact (dedup_clusters reports it; cluster_safe_split buckets on
-#: it) — in a real lakehouse it would be a materialized table; here the
-#: localCheckpointed labels play that role so one session never runs
-#: the edge pipeline + CC loop twice for the same corpus. Keyed by
-#: applicationId so a new session (whose checkpoint blocks are gone)
-#: recomputes instead of reading a dead RDD.
-_COMPONENTS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def corpus_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(id, comp)`` connected-component labels for the sf_dir corpus,
-    computed once per session (see `_COMPONENTS_MEMO`)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    comp = _COMPONENTS_MEMO.get(key)
-    if comp is None:
-        t = load(spark, sf_dir)
-        nodes = t.documents.select(F.col("doc_id").alias("id"))
-        edges = neardup_edges(t.documents).select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        comp = connected_components(nodes, edges)
-        _COMPONENTS_MEMO[key] = comp
-    return comp
+    """``(id, comp)`` connected-component labels for the sf_dir corpus.
+    The cluster assignment is a shared artifact (dedup_clusters reports
+    it; cluster_safe_split buckets on it) — in a real lakehouse a
+    materialized table; here the localCheckpointed labels play that
+    role, memoized per session and fixture (`memo`), so one session
+    never runs the edge pipeline + CC loop twice for the same corpus."""
+    return memo.get_or_build("components", spark, sf_dir, _build_components)
+
+
+def _build_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = load(spark, sf_dir)
+    nodes = t.documents.select(F.col("doc_id").alias("id"))
+    edges = neardup_edges(t.documents).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
+    return connected_components(nodes, edges)
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1091,7 +1084,7 @@ def setsim_prefix_join(
       for corpora whose token arrays are too wide to cache.
 
     r9 (the syn100x stage profile put 88% of setsim_clusters' wall in
-    this function — `scripts/profile_setsim.py`):
+    this function):
 
     - **Integer token dictionary.** Tokens map once to dense BIGINT
       ids ordered by (df, token) — the SAME total order the prefix

@@ -23,6 +23,7 @@ Scale notes:
 from __future__ import annotations
 
 import functools
+import os
 
 from collections.abc import Iterator
 from typing import Callable
@@ -32,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .. import memo
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -2286,46 +2289,6 @@ def phash_pair_clusters(flagged_pairs: DataFrame) -> DataFrame:
 MEDIA_IDX_SPLIT = 250
 MEDIA_IDX_OVERLAP = 200
 
-#: (appId, sf_dir, fixture fingerprint) -> maintained index path.
-_MEDIA_INDEX_CACHE: dict = {}
-_MEDIA_INDEX_TMPDIRS: list = []
-
-
-def _cleanup_media_tmpdirs() -> None:
-    """Remove the maintained-index scratch dirs at interpreter exit
-    (same recipe as similarity._cleanup_lsh_tmpdirs — each (app,
-    fixture) key otherwise leaks a full versioned table on disk)."""
-    import shutil
-
-    for d in _MEDIA_INDEX_TMPDIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _MEDIA_INDEX_TMPDIRS.clear()
-
-
-import atexit as _atexit  # noqa: E402
-
-_atexit.register(_cleanup_media_tmpdirs)
-
-
-def _documents_fingerprint(sf_dir: str) -> str:
-    """(mtime_ns, size) walk of documents.parquet — same cheap
-    content fingerprint recipe as similarity._fixture_fingerprint."""
-    import os
-
-    root = os.path.join(sf_dir, "documents.parquet")
-    parts: list[str] = []
-    if os.path.isdir(root):
-        for dirpath, dirnames, filenames in os.walk(root):
-            dirnames.sort()
-            rel = os.path.relpath(dirpath, root)
-            for name in sorted(filenames):
-                st = os.stat(os.path.join(dirpath, name))
-                parts.append(f"{rel}/{name}:{st.st_mtime_ns}:{st.st_size}")
-    elif os.path.exists(root):
-        st = os.stat(root)
-        parts.append(f".:{st.st_mtime_ns}:{st.st_size}")
-    return ";".join(parts)
-
 
 def q_media_dedup_maintained(spark, sf_dir: str) -> DataFrame:
     """MAINTAINED media dedup — `lsh_index_maintained`'s IVM law
@@ -2348,37 +2311,26 @@ def q_media_dedup_maintained(spark, sf_dir: str) -> DataFrame:
     Scale: maintenance costs O(batch) hashes + a CoW rewrite
     (partition-pruned at production scale); rebuild costs O(corpus).
     The pair/cluster tail runs on the bounded distinct-hash domain
-    either way."""
-    import os
-    import tempfile
-
+    either way. The index is built once per session and fixture
+    (`memo`)."""
     from .. import tables
-    from ..catalog import load
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _documents_fingerprint(sf_dir),
-    )
-    path = _MEDIA_INDEX_CACHE.get(key)
-    if path is None:
-        docs = load(spark, sf_dir).documents.select("doc_id", "text")
-        tmpdir = tempfile.mkdtemp(prefix="bl_mediaidx_")
-        _MEDIA_INDEX_TMPDIRS.append(tmpdir)
-        path = os.path.join(tmpdir, "phash_index")
-        base = docs.filter(F.col("doc_id") < MEDIA_IDX_SPLIT)
-        tables.write_versioned(phash_exactint(base), path)
-        delta = docs.filter(F.col("doc_id") >= MEDIA_IDX_OVERLAP)
-        tables.merge_upsert(
-            spark, path, phash_exactint(delta), keys=["doc_id"]
-        )
-        _MEDIA_INDEX_CACHE[key] = path
+    path = memo.get_or_build("media_index", spark, sf_dir, _build_media_index)
     maintained = tables.read_versioned(spark, path)
     return phash_pair_clusters(exactint_hash_pairs(maintained))
 
 
-#: (appId, sf_dir, fixture fingerprint) -> run_media_pipeline out dir.
-_MEDIA_PIPELINE_CACHE: dict = {}
+def _build_media_index(spark, sf_dir: str) -> str:
+    from .. import tables
+    from ..catalog import load
+
+    docs = load(spark, sf_dir).documents.select("doc_id", "text")
+    path = os.path.join(memo.scratch("bl_mediaidx_"), "phash_index")
+    base = docs.filter(F.col("doc_id") < MEDIA_IDX_SPLIT)
+    tables.write_versioned(phash_exactint(base), path)
+    delta = docs.filter(F.col("doc_id") >= MEDIA_IDX_OVERLAP)
+    tables.merge_upsert(spark, path, phash_exactint(delta), keys=["doc_id"])
+    return path
 
 
 def q_run_media_pipeline(spark, sf_dir: str) -> DataFrame:
@@ -2386,8 +2338,9 @@ def q_run_media_pipeline(spark, sf_dir: str) -> DataFrame:
     #6): `pipeline.run_media_pipeline` — real mixed-container bytes
     (PPM/PNG/JPEG) -> signature-dispatch decode -> exact-int pHash ->
     maintained (CoW-merged) versioned index -> banded pairs -> CC
-    clusters -> published cluster table — run once per fixture into a
-    scratch dir, returning the PUBLISHED cluster report.
+    clusters -> published cluster table — run once per session and
+    fixture (`memo`) into a scratch dir, returning the PUBLISHED
+    cluster report.
 
     The DuckDB oracle rebuilds the clusters from scratch: the
     text-derived lossless hash chain for the PPM/PNG slices UNION the
@@ -2401,25 +2354,18 @@ def q_run_media_pipeline(spark, sf_dir: str) -> DataFrame:
     Scale: every stage is the audited operator (per-doc map-only
     codec work, distinct-hash-domain pairs, log-round CC); the
     publish is one versioned write per table."""
-    import tempfile
-
-    from ..pipeline import run_media_pipeline
     from .. import tables
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _documents_fingerprint(sf_dir),
-    )
-    out_dir = _MEDIA_PIPELINE_CACHE.get(key)
-    if out_dir is None:
-        out_dir = tempfile.mkdtemp(prefix="bl_mediapipe_")
-        _MEDIA_INDEX_TMPDIRS.append(out_dir)  # shared atexit cleanup
-        run_media_pipeline(spark, sf_dir, out_dir)
-        _MEDIA_PIPELINE_CACHE[key] = out_dir
-    import os
-
+    out_dir = memo.get_or_build("media_pipeline", spark, sf_dir, _build_media_pipeline)
     published = tables.read_versioned(
         spark, os.path.join(out_dir, "media_clusters")
     )
     return published.orderBy("cluster_id", "media_id")
+
+
+def _build_media_pipeline(spark, sf_dir: str) -> str:
+    from ..pipeline import run_media_pipeline
+
+    out_dir = memo.scratch("bl_mediapipe_")
+    run_media_pipeline(spark, sf_dir, out_dir)
+    return out_dir

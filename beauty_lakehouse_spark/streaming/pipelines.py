@@ -371,12 +371,14 @@ def run_available_now(
     sources, :func:`_plan_state_partitions`) sets
     ``spark.sql.shuffle.partitions`` — which streaming queries
     freeze as their state-store partition count at first start — for
-    the duration of the drain only; the previous session value is
-    restored afterwards. Partition count never changes WHAT a drain
+    the duration of the drain only (the previous session value is
+    restored afterwards), and caps the returned table's scan width.
+    Partition count never changes WHAT a drain
     computes (aggregation/join results are partitioning-independent),
     only how many state stores each micro-batch must load and commit."""
     spark = result.sparkSession
     derived = _plan_state_partitions(result)
+    width = derived if state_partitions is None else state_partitions
     if state_partitions is None:
         state_partitions = derived
         # The volume-derived hint models JVM state-store cost (load/
@@ -411,8 +413,8 @@ def run_available_now(
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
     out = spark.table(name)
-    # Right-size the drained table's scan width to the SAME volume-
-    # derived count as the state stores (r14 §2.6/§5): the memory sink
+    # Right-size the drained table's scan width to the explicit or
+    # volume-derived state-partition count (r14 §2.6/§5): the memory sink
     # holds the complete-mode snapshot as driver-local rows, and a
     # LocalTableScan fans out to defaultParallelism tasks that all
     # contend on the driver feeding them serialized slices — measured
@@ -422,8 +424,8 @@ def run_available_now(
     # a big drain (thousands of derived partitions) this is a
     # structural no-op; the finishers' shuffles still run at the
     # session's parallelism.
-    if derived is not None:
-        out = out.coalesce(derived)
+    if width is not None:
+        out = out.coalesce(width)
     return out
 
 

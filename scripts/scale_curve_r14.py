@@ -71,9 +71,7 @@ def build_syn_embeddings(spark, base_dir: str, out_dir: str, copies: int):
 
 def main() -> None:
     import __spark_entry__ as entrymod
-    from beauty_lakehouse_spark import tables as _tables
-    from beauty_lakehouse_spark.operators import dedup as _dedup
-    from beauty_lakehouse_spark.operators import similarity as _sim
+    from beauty_lakehouse_spark import memo
     from beauty_lakehouse_spark.session import get_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -85,11 +83,7 @@ def main() -> None:
     qs = entrymod.queries()
 
     def clear():
-        _dedup._COMPONENTS_MEMO.clear()
-        _tables._MERGE_SCENARIO_CACHE.clear()
-        _sim._LSH_INDEX_CACHE.clear()
-        _sim._ANN_SERVE_MEMO.clear()
-        spark.catalog.clearCache()
+        memo.clear(spark, keep=("table",))
 
     results = {}
     for name in ENTRIES:

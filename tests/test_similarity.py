@@ -1106,19 +1106,18 @@ def test_fixture_fingerprint_sees_nested_files(tmp_path):
     walk has to recurse, not stat only immediate entries."""
     import os
 
-    from beauty_lakehouse_spark.operators.similarity import (
-        _fixture_fingerprint,
-    )
+    from beauty_lakehouse_spark.memo import fingerprint
 
     root = tmp_path / "embeddings.parquet" / "part=0"
     root.mkdir(parents=True)
     f = root / "chunk.parquet"
     f.write_bytes(b"v1-bytes")
-    fp1 = _fixture_fingerprint(str(tmp_path))
-    assert "chunk.parquet" in fp1  # nested file IS fingerprinted
+    fp1 = fingerprint(str(tmp_path))
+    # nested file IS fingerprinted
+    assert "embeddings.parquet/part=0/chunk.parquet" in [rel for rel, _, _ in fp1]
     # same path, same size, new mtime (in-place regeneration)
     os.utime(f, ns=(123456789, 987654321))
-    fp2 = _fixture_fingerprint(str(tmp_path))
+    fp2 = fingerprint(str(tmp_path))
     assert fp1 != fp2
 
 

@@ -31,6 +31,17 @@ def test_streaming_sessions_equal_batch(spark, sf_dir):
     assert _canon(got) == _canon(expected)
 
 
+def test_explicit_state_partitions_sets_drained_scan_width(spark, sf_dir):
+    """An explicit ``state_partitions`` wins over the volume-derived
+    count for the returned table's scan width too."""
+    stream = stream_events(spark, sf_dir)
+    got = run_available_now(
+        hourly_event_counts(stream), "t_hourly_width1", state_partitions=1
+    )
+    assert got.rdd.getNumPartitions() == 1
+    assert _canon(got) == _canon(batch_events.q_events_hourly(spark, sf_dir))
+
+
 def test_stream_source_is_streaming(spark, sf_dir):
     assert stream_events(spark, sf_dir).isStreaming
 
