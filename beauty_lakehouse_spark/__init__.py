@@ -20,8 +20,8 @@ surveyed in /root/repo/SURVEY.md), re-expressed Spark-first:
                    sessionization) with batch-equivalence semantics.
 - ``datagen``    — Spark-native seeded synthetic star-schema generator
                    (reference: src/generate_data.py).
-- ``operators.quality`` — validation rules as must-be-empty DataFrames
-                   (reference: scripts/validate_dataset.py).
+- ``operators.quality`` — validation rules as declarative specs and one
+                   report compiler (reference: scripts/validate_dataset.py).
 
 Everything is a pure function ``(SparkSession, tables) -> DataFrame``;
 no driver-side collects in any engine path.

@@ -32,8 +32,8 @@ consumes numpy's global RNG stream, which is inherently sequential):
 - G9 invariants: category = MAP[product_type], cost in [0.4,0.7]*price,
                  line_total = round(q*unit_price_after, 2),
                  total_amount = round(sum(line_total), 2)
-                 — all hold by construction; ``beauty_rules`` re-checks
-                 them as must-be-empty DataFrames.
+                 — all hold by construction; ``beauty_report`` re-checks
+                 them with the other validator rules (``BEAUTY_RULES``).
 """
 
 from __future__ import annotations
@@ -43,6 +43,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .operators.quality import PREDICATE, RI, UNIQUE, rule_report
 
 SEED = 42
 START_DATE = "2023-01-01"  # reference uses today-3y..today; pinned for determinism
@@ -403,232 +405,64 @@ def generate(
 # Beauty-schema quality rules (the ported validator on generated data)
 # --------------------------------------------------------------------------
 
+#: product_type -> category as a Spark SQL map literal.
+_CATEGORY_OF = "map({})".format(
+    ", ".join(f"'{t}', '{c}'" for t, c in PRODUCT_TYPE_TO_CATEGORY.items())
+)
 
-def beauty_rules(ds: BeautyDataset):
-    """The reference validator's rule set (scripts/validate_dataset.py)
-    on the generated star schema — every rule a must-be-empty DataFrame."""
-    from .operators.quality import Rule
-    from .operators.relational import duplicate_keys, orphans
-
-    mapping_df = None
-    spark = ds.products.sparkSession
-    mapping_df = spark.createDataFrame(
-        list(PRODUCT_TYPE_TO_CATEGORY.items()), ["mt", "mc"]
-    )
-    rules = [
-        Rule("customers.customer_id.unique", duplicate_keys(ds.customers, "customer_id")),
-        Rule("products.product_id.unique", duplicate_keys(ds.products, "product_id")),
-        Rule("orders.order_id.unique", duplicate_keys(ds.orders, "order_id")),
-        Rule(
-            "order_items.order_item_id.unique",
-            duplicate_keys(ds.order_items, "order_item_id"),
-        ),
-        Rule(
-            "orders.customer_exists",
-            orphans(ds.orders, ds.customers, "customer_id", "customer_id"),
-        ),
-        Rule(
-            "order_items.order_exists",
-            orphans(ds.order_items, ds.orders, "order_id", "order_id"),
-        ),
-        Rule(
-            "order_items.product_exists",
-            orphans(ds.order_items, ds.products, "product_id", "product_id"),
-        ),
-        # G9 invariants
-        Rule(
-            "products.category_mapping",
-            ds.products.join(
-                F.broadcast(mapping_df), ds.products.product_type == F.col("mt"), "left"
-            ).filter((F.col("mc").isNull()) | (F.col("category") != F.col("mc"))),
-        ),
-        Rule(
-            "products.cost_within_price_band",
-            ds.products.filter(
-                (F.col("cost") < F.round(F.col("price") * 0.40, 2) - 0.01)
-                | (F.col("cost") > F.round(F.col("price") * 0.70, 2) + 0.01)
-            ),
-        ),
-        Rule(
-            "customers.age_bounds",
-            ds.customers.filter((F.col("age") < 18) | (F.col("age") > 90)),
-        ),
-        Rule(
-            "order_items.line_total_arith",
-            ds.order_items.filter(
-                F.abs(
-                    F.col("line_total")
-                    - F.round(
-                        F.col("quantity") * F.col("unit_price").cast("decimal(12,2)"), 2
-                    ).cast("double")
-                )
-                > 1e-9
-            ),
-        ),
-        Rule(
-            "orders.total_amount_consistent",
-            ds.orders.join(
-                ds.order_items.groupBy("order_id").agg(
-                    F.round(F.sum(F.col("line_total").cast("decimal(12,2)")), 2)
-                    .cast("double")
-                    .alias("calc")
-                ),
-                "order_id",
-            ).filter(F.abs(F.col("total_amount") - F.col("calc")) > 1e-9),
-        ),
-        Rule(
-            "orders.date_after_signup",
-            ds.orders.join(
-                ds.customers.select("customer_id", "signup_date"), "customer_id"
-            ).filter(F.col("order_date") < F.col("signup_date")),
-        ),
-        Rule(
-            "order_items.items_per_order_bounds",
-            ds.order_items.groupBy("order_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter((F.col("n") < 1) | (F.col("n") > 6)),
-        ),
-    ]
-    return rules
+#: The reference validator's 14 rules (scripts/validate_dataset.py) on
+#: the generated star schema, as ``operators.quality.rule_report``
+#: specs. ``order_sizes`` is the per-order item count and item total;
+#: ``orders⋈customers`` and ``orders⋈order_sizes`` are inner joins, so
+#: their rules count (order, parent) pairs.
+BEAUTY_RULES = (
+    ("customers.customer_id.unique", "customers", UNIQUE, "customer_id"),
+    ("products.product_id.unique", "products", UNIQUE, "product_id"),
+    ("orders.order_id.unique", "orders", UNIQUE, "order_id"),
+    ("order_items.order_item_id.unique", "order_items", UNIQUE, "order_item_id"),
+    ("orders.customer_exists", "orders", RI, ("customer_id", "customers", "customer_id")),
+    ("order_items.order_exists", "order_items", RI, ("order_id", "orders", "order_id")),
+    ("order_items.product_exists", "order_items", RI, ("product_id", "products", "product_id")),
+    # G9 invariants
+    ("products.category_mapping", "products", PREDICATE,
+     f"{_CATEGORY_OF}[product_type] IS NULL OR category != {_CATEGORY_OF}[product_type]"),
+    ("products.cost_within_price_band", "products", PREDICATE,
+     "cost < round(price * 0.40, 2) - 0.01 OR cost > round(price * 0.70, 2) + 0.01"),
+    ("customers.age_bounds", "customers", PREDICATE, "age < 18 OR age > 90"),
+    ("order_items.line_total_arith", "order_items", PREDICATE,
+     "abs(line_total - CAST(round(quantity * CAST(unit_price AS DECIMAL(12,2)), 2)"
+     " AS DOUBLE)) > 1e-9"),
+    ("orders.total_amount_consistent", "orders⋈order_sizes", PREDICATE,
+     "abs(total_amount - items_total) > 1e-9"),
+    ("orders.date_after_signup", "orders⋈customers", PREDICATE,
+     "order_date < signup_date"),
+    ("order_items.items_per_order_bounds", "order_sizes", PREDICATE,
+     "n_items < 1 OR n_items > 6"),
+)
 
 
 def beauty_report(ds: BeautyDataset) -> DataFrame:
-    """Shared-scan form of ``report_from_rules(beauty_rules(ds))`` — the
-    same 14 ``(rule, violations)`` rows, but each table is scanned once
-    with all its scalar rules folded into a single aggregate (see
-    operators.quality.validate for the same restructuring on the fixture
-    schema). The composable :func:`beauty_rules` stays as the
-    one-rule-one-DataFrame API; this is the report fast path."""
-    from .operators.quality import _unpivot_counts
-
-    cu, pr, od, it = ds.customers, ds.products, ds.orders, ds.order_items
-    mapping = F.create_map(
-        *[F.lit(x) for kv in PRODUCT_TYPE_TO_CATEGORY.items() for x in kv]
-    )
-
-    cu_counts = cu.agg(
-        F.sum(F.when((F.col("age") < 18) | (F.col("age") > 90), 1).otherwise(0))
-        .cast("long").alias("customers.age_bounds"),
-    )
-    pr_counts = pr.agg(
-        F.sum(
-            F.when(
-                mapping[F.col("product_type")].isNull()
-                | (F.col("category") != mapping[F.col("product_type")]),
-                1,
-            ).otherwise(0)
-        ).cast("long").alias("products.category_mapping"),
-        F.sum(
-            F.when(
-                (F.col("cost") < F.round(F.col("price") * 0.40, 2) - 0.01)
-                | (F.col("cost") > F.round(F.col("price") * 0.70, 2) + 0.01),
-                1,
-            ).otherwise(0)
-        ).cast("long").alias("products.cost_within_price_band"),
-    )
-    od_counts = od.join(
-        cu.select(F.col("customer_id").alias("_ck"), "signup_date"),
-        od["customer_id"] == F.col("_ck"),
-        "left",
-    ).agg(
-        F.sum(F.when(F.col("_ck").isNull(), 1).otherwise(0))
-        .cast("long").alias("orders.customer_exists"),
-        F.sum(F.when(F.col("order_date") < F.col("signup_date"), 1).otherwise(0))
-        .cast("long").alias("orders.date_after_signup"),
-    )
-    it_counts = (
-        it.join(
-            od.select(F.col("order_id").alias("_ok")),
-            it["order_id"] == F.col("_ok"),
-            "left",
-        )
-        .join(
-            pr.select(F.col("product_id").alias("_pk")),
-            it["product_id"] == F.col("_pk"),
-            "left",
-        )
-        .agg(
-            F.sum(F.when(F.col("_ok").isNull(), 1).otherwise(0))
-            .cast("long").alias("order_items.order_exists"),
-            F.sum(F.when(F.col("_pk").isNull(), 1).otherwise(0))
-            .cast("long").alias("order_items.product_exists"),
-            F.sum(
-                F.when(
-                    F.abs(
-                        F.col("line_total")
-                        - F.round(
-                            F.col("quantity")
-                            * F.col("unit_price").cast("decimal(12,2)"),
-                            2,
-                        ).cast("double")
-                    )
-                    > 1e-9,
-                    1,
-                ).otherwise(0)
-            ).cast("long").alias("order_items.line_total_arith"),
-        )
-    )
-    # per-order groupBy feeds BOTH the items-per-order bound and the
-    # total_amount consistency check — one shuffle instead of two
-    per_order = it.groupBy("order_id").agg(
-        F.count(F.lit(1)).alias("_n"),
+    """The 14-rule ``(rule, violations)`` report: :data:`BEAUTY_RULES`
+    compiled by ``operators.quality.rule_report`` over the four tables
+    plus the per-order aggregate and the two pair joins it reads."""
+    sizes = ds.order_items.groupBy("order_id").agg(
+        F.count(F.lit(1)).alias("n_items"),
         F.round(F.sum(F.col("line_total").cast("decimal(12,2)")), 2)
         .cast("double")
-        .alias("_calc"),
+        .alias("items_total"),
     )
-    per_order_counts = per_order.join(
-        od.select("order_id", "total_amount"), "order_id", "left"
-    ).agg(
-        F.sum(F.when((F.col("_n") < 1) | (F.col("_n") > 6), 1).otherwise(0))
-        .cast("long").alias("order_items.items_per_order_bounds"),
-        F.sum(
-            F.when(F.abs(F.col("total_amount") - F.col("_calc")) > 1e-9, 1)
-            .otherwise(0)
-        ).cast("long").alias("orders.total_amount_consistent"),
-    )
-
-    report = _unpivot_counts(cu_counts, ["customers.age_bounds"])
-    report = report.unionByName(
-        _unpivot_counts(
-            pr_counts,
-            ["products.category_mapping", "products.cost_within_price_band"],
-        )
-    )
-    report = report.unionByName(
-        _unpivot_counts(
-            od_counts, ["orders.customer_exists", "orders.date_after_signup"]
-        )
-    )
-    report = report.unionByName(
-        _unpivot_counts(
-            it_counts,
-            [
-                "order_items.order_exists",
-                "order_items.product_exists",
-                "order_items.line_total_arith",
-            ],
-        )
-    )
-    report = report.unionByName(
-        _unpivot_counts(
-            per_order_counts,
-            ["order_items.items_per_order_bounds", "orders.total_amount_consistent"],
-        )
-    )
-    for tbl, df, key in [
-        ("customers", cu, "customer_id"),
-        ("products", pr, "product_id"),
-        ("orders", od, "order_id"),
-        ("order_items", it, "order_item_id"),
-    ]:
-        dup = (
-            df.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .filter(F.col("_c") > 1)
-            .agg(F.count(F.lit(1)).cast("long").alias(f"{tbl}.{key}.unique"))
-        )
-        report = report.unionByName(_unpivot_counts(dup, [f"{tbl}.{key}.unique"]))
-    return report
+    frames = {
+        "customers": ds.customers,
+        "products": ds.products,
+        "orders": ds.orders,
+        "order_items": ds.order_items,
+        "order_sizes": sizes,
+        "orders⋈customers": ds.orders.join(
+            ds.customers.select("customer_id", "signup_date"), "customer_id"
+        ),
+        "orders⋈order_sizes": ds.orders.join(sizes, "order_id"),
+    }
+    return rule_report(frames, BEAUTY_RULES)
 
 
 def q_beauty_datagen_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -641,7 +475,7 @@ def q_beauty_datagen_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``materialize=True`` truncates the explode+join+window lineage), the
     four tables are checkpointed so the 14 rules read cached blocks
     instead of re-deriving the generators, and :func:`beauty_report`
-    folds the rules into per-table single-pass aggregates."""
+    compiles the rules into one pass per table under one aggregate."""
     ds = generate(
         spark, n_customers=300, n_products=120, n_orders=1500, materialize=True
     )

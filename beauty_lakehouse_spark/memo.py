@@ -13,8 +13,9 @@ key recipe: ``(kind, session, path, fingerprint(path), *extra)``.
 - ``fingerprint`` stamps every file under ``path``, so rewriting an
   input in place (a single file or one part file of a directory
   table) changes the key and the artifact is rebuilt.
-- Directories written for an artifact come from ``scratch`` and are
-  removed by one ``atexit`` hook.
+- Directories written for an artifact come from ``scratch``. Each
+  belongs to the artifact whose build made it: ``clear`` removes it
+  with the artifact, and one ``atexit`` hook removes the rest.
 
 ``clear(spark, keep=...)`` drops every memoized kind not in ``keep``;
 benchmarks and determinism checks call it before each run so the run
@@ -32,8 +33,11 @@ from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
-_ENTRIES: dict[tuple, Any] = {}
+# key -> (artifact, the scratch dirs its build made)
+_ENTRIES: dict[tuple, tuple[Any, list[str]]] = {}
 _SCRATCH: list[str] = []
+# the scratch dirs of each build in progress, innermost last
+_BUILDING: list[list[str]] = []
 
 
 def fingerprint(path: str) -> tuple | None:
@@ -73,15 +77,23 @@ def get_or_build(
         return build(spark, path, *extra)
     key = (kind, spark, path, fp, *extra)
     if key not in _ENTRIES:
-        _ENTRIES[key] = build(spark, path, *extra)
-    return _ENTRIES[key]
+        _BUILDING.append([])
+        try:
+            artifact = build(spark, path, *extra)
+        finally:
+            dirs = _BUILDING.pop()
+        _ENTRIES[key] = (artifact, dirs)
+    return _ENTRIES[key][0]
 
 
 def scratch(prefix: str) -> str:
-    """A fresh temp dir for an artifact's files, removed at interpreter
-    exit (artifacts are per-process, not durable tables)."""
+    """A fresh temp dir for an artifact's files, removed when ``clear``
+    drops the artifact being built, or at interpreter exit (artifacts
+    are per-process, not durable tables)."""
     d = tempfile.mkdtemp(prefix=prefix)
     _SCRATCH.append(d)
+    if _BUILDING:
+        _BUILDING[-1].append(d)
     return d
 
 
@@ -93,8 +105,17 @@ def _remove_scratch() -> None:
 
 
 def clear(spark: SparkSession, keep: tuple[str, ...] = ()) -> None:
-    """Drop every memoized artifact whose kind is not in ``keep``, then
-    the session's cached relations, so the next call rebuilds."""
+    """Drop every memoized artifact whose kind is not in ``keep``, and
+    delete the scratch dirs its build made, then the session's cached
+    relations, so the next call rebuilds.
+
+    This invalidates every handle to a dropped artifact: a DataFrame
+    built on one may read a deleted dir, so evaluate it before
+    ``clear``, never after."""
     for key in [k for k in _ENTRIES if k[0] not in keep]:
-        del _ENTRIES[key]
+        _, dirs = _ENTRIES.pop(key)
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+            if d in _SCRATCH:
+                _SCRATCH.remove(d)
     spark.catalog.clearCache()

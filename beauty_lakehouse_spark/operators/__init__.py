@@ -26,8 +26,9 @@ Each module maps a slice of the reference's operator inventory
                     LSH, IVF).
 - ``multimodal``  — binary-column plumbing for image/audio payloads
                     (decode/feature/resize/frame-sample kernels).
-- ``quality``     — the reference validator as must-be-empty DataFrames
-                    (scripts/validate_dataset.py) + sketch profiling.
+- ``quality``     — the reference validator (scripts/validate_dataset.py)
+                    as declarative rule specs and one report compiler
+                    + sketch profiling.
 
 All query entry points share the driver signature
 ``(SparkSession, sf_dir: str) -> DataFrame`` and alias every computed

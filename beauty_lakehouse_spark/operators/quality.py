@@ -1,155 +1,120 @@
-"""Data-quality rules as must-be-empty DataFrames.
+"""Data-quality reports: one declarative rule spec per schema, one compiler.
 
 The reference's validator (scripts/validate_dataset.py) is a
-single-process pandas script printing ✔/❌. The engine form: every rule
-is a DataFrame of violations; a dataset is valid iff every rule
-DataFrame is empty. Rules run distributed, compose, and can be unioned
-into one report (ref L5 reporting intent).
+single-process pandas script printing ✔/❌. The engine form: a
+schema's rules are data, ``(name, table, kind, expr)`` tuples, and
+:func:`rule_report` compiles a whole spec into one Spark plan that
+returns one ``(rule, violations)`` row per rule; a dataset is valid iff
+every count is 0 (ref L5 reporting intent).
 
-Rule inventory mirrors the validator 1:1 (SURVEY.md §5.1) on both the
-beauty star schema (datagen) and the fixture tables where applicable.
+Two specs mirror the validator 1:1 (SURVEY.md §5.1): :data:`TPCH_RULES`
+on the fixture tables (:func:`validate`) and ``datagen.BEAUTY_RULES``
+on the generated beauty star schema (``datagen.beauty_report``).
 """
 
 from __future__ import annotations
 
 import functools
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .relational import duplicate_keys, orphans
+#: Rule kinds, and what ``expr`` holds for each: a Spark SQL condition
+#: that is true on a violating row; ``None`` (a row with any null
+#: column violates); ``(fk, parent, pk)``, the child's foreign key and
+#: the parent table's key; the key column.
+PREDICATE, NOT_NULL, RI, UNIQUE = "predicate", "not_null", "ri", "unique"
+
+#: The fixture tables :func:`validate` reports on.
+TPCH_TABLES = (
+    "lineitem", "orders", "customer", "part", "supplier", "nation", "region",
+)
+
+#: The fixture schema's 20 rules (ref :113-203). ``lineitem⋈orders`` is
+#: the inner join :func:`validate` adds, so ship-after-order counts
+#: (lineitem, order) pairs like the reference SQL.
+TPCH_RULES = (
+    ("lineitem.order_exists", "lineitem", RI, ("l_orderkey", "orders", "o_orderkey")),
+    ("lineitem.part_exists", "lineitem", RI, ("l_partkey", "part", "p_partkey")),
+    ("lineitem.supplier_exists", "lineitem", RI, ("l_suppkey", "supplier", "s_suppkey")),
+    ("orders.customer_exists", "orders", RI, ("o_custkey", "customer", "c_custkey")),
+    ("customer.nation_exists", "customer", RI, ("c_nationkey", "nation", "n_nationkey")),
+    ("nation.region_exists", "nation", RI, ("n_regionkey", "region", "r_regionkey")),
+    ("orders.o_orderkey.unique", "orders", UNIQUE, "o_orderkey"),
+    ("customer.c_custkey.unique", "customer", UNIQUE, "c_custkey"),
+    ("part.p_partkey.unique", "part", UNIQUE, "p_partkey"),
+    ("supplier.s_suppkey.unique", "supplier", UNIQUE, "s_suppkey"),
+    *((f"{t}.no_nulls", t, NOT_NULL, None) for t in TPCH_TABLES),
+    ("lineitem.price_nonneg", "lineitem", PREDICATE, "l_extendedprice < 0"),
+    ("lineitem.discount_range", "lineitem", PREDICATE, "l_discount < 0 OR l_discount > 1"),
+    ("lineitem.ship_after_order", "lineitem⋈orders", PREDICATE, "l_shipdate < o_orderdate"),
+)
 
 
-@dataclass(frozen=True)
-class Rule:
-    name: str
-    df: DataFrame
+def rule_report(frames: dict[str, DataFrame], rules) -> DataFrame:
+    """Compile a rule spec over named frames into one plan with one
+    ``(rule, violations)`` row per rule, in spec order.
 
-    def violations(self) -> int:
-        return self.df.limit(1_000_000).count()
+    - Each frame gets ONE pass: its predicate, not-null and RI rules
+      are flag columns of that pass.
+    - An RI rule left-joins the child to the parent's per-key count
+      (``groupBy(pk).count()``), never to the raw parent, so a
+      duplicated parent key cannot multiply the child's rows.
+    - A unique rule flags the keys of that same per-key count with
+      more than one row: a parent's RI and uniqueness rules share one
+      shuffle.
+    - A rule that reads parent columns is a predicate on an inner-join
+      frame the spec supplies, so it counts (child, parent) pairs like
+      the reference SQL.
+    - All passes are unioned under ONE ``count_if`` aggregate, whose
+      single row :func:`_unpivot_counts` turns into the report.
+    """
+    by_key: dict[tuple[str, str], DataFrame] = {}
 
-
-def schema_rule(name: str, df: DataFrame, expected_cols: list[str]) -> list[str]:
-    """Ref validate_dataset.py:89-97 — metadata check, returns the column
-    diff (not a DataFrame rule; schemas are driver-side facts)."""
-    actual = set(df.columns)
-    expected = set(expected_cols)
-    return sorted(expected - actual) + sorted(f"+{c}" for c in actual - expected)
-
-
-def ri_rules(tables: dict[str, DataFrame]) -> list[Rule]:
-    """Referential integrity (ref :113-135): child FK ⊆ parent PK."""
-    out = []
-    for rule_name, (child, fk, parent, pk) in {
-        "lineitem.order_exists": ("lineitem", "l_orderkey", "orders", "o_orderkey"),
-        "lineitem.part_exists": ("lineitem", "l_partkey", "part", "p_partkey"),
-        "lineitem.supplier_exists": ("lineitem", "l_suppkey", "supplier", "s_suppkey"),
-        "orders.customer_exists": ("orders", "o_custkey", "customer", "c_custkey"),
-        "customer.nation_exists": ("customer", "c_nationkey", "nation", "n_nationkey"),
-        "nation.region_exists": ("nation", "n_regionkey", "region", "r_regionkey"),
-    }.items():
-        if child in tables and parent in tables:
-            out.append(
-                Rule(rule_name, orphans(tables[child], tables[parent], fk, pk))
+    def key_counts(table: str, key: str) -> DataFrame:
+        if (table, key) not in by_key:
+            by_key[table, key] = frames[table].groupBy(F.col(key).alias("_key")).agg(
+                F.count(F.lit(1)).alias("_rows")
             )
-    return out
+        return by_key[table, key]
 
-
-def uniqueness_rules(tables: dict[str, DataFrame]) -> list[Rule]:
-    """Key uniqueness (ref :178-189)."""
-    keys = {
-        "orders": "o_orderkey",
-        "customer": "c_custkey",
-        "part": "p_partkey",
-        "supplier": "s_suppkey",
-        "events": "event_id",
-        "documents": "doc_id",
-        "embeddings": "vec_id",
-    }
-    return [
-        Rule(f"{t}.{k}.unique", duplicate_keys(tables[t], k))
-        for t, k in keys.items()
-        if t in tables
-    ]
-
-
-def null_rules(tables: dict[str, DataFrame]) -> list[Rule]:
-    """Null-freeness (ref :191-203): any null in any column is a
-    violation row."""
-    out = []
-    for name, df in tables.items():
-        cond = None
-        for c in df.columns:
-            n = F.col(c).isNull()
-            cond = n if cond is None else (cond | n)
-        out.append(Rule(f"{name}.no_nulls", df.filter(cond)))
-    return out
-
-
-def business_rules(tables: dict[str, DataFrame]) -> list[Rule]:
-    """Business rules in the fixture dialect (ref :138-176):
-    price ≥ 0, discount ∈ [0,1], ship-after-order, charge arithmetic."""
-    out = []
-    if "lineitem" in tables:
-        li = tables["lineitem"]
-        out.append(Rule("lineitem.price_nonneg", li.filter(F.col("l_extendedprice") < 0)))
-        out.append(
-            Rule(
-                "lineitem.discount_range",
-                li.filter((F.col("l_discount") < 0) | (F.col("l_discount") > 1)),
+    # frame name, or (table, key) for a per-key count -> (frame, flags)
+    passes: dict = {}
+    for name, table, kind, expr in rules:
+        src = (table, expr) if kind == UNIQUE else table
+        if src not in passes:
+            passes[src] = (key_counts(*src) if kind == UNIQUE else frames[table], [])
+        df, flags = passes[src]
+        if kind == PREDICATE:
+            flag = F.expr(expr)
+        elif kind == NOT_NULL:
+            flag = F.expr(" OR ".join(f"`{c}` IS NULL" for c in frames[table].columns))
+        elif kind == RI:
+            fk, parent, pk = expr
+            hit = f"_hit{len(flags)}"
+            # the key is read through its count (always >= 1), so the
+            # join's inferred not-null filter stays above the aggregate
+            # and cannot fork the shuffle the unique rule reads
+            df = df.join(
+                key_counts(parent, pk).select(
+                    F.when(F.col("_rows") > 0, F.col("_key")).alias(hit)
+                ),
+                F.col(fk) == F.col(hit),
+                "left",
             )
-        )
-    if "lineitem" in tables and "orders" in tables:
-        j = tables["lineitem"].join(
-            tables["orders"],
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        out.append(
-            Rule(
-                "lineitem.ship_after_order",
-                j.filter(F.col("l_shipdate") < F.col("o_orderdate")),
-            )
-        )
-    return out
+            flag = F.col(hit).isNull()
+        else:
+            flag = F.col("_rows") > 1
+        passes[src] = (df, flags + [flag.alias(name)])
 
-
-def all_rules(tables: dict[str, DataFrame]) -> list[Rule]:
-    return (
-        ri_rules(tables)
-        + uniqueness_rules(tables)
-        + null_rules(tables)
-        + business_rules(tables)
+    flagged = functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [df.select(flags) for df, flags in passes.values()],
     )
-
-
-def report_from_rules(rules: list[Rule]) -> DataFrame:
-    """One report row per rule: ``(rule, violations)``.
-
-    All rules are unioned into a single plan (one count per rule as a
-    1-row aggregate, union-all'd), so the whole report is ONE Spark
-    action instead of one job per rule — ~20x less scheduling latency,
-    and shared scans are reused within the job."""
-    if not rules:
-        raise ValueError(
-            "report_from_rules: empty rule list — pass at least one Rule "
-            "(validate() on an empty table dict produces no rules)"
-        )
-    report = None
-    for r in rules:
-        one = r.df.select(
-            F.lit(r.name).alias("rule"), F.lit(1).alias("one")
-        ).groupBy("rule").agg(F.count(F.lit(1)).alias("violations"))
-        # groupBy on an empty violations df yields zero rows; re-attach
-        # the rule name with a count of 0 via a union with the seed row.
-        seed = r.df.sparkSession.range(1).select(
-            F.lit(r.name).alias("rule"), F.lit(0).cast("long").alias("violations")
-        )
-        per_rule = one.unionByName(seed).groupBy("rule").agg(
-            F.max("violations").alias("violations")
-        )
-        report = per_rule if report is None else report.unionByName(per_rule)
-    return report
+    names = [name for name, *_ in rules]
+    return _unpivot_counts(
+        flagged.agg(*[F.count_if(F.col(f"`{n}`")).alias(n) for n in names]), names
+    )
 
 
 def _unpivot_counts(df: DataFrame, names: list[str]) -> DataFrame:
@@ -161,157 +126,16 @@ def _unpivot_counts(df: DataFrame, names: list[str]) -> DataFrame:
     )
 
 
-def _nullcount(df: DataFrame, name: str):
-    cond = None
-    for c in df.columns:
-        n = F.col(c).isNull()
-        cond = n if cond is None else (cond | n)
-    return F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(name)
-
-
 def validate(tables: dict[str, DataFrame]) -> DataFrame:
-    """The full fixture-schema rule report — same 20 ``(rule, violations)``
-    rows as ``report_from_rules(all_rules(tables))`` but restructured for
-    shared scans: the naive union-of-rules plan scans lineitem ~7 times
-    (3 RI anti-joins + null rule + 2 business filters + the ship-date
-    join); this form computes all lineitem-resident rules in ONE pass — a
-    single scan, left joins to the three parents, one aggregate emitting
-    seven counts. Per-table null/business rules fold the same way. At
-    100 TB the fact-table scan dominates the report cost, so 7x fewer
-    lineitem scans is the difference between one pass and a whole shift.
-
-    Uniqueness rules still need a groupBy per keyed table (inherent — a
-    distinct-count shuffle), and tables absent from ``tables`` simply
-    drop their rules, matching the composable rule builders above.
-    """
-    missing = {
-        "lineitem", "orders", "customer", "part", "supplier", "nation", "region",
-    } - set(tables)
+    """The fixture schema's report: :data:`TPCH_RULES` compiled by
+    :func:`rule_report` over ``tables``, which must hold every table
+    of :data:`TPCH_TABLES`."""
+    missing = [t for t in TPCH_TABLES if t not in tables]
     if missing:
-        # partial table sets keep the composable (slower) path
-        return report_from_rules(all_rules(tables))
-
-    li, o, c = tables["lineitem"], tables["orders"], tables["customer"]
-    p, s, n, r = (
-        tables["part"], tables["supplier"], tables["nation"], tables["region"],
-    )
-
-    def nullc(df, name):
-        return _nullcount(df, name)
-
-    # lineitem: one scan, 3 left joins, 7 rule counts
-    li_joined = (
-        li.join(
-            o.select(F.col("o_orderkey").alias("_ok"), "o_orderdate"),
-            li["l_orderkey"] == F.col("_ok"),
-            "left",
-        )
-        .join(
-            p.select(F.col("p_partkey").alias("_pk")),
-            li["l_partkey"] == F.col("_pk"),
-            "left",
-        )
-        .join(
-            s.select(F.col("s_suppkey").alias("_sk")),
-            li["l_suppkey"] == F.col("_sk"),
-            "left",
-        )
-    )
-    li_cond_null = None
-    for col in li.columns:
-        cn = F.col(col).isNull()
-        li_cond_null = cn if li_cond_null is None else (li_cond_null | cn)
-    li_counts = li_joined.agg(
-        F.sum(F.when(F.col("_ok").isNull(), 1).otherwise(0))
-        .cast("long").alias("lineitem.order_exists"),
-        F.sum(F.when(F.col("_pk").isNull(), 1).otherwise(0))
-        .cast("long").alias("lineitem.part_exists"),
-        F.sum(F.when(F.col("_sk").isNull(), 1).otherwise(0))
-        .cast("long").alias("lineitem.supplier_exists"),
-        F.sum(F.when(li_cond_null, 1).otherwise(0))
-        .cast("long").alias("lineitem.no_nulls"),
-        F.sum(F.when(F.col("l_extendedprice") < 0, 1).otherwise(0))
-        .cast("long").alias("lineitem.price_nonneg"),
-        F.sum(
-            F.when((F.col("l_discount") < 0) | (F.col("l_discount") > 1), 1)
-            .otherwise(0)
-        ).cast("long").alias("lineitem.discount_range"),
-        F.sum(F.when(F.col("l_shipdate") < F.col("o_orderdate"), 1).otherwise(0))
-        .cast("long").alias("lineitem.ship_after_order"),
-    )
-
-    # orders: one scan + customer left join, 2 counts
-    o_counts = o.join(
-        c.select(F.col("c_custkey").alias("_ck")),
-        o["o_custkey"] == F.col("_ck"),
-        "left",
-    ).agg(
-        F.sum(F.when(F.col("_ck").isNull(), 1).otherwise(0))
-        .cast("long").alias("orders.customer_exists"),
-        nullc(o, "orders.no_nulls"),
-    )
-    # customer -> nation, nation -> region
-    c_counts = c.join(
-        n.select(F.col("n_nationkey").alias("_nk")),
-        c["c_nationkey"] == F.col("_nk"),
-        "left",
-    ).agg(
-        F.sum(F.when(F.col("_nk").isNull(), 1).otherwise(0))
-        .cast("long").alias("customer.nation_exists"),
-        nullc(c, "customer.no_nulls"),
-    )
-    n_counts = n.join(
-        r.select(F.col("r_regionkey").alias("_rk")),
-        n["n_regionkey"] == F.col("_rk"),
-        "left",
-    ).agg(
-        F.sum(F.when(F.col("_rk").isNull(), 1).otherwise(0))
-        .cast("long").alias("nation.region_exists"),
-        nullc(n, "nation.no_nulls"),
-    )
-    simple_nulls = [
-        (p, "part.no_nulls"),
-        (s, "supplier.no_nulls"),
-        (r, "region.no_nulls"),
-    ]
-
-    report = _unpivot_counts(li_counts, [
-        "lineitem.order_exists", "lineitem.part_exists",
-        "lineitem.supplier_exists", "lineitem.no_nulls",
-        "lineitem.price_nonneg", "lineitem.discount_range",
-        "lineitem.ship_after_order",
-    ])
-    report = report.unionByName(
-        _unpivot_counts(o_counts, ["orders.customer_exists", "orders.no_nulls"])
-    )
-    report = report.unionByName(
-        _unpivot_counts(c_counts, ["customer.nation_exists", "customer.no_nulls"])
-    )
-    report = report.unionByName(
-        _unpivot_counts(n_counts, ["nation.region_exists", "nation.no_nulls"])
-    )
-    for df, name in simple_nulls:
-        report = report.unionByName(
-            _unpivot_counts(df.agg(nullc(df, name)), [name])
-        )
-    # uniqueness: count of keys appearing more than once (one groupBy each)
-    for tbl, key in [
-        ("orders", "o_orderkey"),
-        ("customer", "c_custkey"),
-        ("part", "p_partkey"),
-        ("supplier", "s_suppkey"),
-    ]:
-        dup = (
-            tables[tbl]
-            .groupBy(key)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .agg(F.count(F.lit(1)).cast("long").alias(f"{tbl}.{key}.unique"))
-        )
-        report = report.unionByName(
-            _unpivot_counts(dup, [f"{tbl}.{key}.unique"])
-        )
-    return report
+        raise ValueError(f"validate: missing table(s) {', '.join(missing)}")
+    li, o = tables["lineitem"], tables["orders"]
+    pairs = li.join(o, li["l_orderkey"] == o["o_orderkey"])
+    return rule_report({**tables, "lineitem⋈orders": pairs}, TPCH_RULES)
 
 
 def q_cardinality_sketches(spark, sf_dir: str) -> DataFrame:
@@ -1448,7 +1272,13 @@ def table_stats_finish(grid) -> "DataFrame":
     aggregate exactly like the batch query applies datediff to
     min/max."""
     is_null = F.col("vint").isNull() & F.col("vstr").isNull()
-    raw = grid.groupBy("column").agg(
+    # one zero-count null row per profiled column: an empty grid still
+    # reports every column (n_rows = 0), and no statistic moves
+    seed = grid.sparkSession.createDataFrame(
+        [(c, None, None, 0) for c, _ in STATS_COLUMNS],
+        "column string, vint long, vstr string, n long",
+    )
+    raw = grid.unionByName(seed).groupBy("column").agg(
         F.sum("n").cast("long").alias("n_rows"),
         F.coalesce(
             F.sum(F.when(is_null, F.col("n"))), F.lit(0)

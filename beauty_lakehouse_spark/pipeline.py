@@ -6,7 +6,7 @@ Reference flow (notebooks/01_dataLake_ingestion.ipynb): raw CSV → pandas
 
     raw zone (CSV, declared schemas)
       → curated zone (parquet/Delta, validated read-back)
-      → quality report (single-action rule union)
+      → quality report (one compiled rule plan)
       → warehouse fact + rollup
       → run manifest
 
@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import datagen, sources
-from .operators.quality import report_from_rules
 
 
 @dataclass(frozen=True)
@@ -127,7 +126,7 @@ def run_lakehouse_pipeline(
         curated["customers"], curated["products"],
         curated["orders"], curated["order_items"],
     )
-    quality = report_from_rules(datagen.beauty_rules(cds))
+    quality = datagen.beauty_report(cds)
 
     # 4. warehouse layer
     fact = build_fact_sales(cds.orders, cds.order_items, cds.products)

@@ -1,7 +1,7 @@
 """The artifact memo (`beauty_lakehouse_spark.memo`): keys carry the
 input's fingerprint, so an in-place rewrite of a fixture rebuilds every
-artifact derived from it, and artifact scratch dirs are removed by the
-module's exit hook."""
+artifact derived from it, and artifact scratch dirs are removed with
+their artifact by ``clear`` or by the module's exit hook."""
 
 from __future__ import annotations
 
@@ -123,3 +123,27 @@ def test_merge_scenario_scratch_removed_by_exit_hook(
     assert os.path.isdir(root)
     memo._remove_scratch()
     assert not os.path.exists(root)
+
+
+def test_clear_removes_the_scratch_dirs_of_dropped_artifacts(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Each clear-and-rebuild of the merge scenario replaces its
+    scratch dir instead of adding one; a kept kind keeps its dir."""
+    import tempfile
+
+    from beauty_lakehouse_spark.tables import _merge_scenario
+
+    scratch_root = tmp_path / "tmp"
+    scratch_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch_root))
+    d = _fixture_copy(sf_dir, tmp_path / "sf")
+    for _ in range(3):
+        memo.clear(spark, keep=("table",))
+        path = _merge_scenario(spark, d)
+        assert os.path.isdir(path)
+    assert len(list(scratch_root.glob("bl_merge_*"))) == 1
+    memo.clear(spark, keep=("table", "merge_scenario"))
+    assert os.path.isdir(path)
+    memo.clear(spark, keep=("table",))
+    assert not list(scratch_root.glob("bl_merge_*"))

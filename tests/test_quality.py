@@ -20,7 +20,18 @@ def report(spark, sf_dir):
     return {r.rule: r.violations for r in df.collect()}
 
 
-def test_report_covers_all_rules(report):
+def _duckdb_report(frames: dict, sql: str) -> dict:
+    """``(rule, violations)`` of ``sql`` run by DuckDB over the same
+    Spark frames, each registered under its dict key."""
+    import duckdb
+
+    con = duckdb.connect()
+    for name, df in frames.items():
+        con.register(name, df.toArrow())
+    return dict(con.execute(sql).fetchall())
+
+
+def test_report_covers_every_rule(report):
     assert len(report) == 20
 
 
@@ -54,12 +65,19 @@ def test_schema_assert_rejects_wrong_type(spark, sf_dir):
 
 
 def test_validate_is_single_action(spark, sf_dir):
-    """The whole report must be one unioned plan (one Spark action),
-    not a driver loop of per-rule counts."""
+    """The whole report is one action over one compiled plan: its Spark
+    jobs, counted by job group, stay within the 22 the hand-fused
+    report ran at sf0.001 (each AQE query stage is a job)."""
     t = load(spark, sf_dir)
     df = quality.validate({n: t.table(n) for n in TABLES})
-    # a single DataFrame action covers every rule
-    assert df.count() == 20
+    sc = spark.sparkContext
+    sc.setJobGroup("test_validate_is_single_action", "quality report")
+    try:
+        assert df.count() == 20
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_validate_is_single_action")
+    assert 0 < len(jobs) <= 22, len(jobs)
 
 
 def test_cardinality_sketch_error_bound(spark, sf_dir):
@@ -72,23 +90,68 @@ def test_cardinality_sketch_error_bound(spark, sf_dir):
         assert rel_err < 0.05, (r.target, r.exact_distinct, r.approx_distinct)
 
 
-def test_report_from_rules_rejects_empty():
-    with pytest.raises(ValueError, match="empty rule list"):
-        quality.report_from_rules([])
+def test_validate_rejects_missing_table(spark, sf_dir):
+    t = load(spark, sf_dir)
+    tables = {n: t.table(n) for n in TABLES if n != "supplier"}
+    with pytest.raises(ValueError, match="supplier"):
+        quality.validate(tables)
 
 
 def test_validate_matches_composable_rules(spark, sf_dir):
-    """The shared-scan validate() fast path must produce exactly the same
-    (rule, violations) rows as the composable one-rule-one-DataFrame
-    form it replaces."""
+    """validate() must produce exactly the (rule, violations) rows of
+    the registered DuckDB oracle, which states each rule as its own
+    count query over the same tables."""
+    import __spark_entry__ as entrymod
+
     t = load(spark, sf_dir)
     tables = {n: t.table(n) for n in TABLES}
-    fast = {(r.rule, r.violations) for r in quality.validate(tables).collect()}
-    slow = {
-        (r.rule, r.violations)
-        for r in quality.report_from_rules(quality.all_rules(tables)).collect()
-    }
-    assert fast == slow
+    got = {r.rule: r.violations for r in quality.validate(tables).collect()}
+    assert got == _duckdb_report(tables, entrymod._quality_report_sql())
+
+
+def test_validate_counts_duplicate_parent_keys_once(spark, sf_dir):
+    """A duplicated orders row must not multiply its lineitems: with two
+    of that order's lines priced negative, price_nonneg is 2, and every
+    rule matches the DuckDB oracle over the same frames (ship-after-order
+    counts joined pairs there and here)."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entrymod
+
+    t = load(spark, sf_dir)
+    tables = {n: t.table(n) for n in TABLES}
+    li = tables["lineitem"]
+    key = (
+        li.groupBy("l_orderkey").count().filter("count >= 2")
+        .agg(F.min("l_orderkey")).first()[0]
+    )
+    tables["orders"] = tables["orders"].unionByName(
+        tables["orders"].filter(F.col("o_orderkey") == key)
+    )
+    lines = sorted(
+        r.l_linenumber for r in li.filter(F.col("l_orderkey") == key).collect()
+    )[:2]
+    tables["lineitem"] = li.withColumn(
+        "l_extendedprice",
+        F.when(
+            (F.col("l_orderkey") == key) & F.col("l_linenumber").isin(lines),
+            -F.col("l_extendedprice"),
+        ).otherwise(F.col("l_extendedprice")),
+    )
+    assert tables["lineitem"].filter("l_extendedprice < 0").count() == 2
+    got = {r.rule: r.violations for r in quality.validate(tables).collect()}
+    assert got["lineitem.price_nonneg"] == 2
+    assert got["orders.o_orderkey.unique"] == 1
+    assert got == _duckdb_report(tables, entrymod._quality_report_sql())
+
+
+def test_table_stats_finish_reports_every_column_of_an_empty_grid(spark, sf_dir):
+    from beauty_lakehouse_spark.streaming.pipelines import order_stats_value_grid
+
+    empty = load(spark, sf_dir).orders.limit(0)
+    rows = quality.table_stats_finish(order_stats_value_grid(empty)).collect()
+    assert sorted(r.column for r in rows) == sorted(c for c, _ in quality.STATS_COLUMNS)
+    assert all((r.n_rows, r.n_nulls, r.n_distinct) == (0, 0, 0) for r in rows)
 
 
 def test_quantile_sketches_brackets_exact_percentiles(spark, sf_dir):

@@ -4,6 +4,7 @@ properties, and the ported validator's rule report."""
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from beauty_lakehouse_spark import datagen, sources
@@ -86,6 +87,153 @@ def test_datagen_validator_all_clean(spark):
     rows = {r.rule: r.violations for r in report.collect()}
     assert len(rows) == 14
     assert all(v == 0 for v in rows.values()), rows
+
+
+#: DuckDB twin of the 14 beauty rules, each its own count query in the
+#: reference validator's terms (anti joins, inner joins, GROUP BY).
+_BEAUTY_TWIN = """
+WITH category_map(mt, mc) AS (VALUES {pairs}),
+sizes AS (
+    SELECT order_id, count(*) AS n,
+           CAST(round(sum(CAST(line_total AS DECIMAL(12,2))), 2) AS DOUBLE) AS calc
+    FROM order_items GROUP BY order_id
+)
+SELECT 'customers.customer_id.unique', (SELECT count(*) FROM (
+    SELECT customer_id FROM customers GROUP BY customer_id HAVING count(*) > 1))
+UNION ALL SELECT 'products.product_id.unique', (SELECT count(*) FROM (
+    SELECT product_id FROM products GROUP BY product_id HAVING count(*) > 1))
+UNION ALL SELECT 'orders.order_id.unique', (SELECT count(*) FROM (
+    SELECT order_id FROM orders GROUP BY order_id HAVING count(*) > 1))
+UNION ALL SELECT 'order_items.order_item_id.unique', (SELECT count(*) FROM (
+    SELECT order_item_id FROM order_items GROUP BY order_item_id HAVING count(*) > 1))
+UNION ALL SELECT 'orders.customer_exists', (SELECT count(*) FROM orders o
+    ANTI JOIN customers c ON o.customer_id = c.customer_id)
+UNION ALL SELECT 'order_items.order_exists', (SELECT count(*) FROM order_items i
+    ANTI JOIN orders o ON i.order_id = o.order_id)
+UNION ALL SELECT 'order_items.product_exists', (SELECT count(*) FROM order_items i
+    ANTI JOIN products p ON i.product_id = p.product_id)
+UNION ALL SELECT 'products.category_mapping', (SELECT count(*) FROM products p
+    LEFT JOIN category_map m ON p.product_type = m.mt
+    WHERE m.mc IS NULL OR p.category <> m.mc)
+UNION ALL SELECT 'products.cost_within_price_band', (SELECT count(*) FROM products
+    WHERE cost < round(price * 0.40, 2) - 0.01 OR cost > round(price * 0.70, 2) + 0.01)
+UNION ALL SELECT 'customers.age_bounds', (SELECT count(*) FROM customers
+    WHERE age < 18 OR age > 90)
+UNION ALL SELECT 'order_items.line_total_arith', (SELECT count(*) FROM order_items
+    WHERE abs(line_total - CAST(round(quantity * CAST(unit_price AS DECIMAL(12,2)), 2)
+                               AS DOUBLE)) > 1e-9)
+UNION ALL SELECT 'orders.total_amount_consistent', (SELECT count(*) FROM orders o
+    JOIN sizes s ON o.order_id = s.order_id WHERE abs(o.total_amount - s.calc) > 1e-9)
+UNION ALL SELECT 'orders.date_after_signup', (SELECT count(*) FROM orders o
+    JOIN customers c ON o.customer_id = c.customer_id WHERE o.order_date < c.signup_date)
+UNION ALL SELECT 'order_items.items_per_order_bounds', (SELECT count(*) FROM sizes
+    WHERE n < 1 OR n > 6)
+""".format(
+    pairs=", ".join(f"('{t}', '{c}')" for t, c in datagen.PRODUCT_TYPE_TO_CATEGORY.items())
+)
+
+
+def _beauty_twin(ds) -> dict:
+    import duckdb
+
+    con = duckdb.connect()
+    for name in ("customers", "products", "orders", "order_items"):
+        con.register(name, getattr(ds, name).toArrow())
+    return dict(con.execute(_BEAUTY_TWIN).fetchall())
+
+
+def _report(ds) -> dict:
+    return {r.rule: r.violations for r in datagen.beauty_report(ds).collect()}
+
+
+def _set(df, key: str, ids, col: str, value):
+    """``df`` with ``col`` replaced by ``value`` on the rows whose
+    ``key`` is in ``ids``."""
+    hit = F.col(key).isin(list(ids))
+    return df.withColumn(col, F.when(hit, value).otherwise(F.col(col)))
+
+
+def test_beauty_report_counts_duplicate_parent_keys_once(spark):
+    """A duplicated orders row must not multiply its items: one of its
+    items breaks the line-total arithmetic, and that counts once."""
+    ds = datagen.generate(spark, 100, 30, 300, materialize=True)
+    order = (
+        ds.order_items.groupBy("order_id").count().filter("count >= 2")
+        .agg(F.min("order_id")).first()[0]
+    )
+    item = ds.order_items.filter(F.col("order_id") == order).agg(
+        F.min("order_item_id")
+    ).first()[0]
+    ds = datagen.BeautyDataset(
+        ds.customers,
+        ds.products,
+        ds.orders.unionByName(ds.orders.filter(F.col("order_id") == order)),
+        _set(ds.order_items, "order_item_id", [item], "quantity", F.col("quantity") + 1),
+    )
+    got = _report(ds)
+    assert got["order_items.line_total_arith"] == 1
+    assert got["orders.order_id.unique"] == 1
+    assert got == _beauty_twin(ds)
+
+
+def test_beauty_report_planted_violations(spark):
+    """Each of the 14 rules is broken a known number of times, and the
+    report matches both those counts and the DuckDB twin."""
+    ds = datagen.generate(spark, 100, 30, 300, materialize=True)
+    cu, pr, od, it = ds.customers, ds.products, ds.orders, ds.order_items
+    a, b, c, d = [
+        r.order_id
+        for r in od.filter(F.col("customer_id") != 2).orderBy("order_id").limit(4).collect()
+    ]
+    last_item = it.agg(F.max("order_item_id")).first()[0]
+    cu = _set(cu, "customer_id", [1], "age", F.lit(10))
+    cu = cu.unionByName(cu.filter(F.col("customer_id") == 2))
+    pr = _set(pr, "product_id", [3], "category", F.lit("Nope"))
+    pr = _set(pr, "product_id", [4], "product_type", F.lit("Unknown"))
+    pr = _set(pr, "product_id", [5], "cost", F.col("price") * 2)
+    pr = pr.unionByName(pr.filter(F.col("product_id") == 2))
+    od = _set(od, "order_id", [a], "customer_id", F.lit(-1).cast("long"))
+    od = _set(od, "order_id", [b], "order_date", F.lit("2000-01-01").cast("date"))
+    od = _set(od, "order_id", [d], "total_amount", F.col("total_amount") + 1)
+    od = od.unionByName(od.filter(F.col("order_id") == c))
+    # seven copies of the first seven items under an order that does
+    # not exist: one keeps its item id, one points at no product
+    first = it.orderBy("order_item_id").limit(7).withColumn(
+        "rank", F.row_number().over(Window.orderBy("order_item_id"))
+    )
+    strays = (
+        first.withColumn("order_id", F.lit(-5).cast("long"))
+        .withColumn(
+            "order_item_id",
+            F.when(F.col("rank") == 1, F.col("order_item_id")).otherwise(-F.col("rank")),
+        )
+        .withColumn(
+            "product_id",
+            F.when(F.col("rank") == 2, F.lit(-7).cast("long")).otherwise(F.col("product_id")),
+        )
+        .drop("rank")
+    )
+    it = _set(it, "order_item_id", [last_item], "quantity", F.col("quantity") + 1)
+    it = it.unionByName(strays)
+    ds = datagen.BeautyDataset(cu, pr, od, it)
+    got = _report(ds)
+    assert got == {
+        "customers.customer_id.unique": 1,
+        "products.product_id.unique": 1,
+        "orders.order_id.unique": 1,
+        "order_items.order_item_id.unique": 1,
+        "orders.customer_exists": 1,
+        "order_items.order_exists": 7,
+        "order_items.product_exists": 1,
+        "products.category_mapping": 2,
+        "products.cost_within_price_band": 1,
+        "customers.age_bounds": 1,
+        "order_items.line_total_arith": 1,
+        "orders.total_amount_consistent": 1,
+        "orders.date_after_signup": 1,
+        "order_items.items_per_order_bounds": 1,
+    }
+    assert got == _beauty_twin(ds)
 
 
 def test_bucketed_join_is_shuffle_free(spark, sf_dir):
