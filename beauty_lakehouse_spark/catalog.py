@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from . import memo
+from .session import cores, spread
 
 # Expected logical schemas for the driver fixture tables
 # (/root/repo/FIXTURES.md §B). Integer widths may be narrower on disk
@@ -218,13 +219,11 @@ def spread_scan(df: DataFrame) -> DataFrame:
     single row group always scans as ONE task no matter what
     ``maxPartitionBytes``/``minPartitionNum`` say — and every per-row
     expression downstream of that scan (fixed-point folds, hash
-    kernels) then runs single-threaded. Round-robin repartition to the
-    default parallelism when (and only when) the scan resolves to
-    fewer than a quarter of the cores; at production scale a fact scan
-    has thousands of row-group splits and this is a structural no-op,
-    so no full-table shuffle is ever added where the scan is already
-    parallel. Row-to-partition assignment stays deterministic under
-    retries (``spark.sql.execution.sortBeforeRepartition`` default).
+    kernels) then runs single-threaded. ``session.spread`` decides
+    from the scan's split count; a production fact scan has thousands
+    of row-group splits, so no full-table shuffle is added there.
+    Round-robin assignment stays deterministic under retries
+    (``spark.sql.execution.sortBeforeRepartition`` default).
 
     Call it on a NARROW projection (project first, spread the few
     columns you compute on — §2.3), and only in operators whose
@@ -234,11 +233,10 @@ def spread_scan(df: DataFrame) -> DataFrame:
     file sizes) — deliberately NOT ``df.rdd.getNumPartitions()``, which
     materializes the plan and can execute shuffle stages under AQE."""
     if df.isStreaming:
-        # streaming plans size their state partitions separately
-        # (streaming.pipelines.stream_state_partitions)
+        # streaming plans spread their documents source separately
+        # (streaming.pipelines._spread_stream_scan)
         return df
-    spark = df.sparkSession
-    goal = spark.sparkContext.defaultParallelism
+    n = cores(df.sparkSession)
     try:
         files = df.inputFiles()
     except Exception:
@@ -250,18 +248,15 @@ def spread_scan(df: DataFrame) -> DataFrame:
         return df
     splits = 0
     for f in files:
-        path = f.removeprefix("file:")
         try:
-            size = __import__("os").path.getsize(path)
+            size = os.path.getsize(f.removeprefix("file:"))
         except OSError:
             # non-local FS: size unknown; count the file as parallel
             # enough that a big remote table is never re-shuffled
-            splits += max(1, goal // max(1, len(files)))
+            splits += max(1, n // len(files))
             continue
         splits += 1 + size // (128 * 1024 * 1024)
-    if splits * 4 >= goal:
-        return df
-    return df.repartition(goal)
+    return spread(df, splits, n)
 
 
 def _assert_schema(name: str, df: DataFrame) -> None:

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from .. import memo
 from ..catalog import load
 from ..functions import normalized_text_hash, halfup_div, portable_hash64
+from ..session import cores, width
 
 N_HASHES = 16
 LSH_BANDS = 4  # 4 bands x 4 rows
@@ -738,6 +739,11 @@ def connected_components(
     every node labeled with the smallest reachable id — is invariant
     under the regrouping, so the output is bit-identical to the old
     loop's (and to the DuckDB recursive-CTE oracle)."""
+    # an endpoint missing from ``nodes`` would enter the labels as an
+    # invented node and bridge every node pointing at it: drop its edges
+    ids = nodes.select("id")
+    edges = edges.join(ids.withColumnRenamed("id", "src"), "src", "left_semi")
+    edges = edges.join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
     # materialize the edge pipeline ONCE before mirroring: ``both``
     # references ``edges`` twice (forward ∪ reversed), so an uncached
     # upstream (e.g. setsim's candidate-verify tail) would otherwise
@@ -767,13 +773,9 @@ def connected_components(
     # sf0.1 setsim graph), so each round paid one tiny task per
     # partition in scheduling overhead (§2.2). Coalesce (narrow, no
     # shuffle) to a volume-derived width: ~2M refs (16 B each, ~32 MB)
-    # per partition, capped at the session's parallelism. The count is
+    # per partition, capped at the session's cores. The count is
     # one cheap job over checkpointed blocks.
-    n_refs = both.count()
-    goal = max(1, min(
-        int(nodes.sparkSession.sparkContext.defaultParallelism),
-        n_refs // 2_000_000 + 1,
-    ))
+    goal = width(both.count(), 2_000_000, cores(nodes.sparkSession))
     if goal < both.rdd.getNumPartitions():
         both = both.coalesce(goal)
     rounds_done = 1

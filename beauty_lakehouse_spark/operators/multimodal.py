@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import memo
+from ..session import cores
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -1822,7 +1823,7 @@ def q_media_phash_pairs_pngcodec(spark, sf_dir: str) -> DataFrame:
     # is one small parquet split — spread the map-only work across the
     # session's cores before the Arrow kernel (round-robin is safe:
     # hashes are per-row deterministic, downstream is order-insensitive)
-    docs = t.documents.repartition(spark.sparkContext.defaultParallelism)
+    docs = t.documents.repartition(cores(spark))
     return exactint_hash_pairs(phash_exactint(docs, through_png=True))
 
 
@@ -1991,7 +1992,7 @@ def q_media_phash_pairs_jpegcodec(spark, sf_dir: str) -> DataFrame:
     from ..catalog import load
 
     t = load(spark, sf_dir)
-    docs = t.documents.repartition(spark.sparkContext.defaultParallelism)
+    docs = t.documents.repartition(cores(spark))
     return exactint_hash_pairs(phash_exactint_jpeg(docs))
 
 

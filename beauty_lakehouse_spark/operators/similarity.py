@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from .. import memo
 from ..catalog import load
+from ..session import cores, width
 
 EMB_DIM = 64
 
@@ -1382,19 +1383,11 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n·d² multiply-aggregate as ONE task (measured: one 3.2 s stage
     # holding ~100% of the query's CPU at sf0.1). Partition the
     # centered matrix by vec_id at a width derived from the OUTPUT
-    # volume (~4M pair-rows per task, capped at the session
-    # parallelism); the vec_id-keyed repartition keeps both join sides
+    # volume (~4M pair-rows per task, capped at the session's cores);
+    # the vec_id-keyed repartition keeps both join sides
     # co-partitioned. n_vecs is a parquet metadata count (no scan).
     n_vecs = t.embeddings.count()
-    gram_goal = int(
-        max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                n_vecs * EMB_DIM * EMB_DIM // 4_000_000 + 1,
-            ),
-        )
-    )
+    gram_goal = width(n_vecs * EMB_DIM * EMB_DIM, 4_000_000, cores(spark))
     cx = (
         ex.join(F.broadcast(msum), "dim")
         .crossJoin(F.broadcast(nn))

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import datagen, sources
+from .session import cores
 
 
 @dataclass(frozen=True)
@@ -277,7 +278,7 @@ def run_media_pipeline(
 
     t = load(spark, sf_dir)
     media = mm.mixed_image_from_documents(
-        t.documents.repartition(spark.sparkContext.defaultParallelism)
+        t.documents.repartition(cores(spark))
     )
     hashes = mm.phash_exactint_payload(media).localCheckpoint(eager=True)
     n_media = hashes.count()

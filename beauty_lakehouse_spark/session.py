@@ -15,13 +15,16 @@ engine makes the cluster-scale decisions explicit here, once:
   multimodal decode) — everything else stays JVM-side.
 - Session timezone pinned to UTC so event-time bucketing is stable and
   matches the DuckDB oracle.
+- One partition-width rule: ``width`` sizes a stage by its volume,
+  ``spread`` fans out a scan with too few splits. Both take the core
+  count explicitly; ``cores`` is the one reader of the session's.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -40,14 +43,38 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def local_cores() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def cores(spark: SparkSession) -> int:
+    """The session's core count (its default parallelism)."""
+    return int(spark.sparkContext.defaultParallelism)
+
+
+def width(volume: int, per_task: int, cores: int, floor: int = 1) -> int:
+    """One partition per started ``per_task`` units of ``volume``, at
+    most ``cores``, at least ``floor``."""
+    return max(floor, min(cores, -(-volume // per_task)))
+
+
+def spread(df: DataFrame, splits: int, cores: int) -> DataFrame:
+    """``df`` round-robined to ``cores`` partitions when its scan has
+    fewer ``splits`` than a quarter of the cores, else ``df`` itself."""
+    if splits * 4 >= cores:
+        return df
+    return df.repartition(cores)
+
+
 def get_spark(app_name: str = "beauty_lakehouse_spark") -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism. When a session
-    already exists (e.g. the driver's), we reuse it and only apply the
+    Runs ``local[local_cores()]``. When a session already exists
+    (e.g. the driver's), we reuse it and only apply the
     runtime-settable confs (session timezone, AQE toggles).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     active = SparkSession.getActiveSession()
     if active is not None:
         _apply_runtime_conf(active)
@@ -56,7 +83,7 @@ def get_spark(app_name: str = "beauty_lakehouse_spark") -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.driver.maxResultSize", "4g")
         # UI off by default (test/bench noise); SPARK_GRAFT_UI=1 turns

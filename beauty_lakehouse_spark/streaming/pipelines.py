@@ -26,11 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import memo
 from ..functions import normalized_text_hash, epoch_us
-
-#: Env override for streaming state partitions (production clusters
-#: size this to state volume / throughput, not to the batch core count).
-STREAM_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_PARTITIONS"
+from ..session import cores, spread, width
 
 #: Glob → real fixture path for every stream source ever built, keyed
 #: by the glob string itself (content-addressed, so re-registration is
@@ -44,25 +42,25 @@ STREAM_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_PARTITIONS"
 _STREAM_SOURCE_PATHS: dict[str, str] = {}
 
 
-def _source_bytes(path: str) -> int:
-    """On-disk bytes of one source fixture (file or directory)."""
-    total = 0
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            total += sum(
-                os.path.getsize(os.path.join(root, f)) for f in files
-            )
-    elif os.path.exists(path):
-        total += os.path.getsize(path)
-    return total
+def _data_file_sizes(path: str) -> list[int]:
+    """Byte sizes of the data files of a local source (one file, or a
+    directory tree): names starting with ``_`` or ``.`` (``_SUCCESS``,
+    ``.crc`` checksums, ``_temporary``) are skipped, as Spark's file
+    index skips them. Empty when ``path`` does not exist locally."""
+    return [
+        size
+        for rel, size, _ in memo.fingerprint(path) or ()
+        if rel == "."
+        or not any(part.startswith(("_", ".")) for part in rel.split(os.sep))
+    ]
 
 
-def stream_state_partitions(
-    spark: SparkSession, sf_dir: str, *tables: str
-) -> int:
-    """Scale-adaptive state-partition count for a streaming drain
-    (guide §2: derive partitioning from input size, not from a constant
-    tuned for one deployment).
+def _plan_state_partitions(result: DataFrame, cores: int) -> int | None:
+    """State-partition count derived from the draining plan ITSELF:
+    the real paths (``_STREAM_SOURCE_PATHS``) of the plan's file
+    sources; the LARGEST one (a self-join of one stream counts its
+    bytes once) gets one partition per 16 MiB, floor 4, at most
+    ``cores``.
 
     Every stateful operator pays a fixed per-partition-per-micro-batch
     cost — load, version, commit, fsync of each state store; a
@@ -70,47 +68,29 @@ def stream_state_partitions(
     empty finalize batch re-commits all of them. Measured at sf0.1
     (32-core local): the stream-stream join drain goes 15.4 s → 3.8 s
     and the NB token-grid drain 4.0 s → 2.0 s when partitions drop
-    32 → 4, with bit-identical output. So: one partition per 16 MiB of
-    source input (floor 4), capped at the session's default
-    parallelism; ``SPARK_GRAFT_STREAM_PARTITIONS`` overrides for
-    production (size to state volume and ingest throughput there)."""
-    env = os.environ.get(STREAM_PARTITIONS_ENV)
-    if env:
-        return max(1, int(env))
-    total = sum(
-        _source_bytes(os.path.join(sf_dir, f"{t}.parquet")) for t in tables
-    )
-    n = 4 + total // (16 * 1024 * 1024)
-    return int(max(4, min(n, spark.sparkContext.defaultParallelism)))
+    32 → 4, with bit-identical output. Production overrides pass
+    ``state_partitions=`` to :func:`run_available_now` (size to state
+    volume and ingest throughput there).
 
-
-def _plan_state_partitions(result: DataFrame) -> int | None:
-    """State-partition count derived from the draining plan ITSELF:
-    read the analyzed plan's FileSource globs, look up their real
-    fixture paths (``_STREAM_SOURCE_PATHS``, recorded when the source
-    was built), and size one partition per 16 MiB of the LARGEST
-    source (matching the old per-builder ``max`` semantics — a
-    self-join of one stream counts its bytes once). Returns ``None``
-    when the plan has no recognizable file source (e.g. a rate/memory
-    source in tests) — the drain then keeps the session's setting."""
-    env = os.environ.get(STREAM_PARTITIONS_ENV)
-    if env:
-        return max(1, int(env))
-    spark = result.sparkSession
-    plan = result._jdf.queryExecution().analyzed().toString()
+    Returns ``None`` when the plan has no recognizable file source
+    (e.g. a rate/memory source in tests) — the drain then keeps the
+    session's setting."""
+    # the source name of a file-source leaf is ``FileSource[<glob>]``
+    leaves = result._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    names = set()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() == "StreamingRelation":
+            names.add(leaf.sourceName())
     paths = {
         real
         for g, real in _STREAM_SOURCE_PATHS.items()
-        if g in plan
+        if f"FileSource[{g}]" in names
     }
     if not paths:
         return None
-    per_source = max(
-        4 + _source_bytes(p) // (16 * 1024 * 1024) for p in paths
-    )
-    return int(
-        max(4, min(per_source, spark.sparkContext.defaultParallelism))
-    )
+    largest = max(sum(_data_file_sizes(p)) for p in paths)
+    return width(largest, 16 * 1024 * 1024, cores, floor=4)
 
 
 def _escape_glob(path: str) -> str:
@@ -132,16 +112,17 @@ def _stream_glob(sf_dir: str, table: str) -> str:
     _STREAM_SOURCE_PATHS[g] = os.path.join(sf_dir, f"{table}.parquet")
     return g
 
-def _spread_stream_scan(df: DataFrame, path: str) -> DataFrame:
+def _spread_stream_scan(df: DataFrame, path: str, cores: int) -> DataFrame:
     """Stream twin of ``catalog.spread_scan`` (§2.5): the parquet file
     stream source assigns ONE scan task per FILE, so a landing
     directory with few files runs every per-row kernel downstream of
     the scan (tokenize/bigram-hash/pHash-decode) single-threaded
-    inside the micro-batch. When the source resolves to fewer files
-    than a quarter of the cores, round-robin the scanned rows to the
-    session parallelism before the kernels; the stateful aggregate
-    after them re-shuffles to the volume-derived state-partition count
-    regardless, and aggregate results are partitioning-independent.
+    inside the micro-batch. When the source resolves to fewer data
+    files than a quarter of ``cores``, ``session.spread`` round-robins
+    the scanned rows to ``cores`` partitions before the kernels; the
+    stateful aggregate after them re-shuffles to the volume-derived
+    state-partition count regardless, and aggregate results are
+    partitioning-independent.
     At production scale a micro-batch holds many files and this is a
     structural no-op (measured at sf0.1: the DSIR drain 5.3 → 2.9 s,
     single 1.25 s scan task → 32-way kernel stage).
@@ -153,17 +134,10 @@ def _spread_stream_scan(df: DataFrame, path: str) -> DataFrame:
     Python-stateful operators that re-shuffle by key immediately —
     there the extra per-micro-batch exchange only adds cost (measured:
     kaplan_meier_streamed 3.7 → 5.4 s with the orders scan spread)."""
-    spark = df.sparkSession
-    goal = spark.sparkContext.defaultParallelism
-    files = 0
-    if os.path.isdir(path):
-        for _root, _dirs, fs in os.walk(path):
-            files += len(fs)
-    elif os.path.exists(path):
-        files = 1
-    if files == 0 or files * 4 >= goal:
+    files = len(_data_file_sizes(path))
+    if files == 0:
         return df
-    return df.repartition(goal)
+    return spread(df, files, cores)
 
 
 #: Non-timestamp columns of the events stream; ``ts`` is appended with
@@ -377,8 +351,9 @@ def run_available_now(
     computes (aggregation/join results are partitioning-independent),
     only how many state stores each micro-batch must load and commit."""
     spark = result.sparkSession
-    derived = _plan_state_partitions(result)
-    width = derived if state_partitions is None else state_partitions
+    n = cores(spark)
+    derived = _plan_state_partitions(result, n)
+    drained_width = derived if state_partitions is None else state_partitions
     if state_partitions is None:
         state_partitions = derived
         # The volume-derived hint models JVM state-store cost (load/
@@ -388,14 +363,12 @@ def run_available_now(
         # starves it of cores: measured at sf0.1, the KM min-2 drain
         # runs 13.2 s at the 4-partition hint vs 5.6 s at the session's
         # 32, and the URL-dedup drain 4.6 s vs 2.9 s — identical output
-        # either way. Keep those at the session's parallelism; an
-        # explicit ``state_partitions=`` argument still wins.
+        # either way. Keep those at the session's cores; an explicit
+        # ``state_partitions=`` argument still wins.
         if state_partitions is not None:
             plan = result._jdf.queryExecution().analyzed().toString()
             if "FlatMapGroupsInPandasWithState" in plan:
-                state_partitions = max(
-                    state_partitions, spark.sparkContext.defaultParallelism
-                )
+                state_partitions = max(state_partitions, n)
     prev = None
     if state_partitions is not None:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -416,7 +389,7 @@ def run_available_now(
     # Right-size the drained table's scan width to the explicit or
     # volume-derived state-partition count (r14 §2.6/§5): the memory sink
     # holds the complete-mode snapshot as driver-local rows, and a
-    # LocalTableScan fans out to defaultParallelism tasks that all
+    # LocalTableScan fans out to one task per core, all of which
     # contend on the driver feeding them serialized slices — measured
     # at sf0.1, the DSIR finish spent 132 s of task runtime (16.9 s
     # CPU) on a 26 MiB grid through 32 tasks, 3.3 s -> 1.9 s after the
@@ -424,8 +397,8 @@ def run_available_now(
     # a big drain (thousands of derived partitions) this is a
     # structural no-op; the finishers' shuffles still run at the
     # session's parallelism.
-    if width is not None:
-        out = out.coalesce(width)
+    if drained_width is not None:
+        out = out.coalesce(drained_width)
     return out
 
 
@@ -448,6 +421,7 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             _stream_glob(sf_dir, "documents")
         ),
         os.path.join(sf_dir, "documents.parquet"),
+        cores(spark),
     )
 
 

@@ -72,10 +72,10 @@ def build_syn_embeddings(spark, base_dir: str, out_dir: str, copies: int):
 def main() -> None:
     import __spark_entry__ as entrymod
     from beauty_lakehouse_spark import memo
-    from beauty_lakehouse_spark.session import get_spark
+    from beauty_lakehouse_spark.session import cores, get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark("scale-r14")
+    cpus = cores(spark)
     meter = ShuffleMeter(spark)
     if not os.path.isdir(os.path.join(SYN_DIR, "orders.parquet")):
         build_syn_tpch(spark, "/root/testdata/sf0.1", SYN_DIR, 10)
@@ -102,7 +102,7 @@ def main() -> None:
         }
         print(f"syn10x c{cpus} {name}: {wall:.2f}s "
               f"shuffle {shuf / 2**20:.1f} MiB", flush=True)
-    out = {"tier": "syn10x", "cpus": int(cpus), "entries": results}
+    out = {"tier": "syn10x", "cpus": cpus, "entries": results}
     with open(f"plans/r14/scale_syn10x_c{cpus}.json", "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))

@@ -200,6 +200,20 @@ def test_connected_components_chain_and_singletons(spark):
     assert comp == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 5: 5, 6: 6, 7: 6}
 
 
+def test_connected_components_drops_dangling_endpoints(spark):
+    """Edges whose endpoint is not a node are ignored: the ids 0 and 99
+    are not invented as components, and 1 and 5 are not bridged
+    through 99."""
+    from beauty_lakehouse_spark.operators.dedup import connected_components
+
+    nodes = spark.createDataFrame([(1,), (5,), (7,)], ["id"])
+    edges = spark.createDataFrame([(1, 99), (5, 99), (7, 0)], ["src", "dst"])
+    got = sorted(
+        (r["id"], r["comp"]) for r in connected_components(nodes, edges).collect()
+    )
+    assert got == [(1, 1), (5, 5), (7, 7)]
+
+
 def test_dedup_clusters_plan_depth_bounded(spark):
     """The CC loop localCheckpoints per round — the final plan must not
     embed one join per iteration (bounded lineage, same policy as

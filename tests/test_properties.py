@@ -21,6 +21,7 @@ from beauty_lakehouse_spark.functions import (
     portable_hash64,
     portable_hash64_sql,
 )
+from beauty_lakehouse_spark.session import width
 
 
 @settings(max_examples=150, deadline=None)
@@ -127,6 +128,25 @@ def test_connected_components_matches_union_find(edge_list):
         for r in connected_components(nodes, edges).collect()
     }
     assert got == want
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    a=st.integers(min_value=0, max_value=10**12),
+    b=st.integers(min_value=0, max_value=10**12),
+    per_task=st.integers(min_value=1, max_value=10**7),
+    cores=st.integers(min_value=1, max_value=64),
+    floor=st.integers(min_value=1, max_value=8),
+)
+def test_width_is_monotone_and_bounded(a, b, per_task, cores, floor):
+    """The one partition-width rule never shrinks as the volume grows,
+    and stays in [floor, max(floor, cores)]."""
+    lo, hi = sorted((a, b))
+    w_lo = width(lo, per_task, cores, floor)
+    w_hi = width(hi, per_task, cores, floor)
+    assert w_lo <= w_hi
+    for w in (w_lo, w_hi):
+        assert floor <= w <= max(floor, cores)
 
 
 def test_bpe_merge_fold_matches_reference_scan(spark):

@@ -1048,27 +1048,39 @@ def test_state_partitions_keyed_to_drained_plan(spark, sf_dir, monkeypatch):
     from beauty_lakehouse_spark.streaming import pipelines as P
 
     # fake per-source sizes: documents "huge", events 100 MiB
-    def fake_bytes(path):
-        return (32 * 1024**3) if "documents" in path else (100 * 1024**2)
+    def fake_sizes(path):
+        return [32 * 1024**3] if "documents" in path else [100 * 1024**2]
 
-    monkeypatch.setattr(P, "_source_bytes", fake_bytes)
+    monkeypatch.setattr(P, "_data_file_sizes", fake_sizes)
     # interleaved builders: documents built FIRST and never drained
     P.stream_documents(spark, sf_dir)
     ev_plan = P.hourly_event_counts(P.stream_events(spark, sf_dir))
-    got = P._plan_state_partitions(ev_plan)
-    want = int(
-        max(
-            4,
-            min(
-                4 + (100 * 1024**2) // (16 * 1024**2),
-                spark.sparkContext.defaultParallelism,
-            ),
-        )
-    )
-    assert got == want  # events-derived, NOT the documents gigabytes
+    # events-derived (ceil(100 / 16) at 32 cores), NOT the documents
+    # gigabytes (which would give all 32)
+    assert P._plan_state_partitions(ev_plan, 32) == 7
+    # the floor holds on a small host
+    assert P._plan_state_partitions(ev_plan, 2) == 4
     # and a plan with no registered file source opts out entirely
     mem = spark.readStream.format("rate").load()
-    assert P._plan_state_partitions(mem) is None
+    assert P._plan_state_partitions(mem, 32) is None
+
+
+def test_state_partitions_match_file_sources_exactly(spark, monkeypatch):
+    """A registered source glob that is a substring of the drained
+    source's glob (``/a/b/...`` inside ``/c/a/b/...``) is not read as a
+    source of the drained plan."""
+    from beauty_lakehouse_spark.streaming import pipelines as P
+
+    def fake_sizes(path):
+        return [32 * 1024**3] if path.startswith("/a/b/") else [100 * 1024**2]
+
+    monkeypatch.setattr(P, "_data_file_sizes", fake_sizes)
+    monkeypatch.setattr(P, "_STREAM_SOURCE_PATHS", {})
+    P._stream_glob("/a/b", "orders")
+    drained = spark.readStream.schema("o_orderkey long").parquet(
+        P._stream_glob("/c/a/b", "orders")
+    )
+    assert P._plan_state_partitions(drained, 32) == 7
 
 
 def test_stream_scan_spread_is_conditioned_on_file_count(
@@ -1077,37 +1089,56 @@ def test_stream_scan_spread_is_conditioned_on_file_count(
     """The documents-source spread (r14 §2.5) must round-robin a
     few-file landing scan and structurally no-op a many-file one —
     a repartition added unconditionally would tax every production
-    micro-batch with a full-data exchange."""
+    micro-batch with a full-data exchange. The core count is fixed
+    here, so the rule is checked the same way on every host."""
+    import os
+
     from pyspark.sql import functions as F
 
     from beauty_lakehouse_spark.streaming.pipelines import (
+        DOCUMENTS_SCHEMA,
+        _data_file_sizes,
         _spread_stream_scan,
-        stream_documents,
+        _stream_glob,
     )
 
-    # single-file fixture: the spread inserts a repartition node
+    fixture = os.path.join(sf_dir, "documents.parquet")
+    docs = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(
+        _stream_glob(sf_dir, "documents")
+    )
+    assert len(_data_file_sizes(fixture)) == 1
+
+    # single-file fixture at 32 cores: the spread inserts a repartition
     plan = (
-        stream_documents(spark, sf_dir)
+        _spread_stream_scan(docs, fixture, cores=32)
         ._jdf.queryExecution()
         .analyzed()
         .toString()
     )
     assert "Repartition" in plan
+    # at 4 cores one file is already a quarter of them: no exchange
+    assert _spread_stream_scan(docs, fixture, cores=4) is docs
 
-    # many-file source dir (>= cores/4): identity, no exchange added
+    # many-file source dir (>= cores/4): identity, no exchange added.
+    # Spark writes _SUCCESS and .crc files next to the 64 part files;
+    # only the part files count.
     many = tmp_path / "many_files"
-    spark.range(64).withColumn("text", F.lit("x")).repartition(
-        64
-    ).write.parquet(str(many))
+    spark.range(0, 64, 1, 64).withColumn("text", F.lit("x")).write.parquet(
+        str(many)
+    )
+    names = os.listdir(many)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    assert len(_data_file_sizes(str(many))) == 64
     df = spark.readStream.schema("id long, text string").parquet(str(many))
-    assert _spread_stream_scan(df, str(many)) is df
+    assert _spread_stream_scan(df, str(many), cores=32) is df
 
 
 def test_drained_table_scan_width_matches_state_sizing(spark, sf_dir):
     """run_available_now right-sizes the returned memory table's scan
     to the volume-derived state-partition count (r14 §5: a
-    LocalTableScan otherwise fans driver-held rows out to
-    defaultParallelism contending tasks)."""
+    LocalTableScan otherwise fans driver-held rows out to one
+    contending task per core)."""
+    from beauty_lakehouse_spark.session import cores
     from beauty_lakehouse_spark.streaming.pipelines import (
         _plan_state_partitions,
         dedup_group_table,
@@ -1115,7 +1146,7 @@ def test_drained_table_scan_width_matches_state_sizing(spark, sf_dir):
     )
 
     agg = dedup_group_table(stream_documents(spark, sf_dir))
-    derived = _plan_state_partitions(agg)
+    derived = _plan_state_partitions(agg, cores(spark))
     assert derived is not None
     drained = run_available_now(agg, "t_scan_width")
     assert drained.rdd.getNumPartitions() <= derived
