@@ -15,6 +15,15 @@ engine makes the cluster-scale decisions explicit here, once:
   multimodal decode) — everything else stays JVM-side.
 - Session timezone pinned to UTC so event-time bucketing is stable and
   matches the DuckDB oracle.
+- Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``)
+  holds one compiled Java class per distinct generated source, evicting
+  the least recently used. Its default of 100 is below the engine's
+  working set: the 12-query warehouse read mix compiles ~160 classes and
+  the ingest/merge/stream mix ~310, so a recurring mix evicted its own
+  classes and every pass recompiled ~150 and ~170 of them (Janino,
+  10-20 ms each) and warmed the JIT on them again. Sized to 1000 below,
+  and class names leave out the codegen stage id, so a re-run whose AQE
+  stages are numbered in another order still hits.
 - One partition-width rule: ``width`` sizes a stage by its volume,
   ``spread`` fans out a scan with too few splits. Both take the core
   count explicitly; ``cores`` is the one reader of the session's.
@@ -40,6 +49,19 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # Managed tables (bucketed sinks) live outside the repo tree.
     "spark.sql.warehouse.dir": "/tmp/beauty_lakehouse_warehouse",
+    # Generated-class cache; static, fixed JVM-wide at the first compile.
+    # Measured at local[4], sf0.01, through the benchmark's passes: the
+    # read mix compiles 162 classes in its first pass and the ingest mix
+    # 308; at the default 100 each later pass recompiled 149-150 (reads)
+    # and 172-174 (ingest). At 1000 (> 3x ingest's set) a later pass
+    # compiles 0 and 1. Metaspace read 150-159 MB on reads and 181-187 MB
+    # on ingest either way; a class averages 2.2-2.7 KB of bytecode.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # A cache hit needs the same source text. With the codegen stage id in
+    # the class name, a query whose sibling AQE stages finish in another
+    # order numbers its stages anew and recompiles (segment_priority_chisq:
+    # 2-18 classes a run). The id stays in the plan and the source comment.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -71,8 +93,10 @@ def get_spark(app_name: str = "beauty_lakehouse_spark") -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     Runs ``local[local_cores()]``. When a session already exists
-    (e.g. the driver's), we reuse it and only apply the
-    runtime-settable confs (session timezone, AQE toggles).
+    (e.g. the driver's, a notebook's or a pyspark shell's), we reuse it
+    and apply every ``DEFAULT_CONF`` entry that a live session can
+    change. Static confs (warehouse dir, codegen cache size) reach only
+    sessions that ``get_spark`` builds itself.
     """
     cpus = local_cores()
     active = SparkSession.getActiveSession()
@@ -126,11 +150,7 @@ def get_spark(app_name: str = "beauty_lakehouse_spark") -> SparkSession:
 
 
 def _apply_runtime_conf(spark: SparkSession) -> None:
-    """Apply the confs that are safe to set on a live session."""
-    for k in (
-        "spark.sql.adaptive.enabled",
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.session.timeZone",
-    ):
-        spark.conf.set(k, DEFAULT_CONF.get(k, "true"))
+    """Apply every ``DEFAULT_CONF`` entry a live session can change."""
+    for k, v in DEFAULT_CONF.items():
+        if spark.conf.isModifiable(k):
+            spark.conf.set(k, v)

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import memo
+from .. import catalog, memo
 from ..functions import normalized_text_hash, epoch_us
 from ..session import cores, spread, width
 
@@ -605,14 +605,12 @@ def cms_user_cells(events: DataFrame) -> DataFrame:
 
 
 def stream_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``readStream`` over the orders fixture (file source, schema
-    probed from the parquet footer) — the landing-zone tail of a
-    streaming warehouse-ingest pipeline. Orders carry no event-time
-    column the profile consumes, so no timestamp normalization is
-    needed (o_orderdate flows through with its on-disk type, exactly
-    as the batch `catalog.load` path reads it)."""
-    path = f"{_escape_glob(sf_dir)}/orders.parquet"
-    schema = spark.read.parquet(path).schema
+    """``readStream`` over the orders fixture (file source) — the
+    landing-zone tail of a streaming warehouse-ingest pipeline. Orders
+    carry no normalized column, so the schema is the batch catalog
+    handle's (resolved once per fixture fingerprint, no probe job of
+    its own) and o_orderdate flows through with its on-disk type."""
+    schema = catalog.load(spark, sf_dir).orders.schema
     return spark.readStream.schema(schema).parquet(
         _stream_glob(sf_dir, "orders")
     )

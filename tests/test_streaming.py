@@ -446,6 +446,26 @@ def test_stream_glob_escapes_metacharacters(spark, sf_dir, tmp_path):
     assert drained.collect()[0]["count"] == n_batch
 
 
+def test_stream_orders_reuses_the_catalog_schema(spark, sf_dir):
+    """Building the orders stream after the batch catalog has resolved
+    orders starts no Spark job: the schema comes from the memoized
+    catalog handle, not a footer probe of its own."""
+    from beauty_lakehouse_spark.catalog import load
+    from beauty_lakehouse_spark.streaming.pipelines import stream_orders
+
+    load(spark, sf_dir).orders
+    sc = spark.sparkContext
+    group = "test_stream_orders_reuses_the_catalog_schema"
+    sc.setJobGroup(group, "stream_orders build")
+    try:
+        stream = stream_orders(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert stream.isStreaming
+    assert stream.schema == spark.read.parquet(f"{sf_dir}/orders.parquet").schema
+
+
 def test_media_phash_stream_multi_batch_equals_batch(spark, sf_dir, tmp_path):
     """Fingerprint-at-ingest (r9): draining the documents fixture in
     4 micro-batches through the exact-int pHash kernel must equal the
