@@ -2465,7 +2465,7 @@ def _quality_report_sql() -> str:
          "SELECT count(*) FROM customer c ANTI JOIN nation n ON c.c_nationkey = n.n_nationkey")
     rule("nation.region_exists",
          "SELECT count(*) FROM nation n ANTI JOIN region r ON n.n_regionkey = r.r_regionkey")
-    # uniqueness (same table order as quality.uniqueness_rules)
+    # uniqueness (same table order as the UNIQUE rules of quality.TPCH_RULES)
     for tbl, key in [
         ("orders", "o_orderkey"),
         ("customer", "c_custkey"),

@@ -1316,15 +1316,22 @@ def table_stats_finish(grid) -> "DataFrame":
             .otherwise(v.cast("long"))
         )
 
-    return raw.select(
-        "column",
-        "n_rows",
-        "n_nulls",
-        "n_distinct",
-        _int_report(F.col("mn_i")).alias("min_int"),
-        _int_report(F.col("mx_i")).alias("max_int"),
-        F.when(is_str, F.col("mn_s")).otherwise(null_str).alias("min_str"),
-        F.when(is_str, F.col("mx_s")).otherwise(null_str).alias("max_str"),
+    # rows in STATS_COLUMNS order: the six rows meet in one partition and
+    # sort there, with no range-sampling job as a global orderBy would run
+    pos = F.array_position(F.array(*[F.lit(c) for c, _ in STATS_COLUMNS]), F.col("column"))
+    return (
+        raw.coalesce(1)
+        .sortWithinPartitions(pos)
+        .select(
+            "column",
+            "n_rows",
+            "n_nulls",
+            "n_distinct",
+            _int_report(F.col("mn_i")).alias("min_int"),
+            _int_report(F.col("mx_i")).alias("max_int"),
+            F.when(is_str, F.col("mn_s")).otherwise(null_str).alias("min_str"),
+            F.when(is_str, F.col("mx_s")).otherwise(null_str).alias("max_str"),
+        )
     )
 
 

@@ -110,21 +110,9 @@ def get_spark(app_name: str = "beauty_lakehouse_spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.driver.maxResultSize", "4g")
-        # UI off by default (test/bench noise); SPARK_GRAFT_UI=1 turns
-        # it on for tooling that reads the /api/v1 status endpoints
-        # (scripts/scale_curve.py records per-query shuffle bytes)
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
+        # no UI server; counters are read from the in-process status store
+        .config("spark.ui.enabled", "false")
     )
-    if os.environ.get("SPARK_GRAFT_UI") == "1":
-        # The shuffle meter (scripts/scale_curve.py) sums per-stage
-        # shuffleWriteBytes from the status store; long syn100x runs
-        # can exceed the default 1000 retained stages, silently
-        # undercounting (ADVICE r8). Retain enough for the longest
-        # measured run; the meter also warns near this limit.
-        builder = builder.config("spark.ui.retainedStages", "40000")
     for k, v in DEFAULT_CONF.items():
         builder = builder.config(k, v)
     # Delta seam: when delta-spark is importable (not in this container

@@ -154,6 +154,17 @@ def test_table_stats_finish_reports_every_column_of_an_empty_grid(spark, sf_dir)
     assert all((r.n_rows, r.n_nulls, r.n_distinct) == (0, 0, 0) for r in rows)
 
 
+@pytest.mark.parametrize("partitions", [1, 8])
+def test_table_stats_rows_come_in_stats_columns_order(spark, sf_dir, partitions):
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        rows = quality.q_table_stats(spark, sf_dir).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert [r.column for r in rows] == [c for c, _ in quality.STATS_COLUMNS]
+
+
 def test_quantile_sketches_brackets_exact_percentiles(spark, sf_dir):
     """Every (target, quantile) row's [lo_cents, hi_cents] bracket
     must CONTAIN the exact nearest-rank percentile, with the DDSketch
