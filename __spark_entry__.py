@@ -1912,11 +1912,10 @@ def _q_rate_capped_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     correct (a late earlier event displaces a kept row at the next
     emission) and micro-batch-slicing-independent (collect_list up to
     a deterministic sort is order-insensitive). Replaces the
-    ``applyInPandasWithState`` min-k form for the gate (VERDICT r11
-    ask #4: that channel floors at ~45µs/group × 95k (user, hour) keys
-    at sf0.1 ≈ 4.3s; this plan never leaves whole-stage codegen — the
-    Pandas-state twin stays in streaming/stateful.py as the bounded-
-    state alternative). Behind the SAME oracle row as the batch
+    ``applyInPandasWithState`` min-k form (VERDICT r11 ask #4: that
+    channel floored at ~45µs/group × 95k (user, hour) keys at sf0.1 ≈
+    4.3s; this plan never leaves whole-stage codegen, and the Pandas
+    form is deleted). Behind the SAME oracle row as the batch
     ``events_rate_capped`` — the 19th oracle-matched streaming drain."""
     import uuid
 
@@ -1937,10 +1936,11 @@ def _q_rate_capped_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_domain_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL-dedup-at-ingest: per-URL smallest-doc_id crawl + crawl
-    count maintained as min-1 ``applyInPandasWithState`` state over
-    the documents landing stream (the k=1 instance of the bounded
-    min-k merge — associative/commutative, so the winner table is
-    micro-batch-slicing-independent), finished through the SHARED
+    count maintained as a JVM streaming aggregate over the documents
+    landing stream — ``min(struct(doc_id, n_tok, n_distinct))`` plus
+    ``count(*)`` as crawl count and version stamp (min is associative/
+    commutative, so the winner table is micro-batch-slicing-
+    independent) — finished through the SHARED
     ``curation.domain_mixture_finish`` tail. Behind the SAME oracle
     row as the batch ``domain_dedup_mixture`` — the 24th
     oracle-matched streaming drain."""
@@ -2034,10 +2034,11 @@ def _q_nb_lang_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_kaplan_meier_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survival-at-ingest: per-customer (first, second) order dates
-    maintained as min-2 ``applyInPandasWithState`` state over the
-    orders landing stream (the same associative/commutative bounded
-    top-k merge as the rate-cap drain, plus the per-key max date so
-    censoring needs nothing beyond the snapshot), finished through the
+    maintained as a JVM streaming aggregate over the orders landing
+    stream — ``slice(array_sort(collect_list(struct(days,
+    o_orderkey))), 1, 2)``, the rate-cap drain's shape, plus the
+    per-key max date so censoring needs nothing beyond the snapshot
+    and ``count(*)`` as the version stamp — finished through the
     SHARED ``operators.events.km_curve`` tail. Behind the same oracle
     row as the batch ``kaplan_meier_repeat`` — the 20th oracle-matched
     streaming drain."""

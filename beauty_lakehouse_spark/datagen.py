@@ -374,15 +374,26 @@ class BeautyDataset:
 
     def metadata(self, seed: int = SEED) -> dict:
         """Run manifest (reference S10, generate_data.py:321-331)."""
-        return {
-            "seed": seed,
-            "n_customers": self.customers.count(),
-            "n_products": self.products.count(),
-            "n_orders": self.orders.count(),
-            "n_order_items": self.order_items.count(),
-            "min_items_per_order": 1,
-            "max_items_per_order": 6,
-        }
+        return run_manifest(
+            {
+                "customers": self.customers.count(),
+                "products": self.products.count(),
+                "orders": self.orders.count(),
+                "order_items": self.order_items.count(),
+            },
+            seed,
+        )
+
+
+def run_manifest(rows: dict[str, int], seed: int = SEED) -> dict:
+    """The run manifest from each table's row count (``rows`` keyed
+    customers, products, orders, order_items)."""
+    return {
+        "seed": seed,
+        **{f"n_{name}": n for name, n in rows.items()},
+        "min_items_per_order": 1,
+        "max_items_per_order": 6,
+    }
 
 
 def generate(

@@ -1750,9 +1750,11 @@ def q_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ≤ HB_ROUNDS+1 rows, consumed by the nf_max broadcast AND the
     # main/cross branches — without the checkpoint each subtree re-ran
-    # the whole HyperBall register pipeline (r14 §1.2)
+    # the whole HyperBall register pipeline (r14 §1.2). Eager, because
+    # the broadcast and main jobs run at once: each would compute a
+    # lazy checkpoint's partition itself
     nf = q_hyperball_neighborhood(spark, sf_dir).localCheckpoint(
-        eager=False
+        eager=True
     )
     mx = nf.filter(F.col("round") == HB_ROUNDS).select(
         F.col("sum_ball_est").alias("nf_max")

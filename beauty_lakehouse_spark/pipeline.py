@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import datagen, sources
@@ -85,7 +85,9 @@ def run_lakehouse_pipeline(
     raw_dir = os.path.join(base_dir, "raw")
     curated_dir = os.path.join(base_dir, "curated")
 
-    # 1. generate (distributed, seed-stable) and land the raw zone as CSV
+    # 1. generate (distributed, seed-stable) and land the raw zone as
+    # CSV; each write counts its own rows (an observed metric), so no
+    # job re-runs the generator to count them
     ds = datagen.generate(spark, n_customers, n_products, n_orders)
     tables = {
         "customers": ds.customers,
@@ -93,8 +95,14 @@ def run_lakehouse_pipeline(
         "orders": ds.orders,
         "order_items": ds.order_items,
     }
+    rows: dict[str, int] = {}
     for name, df in tables.items():
-        sources.write_csv(df, os.path.join(raw_dir, name))
+        obs = Observation()
+        sources.write_csv(
+            df.observe(obs, F.count(F.lit(1)).alias("n")),
+            os.path.join(raw_dir, name),
+        )
+        rows[name] = obs.get["n"]
 
     # 2. raw → curated: declared-schema CSV read (FAILFAST), then
     # parquet/Delta with read-back validation (S5)
@@ -113,10 +121,12 @@ def run_lakehouse_pipeline(
             fmt = sources.write_curated(df, path, partition_by=["order_year"])
         else:
             fmt = sources.write_curated(df, path)
-        validation[name] = sources.validate_curated(
-            spark, path, expected_rows=tables[name].count(), fmt=fmt
-        )
+        # one read-back, with the schema from the table's _delta_log:
+        # validated, counted, and reused downstream
         cur = sources.read_curated(spark, path, fmt)
+        validation[name] = sources.validate_curated(
+            spark, path, expected_rows=rows[name], fmt=fmt, df=cur
+        )
         if name == "orders":
             cur = cur.drop("order_year")
         curated[name] = cur
@@ -133,7 +143,7 @@ def run_lakehouse_pipeline(
     fact = build_fact_sales(cds.orders, cds.order_items, cds.products)
     by_category = revenue_by_category(fact)
 
-    manifest = ds.metadata()
+    manifest = datagen.run_manifest(rows)
     manifest["curated_format"] = fmt
     sources.write_metadata(os.path.join(base_dir, "metadata.json"), manifest)
 

@@ -198,16 +198,31 @@ def write_curated(
 
 
 def read_curated(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
-    """Curated-zone source (S4)."""
-    return spark.read.format(_curated_format(spark, fmt)).load(path)
+    """Curated-zone source (S4). A parquet stand-in that carries a
+    valid ``_delta_log`` is read with the log's schema, as a Delta
+    reader would, so no job runs to infer it from a footer; with an
+    invalid log (which ``validate_curated`` reports) the footer
+    schema is used."""
+    fmt = _curated_format(spark, fmt)
+    reader = spark.read.format(fmt)
+    if fmt == "parquet" and os.path.isdir(os.path.join(path, "_delta_log")):
+        from . import delta_log as dlog
+
+        try:
+            reader = reader.schema(dlog.replay_log(path)["schema"])
+        except ValueError:
+            pass
+    return reader.load(path)
 
 
 def validate_curated(
     spark: SparkSession, path: str, expected_rows: int | None = None,
-    fmt: str | None = None,
+    fmt: str | None = None, df: DataFrame | None = None,
 ) -> dict:
     """Post-write validation scan (S5, 01_dataLake_ingestion.ipynb:620-667):
-    assert the table artifacts exist, read back, count, diff schema."""
+    assert the table artifacts exist, read back, count, diff schema.
+    ``df`` is a read-back of ``path`` to validate instead of reading
+    the table again."""
     fmt = _curated_format(spark, fmt)
     result: dict = {"path": path, "format": fmt}
     if fmt == "delta":
@@ -241,7 +256,8 @@ def validate_curated(
         except ValueError as e:
             result["delta_log_valid"] = False
             result["delta_log_error"] = str(e)
-    df = read_curated(spark, path, fmt)
+    if df is None:
+        df = read_curated(spark, path, fmt)
     result["n_rows"] = df.count()
     result["columns"] = df.columns
     if expected_rows is not None:

@@ -37,8 +37,6 @@ from .pipelines import (  # noqa: F401
 from .stateful import (  # noqa: F401
     km_firsts,
     km_firsts_finish,
-    rate_capped_events,
-    rate_capped_finish,
     url_dedup_finish,
     url_dedup_state,
 )

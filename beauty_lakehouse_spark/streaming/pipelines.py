@@ -130,10 +130,10 @@ def _spread_stream_scan(df: DataFrame, path: str, cores: int) -> DataFrame:
     Applied to the DOCUMENTS source only: its consumers run real text
     kernels (DSIR bigram hashing, NB tokenization, winnowing, pHash
     decode) where the single scan task is the measured bottleneck.
-    The orders/events sources feed cheap parses into aggregates or
-    Python-stateful operators that re-shuffle by key immediately —
-    there the extra per-micro-batch exchange only adds cost (measured:
-    kaplan_meier_streamed 3.7 → 5.4 s with the orders scan spread)."""
+    The orders/events sources feed cheap parses into keyed state that
+    re-shuffles by key immediately — there the extra per-micro-batch
+    exchange only adds cost (measured on the former Python-state
+    kaplan_meier_streamed: 3.7 → 5.4 s with the orders scan spread)."""
     files = len(_data_file_sizes(path))
     if files == 0:
         return df
@@ -269,10 +269,10 @@ def ks_value_grid(events: DataFrame) -> DataFrame:
 
 
 def rate_capped_grid(events: DataFrame, k: int | None = None) -> DataFrame:
-    """JVM-side streaming rate-cap grid — the whole-stage-codegen twin
-    of ``stateful.rate_capped_events`` (VERDICT r11 ask #4: the Python
-    ``applyInPandasWithState`` channel floors at ~45µs per (user, hour)
-    group, ~4.3s over sf0.1's 95k keys; this form never leaves the JVM).
+    """JVM-side streaming rate-cap grid (VERDICT r11 ask #4: the
+    Python ``applyInPandasWithState`` min-k form it replaced floored at
+    ~45µs per (user, hour) group, ~4.3s over sf0.1's 95k keys; this
+    form never leaves the JVM).
 
     One built-in streaming aggregate per (user, clock hour): the kept
     set is ``slice(array_sort(collect_list(struct(us, event_id))), k)``
@@ -281,15 +281,15 @@ def rate_capped_grid(events: DataFrame, k: int | None = None) -> DataFrame:
     per-key ``count(*)`` is a monotone version stamp (state changes ⇒
     count strictly grows ⇒ last-version-wins picks the final snapshot).
 
-    State tradeoff vs the Pandas min-k form: that one holds ≤ k pairs
-    per key but pays the Python channel per group per batch; this one
+    State tradeoff vs a bounded min-k state: that would hold ≤ k pairs
+    per key but pay the Python channel per group per batch; this one
     holds the key's events-so-far JVM-side (naturally bounded by one
     user's activity in one clock hour; production adds
     ``withWatermark`` so closed hours are purged — omitted here because
     the batch-equivalence drain must not drop late fixture slices)."""
-    from .stateful import RATE_CAP_K
+    from ..operators.events import RATE_CAP_PER_HOUR
 
-    kk = RATE_CAP_K if k is None else k
+    kk = RATE_CAP_PER_HOUR if k is None else k
     us = F.unix_micros(F.col("ts"))
     keyed = (
         events.select("event_id", "user_id", us.alias("us"))
@@ -358,12 +358,12 @@ def run_available_now(
         state_partitions = derived
         # The volume-derived hint models JVM state-store cost (load/
         # commit/fsync per partition per micro-batch). A Python-stateful
-        # drain (applyInPandasWithState) spends its per-partition budget
-        # in per-group Python compute instead, so shrinking partitions
-        # starves it of cores: measured at sf0.1, the KM min-2 drain
-        # runs 13.2 s at the 4-partition hint vs 5.6 s at the session's
-        # 32, and the URL-dedup drain 4.6 s vs 2.9 s — identical output
-        # either way. Keep those at the session's cores; an explicit
+        # drain (applyInPandasWithState; here ``purchase_milestones``)
+        # spends its per-partition budget in per-group Python compute
+        # instead, so shrinking partitions starves it of cores: measured
+        # at sf0.1, the former Python min-2 KM drain ran 13.2 s at the
+        # 4-partition hint vs 5.6 s at the session's 32, with identical
+        # output. Keep such a drain at the session's cores; an explicit
         # ``state_partitions=`` argument still wins.
         if state_partitions is not None:
             plan = result._jdf.queryExecution().analyzed().toString()

@@ -26,14 +26,17 @@ Layout::
                                   "partition_by": "order_year",
                                   "dirs": {"1995": "v00000001/__pt=1995",
                                            ...},
-                                  "columns": [...], "n_rows": N}
+                                  "columns": [...],
+                                  "schema": {StructType JSON}}
       v00000001/__pt=1995/*.parquet
       v00000002/__pt=1996/*.parquet      # v2 merge touched only 1996
 
 The partition column is DUPLICATED into the directory key (``__pt``)
 rather than stripped by ``partitionBy`` — data files keep the full
 schema, so a snapshot read is a plain multi-path parquet scan with no
-basePath/partition-discovery coupling between versions.
+basePath/partition-discovery coupling between versions. The manifest
+also records the schema as Spark reads the files back, so a snapshot
+read passes it to the reader and starts no footer-inference job.
 """
 
 from __future__ import annotations
@@ -44,6 +47,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import memo
 
@@ -116,6 +120,34 @@ def latest_version(path: str) -> int:
         if f.endswith(".json") and f[:-5].isdigit()
     ]
     return max(versions, default=0)
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable — how Spark
+    reads any file back (its ``asNullable``)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def manifest_schema(m: dict) -> T.StructType:
+    """The snapshot's schema as the data files read back."""
+    return T.StructType.fromJson(m["schema"])
+
+
+def _read_dirs(spark: SparkSession, m: dict, dirs: list[str]) -> DataFrame:
+    """Scan ``dirs`` of the snapshot ``m`` with the manifest's schema:
+    no job runs to infer it from a parquet footer."""
+    if not dirs:
+        return spark.createDataFrame([], manifest_schema(m))
+    return spark.read.schema(manifest_schema(m)).parquet(*dirs)
 
 
 def read_manifest(path: str, version: int | None = None) -> dict:
@@ -195,6 +227,7 @@ def write_versioned(
         "partition_by": partition_by,
         "dirs": dirs,
         "columns": df.columns,
+        "schema": _nullable(df.schema).jsonValue(),
     })
     _commit_delta_log(path, version, dirs, schema=df.schema, op="WRITE")
     return version
@@ -207,12 +240,9 @@ def read_versioned(
     of the manifest's data directories — a plain multi-path parquet
     scan, columns in the manifest's declared order."""
     m = read_manifest(path, version)
-    dirs = [os.path.join(path, d) for d in m["dirs"].values()]
-    if not dirs:
-        return spark.createDataFrame([], schema=", ".join(
-            f"`{c}` string" for c in m["columns"]
-        ))
-    return spark.read.parquet(*dirs).select(*m["columns"])
+    return _read_dirs(
+        spark, m, [os.path.join(path, d) for d in m["dirs"].values()]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -314,11 +344,9 @@ def merge_upsert(
             for k, d in m["dirs"].items()
             if k in affected
         ]
-        if tgt_dirs:
-            tgt_affected = spark.read.parquet(*tgt_dirs).select(*m["columns"])
-        else:
-            tgt_affected = target.limit(0)
-        merged = _merged_state(tgt_affected, source, keys, deletes)
+        merged = _merged_state(
+            _read_dirs(spark, m, tgt_dirs), source, keys, deletes
+        )
         _write_partitioned(merged, part_col, abs_dir)
         new_dirs = _scan_partition_dirs(path, data_dir)
         # inherit untouched partitions; affected ones point at the new
@@ -332,6 +360,7 @@ def merge_upsert(
         "partition_by": part_col,
         "dirs": dirs,
         "columns": m["columns"],
+        "schema": m["schema"],
     })
     _commit_delta_log(path, version, dirs, op="MERGE")
     return version
@@ -383,13 +412,8 @@ def table_changes(
         if b is not None:
             to_dirs.append(os.path.join(path, b))
 
-    def read_dirs(dirs: list[str]) -> DataFrame:
-        if not dirs:
-            empty = read_versioned(spark, path, to_version).limit(0)
-            return empty.select(*cols)
-        return spark.read.parquet(*dirs).select(*cols)
-
-    old, new = read_dirs(from_dirs), read_dirs(to_dirs)
+    old = _read_dirs(spark, m_to, from_dirs)
+    new = _read_dirs(spark, m_to, to_dirs)
     tagged = new.select(
         *cols, F.lit(1).alias("__in_new"), F.lit(0).alias("__in_old")
     ).unionByName(
@@ -494,8 +518,7 @@ def compact(
         n_files = sum(f.endswith(".parquet") for f in os.listdir(abs_d))
         if n_files <= max_files and not cluster_by:
             continue
-        df = spark.read.parquet(abs_d)
-        out = df.repartition(max_files)
+        out = _read_dirs(spark, m, [abs_d]).repartition(max_files)
         if cluster_by:
             out = out.sortWithinPartitions(*cluster_by)
         new_rel = (
@@ -514,6 +537,7 @@ def compact(
         "partition_by": m.get("partition_by"),
         "dirs": dirs,
         "columns": m["columns"],
+        "schema": m["schema"],
     })
     _commit_delta_log(path, version, dirs, op="OPTIMIZE")
     return version

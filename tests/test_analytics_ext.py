@@ -2736,6 +2736,25 @@ def test_effective_diameter_consistent(spark, sf_dir):
     assert g.eff_diameter_milli <= g.eff_diameter_r * 1000
 
 
+def test_effective_diameter_reads_a_materialized_profile(spark, sf_dir):
+    """The HyperBall profile is materialized once, before any job of
+    the result reads it. The nf_max broadcast and the main branch run
+    at once, and both computed a lazy checkpoint's partition (Spark
+    logged ``Block rdd_… already exists``). Every RDD the built plan
+    reads is already checkpointed."""
+    from beauty_lakehouse_spark.operators.graph import q_effective_diameter
+
+    df = q_effective_diameter(spark, sf_dir)
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    rdds = []
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() == "LogicalRDD":
+            rdds.append(leaf.rdd())
+    assert rdds
+    assert all(rdd.isCheckpointed() for rdd in rdds)
+
+
 def test_isotonic_calibration_pava(spark, sf_dir):
     """The minimax fit equals classic pool-adjacent-violators run in
     pure python on the same (already oracle-verified) reliability

@@ -32,6 +32,32 @@ def test_full_pipeline(spark, tmp_path):
     assert res.manifest["n_orders"] == 800
 
 
+def test_pipeline_counts_rows_from_its_own_writes(spark, tmp_path):
+    """Each table's row count comes from its own CSV write, not from a
+    job that re-runs the generator, and each curated table is read
+    back once: the pipeline runs at most 25 Spark jobs before it
+    returns, and the manifest counts are the raw zone's row counts."""
+    import os
+
+    sc = spark.sparkContext
+    group = "test_pipeline_counts_rows_from_its_own_writes"
+    sc.setJobGroup(group, "lakehouse pipeline")
+    try:
+        res = run_lakehouse_pipeline(
+            spark, str(tmp_path), n_customers=100, n_products=30, n_orders=300
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 25, n_jobs
+    for name in ("customers", "products", "orders", "order_items"):
+        raw = spark.read.option("header", True).csv(
+            os.path.join(res.raw_dir, name)
+        )
+        n = raw.count()
+        assert res.manifest[f"n_{name}"] == n == res.validation[name]["n_rows"]
+
+
 def test_orders_partitioned_by_year(spark, tmp_path):
     import os
 

@@ -41,6 +41,9 @@ READ_MIX = (
     "train_val_test_split", "knn_brute",
 )
 
+#: The two min-k streaming drains, each a fresh streaming query per run.
+MIN_K_DRAINS = ("kaplan_meier_streamed", "domain_dedup_streamed")
+
 
 def _compiles(spark) -> int:
     """Generated classes compiled in this JVM so far."""
@@ -54,11 +57,12 @@ def test_session_sizes_the_codegen_cache(spark):
 
 
 def test_recurring_read_mix_compiles_no_new_class(spark, sf_dir, tmp_path):
-    """The read mix over a second, byte-identical fixture copy reuses
-    every class the first copy compiled: the cache holds the mix's
-    working set (~160 classes, above Spark's default of 100 entries,
-    which recompiles ~150 of them each round), and a class's source
-    does not depend on the order AQE numbers the stages in."""
+    """The read mix and the min-k drains over a second, byte-identical
+    fixture copy reuse every class the first copy compiled: the cache
+    holds the mix's working set (~160 classes, above Spark's default
+    of 100 entries, which recompiles ~150 of them each round), a
+    class's source does not depend on the order AQE numbers the stages
+    in, and a drain's does not depend on its run's query name."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
@@ -66,7 +70,7 @@ def test_recurring_read_mix_compiles_no_new_class(spark, sf_dir, tmp_path):
     for i in (1, 2):
         fx = shutil.copytree(sf_dir, tmp_path / f"fx{i}")
         before = _compiles(spark)
-        for name in READ_MIX:
+        for name in READ_MIX + MIN_K_DRAINS:
             qs[name](spark, str(fx)).collect()
         new.append(_compiles(spark) - before)
     assert new[1] == 0, f"classes compiled per round: {new}"

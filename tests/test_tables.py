@@ -191,6 +191,53 @@ def test_table_changes_feed(spark, tmp_path):
     assert tables.table_changes(spark, path, 2, 2).count() == 0
 
 
+def test_snapshot_reads_take_the_schema_from_the_manifest(spark, tmp_path):
+    """The manifest records the schema Spark reads the files back with
+    (nested fields too), so a snapshot read and a change feed start no
+    Spark job before an action."""
+    from pyspark.sql import types as T
+
+    i = T.IntegerType()
+    nested = spark.createDataFrame(
+        [(1, [1, 2], (3,), {"a": 4})],
+        T.StructType([
+            T.StructField("k", i, False),
+            T.StructField("a", T.ArrayType(i, False), False),
+            T.StructField("s", T.StructType([T.StructField("x", i, False)])),
+            T.StructField("mp", T.MapType(T.StringType(), i, False)),
+        ]),
+    )
+    npath = str(tmp_path / "nested")
+    tables.write_versioned(nested, npath)
+    path = str(tmp_path / "tbl")
+    tables.write_versioned(
+        _df(spark, [(1, "a", 1995), (2, "b", 1996)]), path, "year"
+    )
+    tables.merge_upsert(spark, path, _df(spark, [(2, "B!", 1996)]), keys=["k"])
+    for p in (npath, path):
+        m = tables.read_manifest(p)
+        dirs = [os.path.join(p, d) for d in m["dirs"].values()]
+        assert tables.manifest_schema(m) == spark.read.parquet(*dirs).schema
+
+    sc = spark.sparkContext
+    group = "test_snapshot_reads_take_the_schema_from_the_manifest"
+    sc.setJobGroup(group, "versioned reads")
+    try:
+        snap = tables.read_versioned(spark, path)
+        old = tables.read_versioned(spark, path, 1)
+        feed = tables.table_changes(spark, path, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert {(r.k, r.v, r.year) for r in snap.collect()} == {
+        (1, "a", 1995), (2, "B!", 1996)
+    }
+    assert old.count() == 2
+    assert {(r.change_type, r.v) for r in feed.collect()} == {
+        ("delete", "b"), ("insert", "B!")
+    }
+
+
 def test_vacuum_retention(spark, tmp_path):
     """vacuum keeps the newest snapshots working (including dirs they
     inherit from older versions) and removes everything else."""
