@@ -783,7 +783,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the reconstructed surviving text
         "substring_dedup": dedup.q_substring_dedup,
         "exactsubstr_spans": dedup.q_exactsubstr_spans,
-        # maintained ANN index: integer-portable signatures + CoW MERGE
+        # maintained ANN index: integer-portable signatures + MERGE
         # (maintained ≡ rebuild, the IVM law — oracle recomputes from
         # scratch)
         "lsh_index_maintained": similarity.q_lsh_index_maintained,
@@ -889,12 +889,12 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pca_power_iteration": similarity.q_pca_power_iteration,
         "embedding_random_projection": similarity.q_embedding_random_projection,
         "label_embedding_scatter": similarity.q_label_embedding_scatter,
-        # curated-zone table management: versioned CoW MERGE -> snapshot
-        # read (oracle covers the whole write->merge->read path), plus
-        # the v1->v2 CDC change feed (manifest-diff pruned)
+        # curated-zone table management: versioned merge-on-read MERGE
+        # -> snapshot read (oracle covers the whole write->merge->read
+        # path), plus the v1->v2 CDC change feed (touched keys only)
         "merge_upsert_state": tables.q_merge_upsert_state,
         # anti-entropy repair capstone: detect→re-ship→verify via
-        # partition fingerprints + one stale-partition CoW MERGE
+        # partition fingerprints + one stale-partition MERGE
         "orders_antientropy_sync": tables.q_orders_antientropy_sync,
         "incremental_join_state": tables.q_incremental_join_state,
         "merge_changes_feed": tables.q_merge_changes_feed,
@@ -9731,7 +9731,7 @@ def oracle_sql() -> dict[str, str]:
     )
 
     # Maintained media dedup: the oracle is the REBUILD (full-corpus
-    # clusters from scratch) — hash equality proves the CoW-merged
+    # clusters from scratch) — hash equality proves the MERGEd
     # pHash index reproduces it (the lsh_index_maintained IVM law
     # applied to the pair graph; multimodal.q_media_dedup_maintained)
     out["media_dedup_maintained"] = out["media_dedup_clusters"]

@@ -12,8 +12,8 @@ surveyed in /root/repo/SURVEY.md), re-expressed Spark-first:
                    text analysis, multimodal plumbing).
 - ``sources``    — CSV / parquet / JSON-document / Delta(optional) IO.
 - ``tables``     — versioned curated tables: manifest snapshots, time
-                   travel, copy-on-write MERGE/upsert at partition
-                   granularity, OPTIMIZE-style compaction/clustering.
+                   travel, merge-on-read MERGE/upsert (one delta file
+                   per batch), OPTIMIZE-style compaction/clustering.
 - ``functions``  — portable column helpers (cross-engine stable hashing,
                    exact-decimal money arithmetic, epoch-µs timestamps).
 - ``streaming``  — Structured Streaming pipelines (windows, watermarks,

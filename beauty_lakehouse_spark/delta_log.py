@@ -12,26 +12,38 @@ commit N = adds/removes), readable by any Delta reader, and S5's
 validation scan checks a real `_delta_log`, not a bare directory flag.
 
 Protocol subset implemented (reader version 1 / writer version 2 —
-the baseline feature set; no checkpoints, which are an optimization
-a log this size never needs):
+the baseline feature set — raised to reader 3 / writer 7 with one named
+table feature once a table takes a merge-on-read MERGE; no checkpoints,
+which are an optimization a log this size never needs):
 
 - ``{version:020d}.json`` commit files, one JSON action per line;
-- ``protocol``: minReaderVersion/minWriterVersion;
+- ``protocol``: minReaderVersion/minWriterVersion, plus readerFeatures/
+  writerFeatures (``MOR_FEATURE``) on a merge-on-read table;
 - ``metaData``: id (deterministic UUIDv5 of the table path), format
   ``{"provider": "parquet"}``, ``schemaString`` (the Spark StructType
   JSON — the exact representation Delta uses), partitionColumns,
   configuration, createdTime;
 - ``add``: relative path, partitionValues, size, modificationTime,
   dataChange;
-- ``remove``: relative path, deletionTimestamp, dataChange;
+- ``remove``: relative path, deletionTimestamp, dataChange (it also
+  retires a pending ``mergeDelta`` file);
+- ``mergeDelta`` (this engine's action, guarded by ``MOR_FEATURE``):
+  one file of a merge-on-read MERGE batch — upsert rows plus delete
+  keys, tagged (``tables`` module) — with path, size,
+  modificationTime, the commit ``version`` it belongs to and the
+  ``mergeKeys``. It is NOT an ``add``: its rows apply on top of the
+  live files, so a reader that does not know the feature must refuse
+  the table rather than scan it, which is what the protocol raise
+  makes a stock Delta reader do;
 - ``commitInfo``: operation tag (informational, like every writer).
 
 Replay semantics (the validator): scan commits in version order; the
-live file set after commit k = adds minus removes so far. A valid log
-never removes a file that isn't live and never re-adds a live file
-with conflicting metadata. `validate_delta_log` replays the whole log
-and cross-checks the final live set against the parquet files actually
-referenced on disk.
+live file set after commit k = adds minus removes so far, and the
+pending delta files = mergeDeltas minus removes, in commit order. A
+valid log never removes a file that isn't live or pending and never
+re-adds one. `validate_delta_log` replays the whole log and
+cross-checks the final live and pending sets against the parquet files
+actually referenced on disk.
 """
 
 from __future__ import annotations
@@ -48,6 +60,18 @@ _LOG_DIR = "_delta_log"
 #: Baseline protocol: reader 1 / writer 2 (appendOnly/invariants-free
 #: tables need nothing newer; every Delta reader supports this).
 PROTOCOL_ACTION = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
+
+#: The table feature a merge-on-read table declares: its snapshot is the
+#: live files with the pending ``mergeDelta`` files applied on top.
+MOR_FEATURE = "mergeOnReadKeyDeltas"
+MOR_PROTOCOL_ACTION = {
+    "protocol": {
+        "minReaderVersion": 3,
+        "minWriterVersion": 7,
+        "readerFeatures": [MOR_FEATURE],
+        "writerFeatures": [MOR_FEATURE],
+    }
+}
 
 
 def _log_path(table_path: str, version: int) -> str:
@@ -130,6 +154,22 @@ def add_action(
     }
 
 
+def merge_delta_action(
+    table_path: str, rel_path: str, version: int, keys: list[str]
+) -> dict:
+    st = os.stat(os.path.join(table_path, rel_path))
+    return {
+        "mergeDelta": {
+            "path": quote(rel_path, safe="/=%"),
+            "size": st.st_size,
+            "modificationTime": int(st.st_mtime * 1000),
+            "version": version,
+            "mergeKeys": list(keys),
+            "dataChange": True,
+        }
+    }
+
+
 def remove_action(rel_path: str, timestamp_ms: int = 0) -> dict:
     return {
         "remove": {
@@ -165,15 +205,24 @@ def commit_snapshot(
     live_rel_dirs: list[str],
     partition_columns: list[str] | None = None,
     operation: str = "WRITE",
+    delta_rel_dirs: dict[str, list[str]] | None = None,
 ) -> str:
     """Commit ``version`` so the log's live set equals the parquet
-    files under ``live_rel_dirs``: version 0 emits protocol+metaData+
-    adds (``schema`` required); later versions emit adds for
-    newly-live files and removes for files that left the live set (the
-    copy-on-write commit shape — exactly how a Delta MERGE/OVERWRITE
-    logs itself; the metaData action carries forward by replay)."""
+    files under ``live_rel_dirs`` and its pending delta set equals the
+    files under ``delta_rel_dirs`` (rel dir -> merge keys): version 0
+    emits protocol+metaData+adds (``schema`` required); later versions
+    emit adds and ``mergeDelta``s for newly-live files and removes for
+    files that left either set (a full write or a compaction retires
+    the deltas it folds; the metaData action carries forward by
+    replay). The first commit with a pending delta raises the protocol
+    to ``MOR_FEATURE``."""
     pc = list(partition_columns or [])
     live = _rel_parquet_files(table_path, live_rel_dirs)
+    deltas = {
+        p: keys
+        for rel, keys in (delta_rel_dirs or {}).items()
+        for p in _rel_parquet_files(table_path, [rel])
+    }
     actions: list[dict] = [
         {"commitInfo": {"operation": operation, "engineInfo":
                         "beauty_lakehouse_spark delta_log writer"}}
@@ -181,15 +230,24 @@ def commit_snapshot(
     if version == 0:
         if schema is None:
             raise ValueError("commit 0 requires the table schema")
-        actions.append(PROTOCOL_ACTION)
+        actions.append(MOR_PROTOCOL_ACTION if deltas else PROTOCOL_ACTION)
         actions.append(metadata_action(table_path, schema, pc))
         prev_live: set[str] = set()
+        prev_deltas: set[str] = set()
     else:
-        prev_live = set(replay_log(table_path, version - 1)["live_files"])
-    new_files = [p for p in live if p not in prev_live]
-    gone = sorted(prev_live - set(live))
+        prev = replay_log(table_path, version - 1)
+        prev_live = set(prev["live_files"])
+        prev_deltas = {d["path"] for d in prev["deltas"]}
+        if deltas and MOR_FEATURE not in prev["protocol"].get("readerFeatures", []):
+            actions.append(MOR_PROTOCOL_ACTION)
+    gone = sorted((prev_live - set(live)) | (prev_deltas - set(deltas)))
     actions += [remove_action(p) for p in gone]
-    actions += [add_action(table_path, p, pc) for p in new_files]
+    actions += [add_action(table_path, p, pc) for p in live if p not in prev_live]
+    actions += [
+        merge_delta_action(table_path, p, version, keys)
+        for p, keys in sorted(deltas.items())
+        if p not in prev_deltas
+    ]
     return write_commit(table_path, version, actions)
 
 
@@ -211,10 +269,13 @@ def log_versions(table_path: str) -> list[int]:
 
 def replay_log(table_path: str, version: int | None = None) -> dict:
     """Replay commits 0..version (default: all) per the protocol's
-    state-reconstruction rule. Returns {live_files, partition_values,
-    schema, partition_columns, protocol, n_commits}. Raises ValueError
-    on any protocol violation (gap in versions, remove of a non-live
-    file, duplicate live add, missing protocol/metaData in commit 0)."""
+    state-reconstruction rule. Returns {live_files, file_sizes,
+    partition_values, deltas, schema, partition_columns, protocol,
+    logged_deltas, n_commits}; ``deltas`` are the pending ``mergeDelta``
+    actions in commit order, paths decoded. Raises ValueError on any
+    protocol violation (gap in versions, remove of a file neither live
+    nor pending, duplicate live add or delta, a delta logged under
+    another commit's version, missing protocol/metaData in commit 0)."""
     versions = log_versions(table_path)
     if version is not None:
         versions = [v for v in versions if v <= version]
@@ -224,6 +285,8 @@ def replay_log(table_path: str, version: int | None = None) -> dict:
         raise ValueError(f"version gap in delta log: {versions}")
 
     live: dict[str, dict] = {}
+    deltas: dict[str, dict] = {}
+    logged_deltas = False
     meta: dict | None = None
     protocol: dict | None = None
     for v in versions:
@@ -240,18 +303,35 @@ def replay_log(table_path: str, version: int | None = None) -> dict:
                 elif "add" in action:
                     a = action["add"]
                     p = unquote(a["path"])
-                    if p in live:
+                    if p in live or p in deltas:
                         raise ValueError(
                             f"v{v}: add of already-live file {p}"
                         )
                     live[p] = a
+                elif "mergeDelta" in action:
+                    a = action["mergeDelta"]
+                    p = unquote(a["path"])
+                    if a.get("version") != v:
+                        raise ValueError(
+                            f"v{v}: mergeDelta {p} logged for version "
+                            f"{a.get('version')}"
+                        )
+                    if p in live or p in deltas:
+                        raise ValueError(
+                            f"v{v}: mergeDelta of already-live file {p}"
+                        )
+                    deltas[p] = {**a, "path": p}
+                    logged_deltas = True
                 elif "remove" in action:
                     p = unquote(action["remove"]["path"])
-                    if p not in live:
+                    if p in live:
+                        del live[p]
+                    elif p in deltas:
+                        del deltas[p]
+                    else:
                         raise ValueError(
                             f"v{v}: remove of non-live file {p}"
                         )
-                    del live[p]
                 # commitInfo / txn / cdc: informational, no state
         if v == 0:
             if protocol is None:
@@ -265,9 +345,11 @@ def replay_log(table_path: str, version: int | None = None) -> dict:
         "partition_values": {
             p: a.get("partitionValues", {}) for p, a in live.items()
         },
+        "deltas": list(deltas.values()),
         "schema": schema,
         "partition_columns": meta.get("partitionColumns", []),
         "protocol": protocol,
+        "logged_deltas": logged_deltas,
         "n_commits": len(versions),
     }
 
@@ -275,21 +357,23 @@ def replay_log(table_path: str, version: int | None = None) -> dict:
 def validate_delta_log(table_path: str) -> dict:
     """Protocol validation of the table's `_delta_log` (the real S5
     check): replays the log (raising on violations), then cross-checks
-    that (a) every live file exists on disk with the logged size and
-    (b) no unlogged parquet file is reachable from the live set's
-    directories. Returns a report dict with ``valid`` plus the replay
-    summary."""
+    that (a) every live and every pending delta file exists on disk
+    with the logged size, (b) no unlogged parquet file is reachable
+    from their directories and (c) a log that ever recorded a
+    ``mergeDelta`` declares ``MOR_FEATURE`` for readers and writers.
+    Returns a report dict with ``valid`` plus the replay summary."""
     state = replay_log(table_path)
+    sizes = dict(state["file_sizes"])
+    sizes.update({d["path"]: d.get("size") for d in state["deltas"]})
     missing, size_mismatch = [], []
-    for rel in state["live_files"]:
+    for rel, logged in sorted(sizes.items()):
         abs_f = os.path.join(table_path, rel)
         if not os.path.isfile(abs_f):
             missing.append(rel)
             continue
-        logged = state["file_sizes"].get(rel)
         if logged is not None and os.path.getsize(abs_f) != logged:
             size_mismatch.append(rel)
-    live_dirs = {os.path.dirname(rel) for rel in state["live_files"]}
+    live_dirs = {os.path.dirname(rel) for rel in sizes}
     unlogged = []
     for d in sorted(live_dirs):
         base = os.path.join(table_path, d)
@@ -298,16 +382,23 @@ def validate_delta_log(table_path: str) -> dict:
         for f in os.listdir(base):
             if f.endswith(".parquet") and not f.startswith((".", "_")):
                 rel = f"{d}/{f}" if d else f
-                if rel not in state["partition_values"]:
+                if rel not in sizes:
                     unlogged.append(rel)
+    proto = state["protocol"]
+    feature_missing = state["logged_deltas"] and not all(
+        MOR_FEATURE in proto.get(k, [])
+        for k in ("readerFeatures", "writerFeatures")
+    )
     return {
-        "valid": not missing and not size_mismatch and not unlogged,
+        "valid": not (missing or size_mismatch or unlogged or feature_missing),
         "n_commits": state["n_commits"],
         "n_live_files": len(state["live_files"]),
+        "n_delta_files": len(state["deltas"]),
         "partition_columns": state["partition_columns"],
-        "protocol": state["protocol"],
+        "protocol": proto,
         "missing_files": missing,
         "size_mismatches": size_mismatch,
         "unlogged_files": unlogged,
+        "protocol_feature_missing": feature_missing,
         "schema_fields": [f.name for f in state["schema"].fields],
     }

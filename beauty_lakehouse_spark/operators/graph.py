@@ -898,7 +898,7 @@ def q_hyperball_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning trick — the edge side never re-shuffles) followed by
     a (node, idx) max-combine; state is ≤ m rows per node regardless
     of ball size. Rounds are unrolled to the HB_ROUNDS constant with
-    lazy checkpoints (the pagerank convention).
+    eager checkpoints (each round's registers have two consumers).
 
     Output: (round, n_nodes, sum_ball_est) for r = 0..HB_ROUNDS."""
     return (
@@ -927,6 +927,11 @@ def _hyperball_ball_estimates(
 
     t = load(spark, sf_dir)
     e = copurchase_edges(t.lineitem).filter(F.col("n_orders") >= 2)
+    # every checkpoint here is eager: `nodes` and every round read the
+    # edges, and each round's registers feed both branches of the next
+    # round (union and propagation join), whose exchanges AQE runs as
+    # concurrent jobs — a lazy checkpoint read by two concurrent jobs
+    # is computed twice
     dir_e = (
         e.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
         .unionByName(
@@ -935,11 +940,11 @@ def _hyperball_ball_estimates(
             )
         )
         .repartition("src")
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     nodes = dir_e.select(F.col("src").alias("node")).distinct()
     regs = hll_registers(nodes, "node", keys=("node",)).localCheckpoint(
-        eager=False
+        eager=True
     )
 
     def _tag(frame: DataFrame, r: int) -> DataFrame:
@@ -956,7 +961,7 @@ def _hyperball_ball_estimates(
             regs.unionByName(prop)
             .groupBy("node", "idx")
             .agg(F.max("m_rho").alias("m_rho"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=True)
         )
         tagged = tagged.unionByName(_tag(regs, r))
     return hll_group_estimate(tagged, ("round", "node")).select(

@@ -2286,7 +2286,7 @@ def phash_pair_clusters(flagged_pairs: DataFrame) -> DataFrame:
 #: Maintained pHash index split: docs below the split form the v1
 #: snapshot; the batch from MEDIA_IDX_OVERLAP up MERGEs in as v2, so
 #: the [overlap, split) band exercises the matched-replace path and
-#: [split, ...) the insert path of the CoW upsert.
+#: [split, ...) the insert path of the upsert.
 MEDIA_IDX_SPLIT = 250
 MEDIA_IDX_OVERLAP = 200
 
@@ -2299,7 +2299,7 @@ def q_media_dedup_maintained(spark, sf_dir: str) -> DataFrame:
     MEDIA_IDX_SPLIT) is written as a versioned table (v1); the
     incoming batch (doc_id >= MEDIA_IDX_OVERLAP — overlapping the
     snapshot, so the MERGE exercises both matched-replace and insert)
-    is MERGEd through the copy-on-write upsert keyed on doc_id (v2);
+    is MERGEd through the merge-on-read upsert keyed on doc_id (v2);
     the near-dup pairs and CC clusters are then derived from the
     MAINTAINED snapshot through the SAME tail as the rebuild.
 
@@ -2309,8 +2309,9 @@ def q_media_dedup_maintained(spark, sf_dir: str) -> DataFrame:
     per-doc independent (a replaced doc's hash row is replaced, and
     no other row depends on it).
 
-    Scale: maintenance costs O(batch) hashes + a CoW rewrite
-    (partition-pruned at production scale); rebuild costs O(corpus).
+    Scale: maintenance costs O(batch) hashes + one delta write of the
+    batch (readers apply it until `tables.compact` folds it); rebuild
+    costs O(corpus).
     The pair/cluster tail runs on the bounded distinct-hash domain
     either way. The index is built once per session and fixture
     (`memo`)."""
@@ -2338,7 +2339,7 @@ def q_run_media_pipeline(spark, sf_dir: str) -> DataFrame:
     """The MEDIA PIPELINE CAPSTONE as a gate entry (VERDICT r12 ask
     #6): `pipeline.run_media_pipeline` — real mixed-container bytes
     (PPM/PNG/JPEG) -> signature-dispatch decode -> exact-int pHash ->
-    maintained (CoW-merged) versioned index -> banded pairs -> CC
+    maintained (MERGEd) versioned index -> banded pairs -> CC
     clusters -> published cluster table — run once per session and
     fixture (`memo`) into a scratch dir, returning the PUBLISHED
     cluster report.

@@ -1745,7 +1745,7 @@ def q_lsh_index_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     and then kept fresh, not rebuilt per batch). The signature table
     for the existing corpus (vec_id < LSH_IDX_SPLIT) is written as a
     versioned table (v1); the incoming batch's signatures are then
-    MERGEd through the copy-on-write upsert path keyed on
+    MERGEd through the merge-on-read upsert path keyed on
     (vec_id, table) — v2 — and the maintained snapshot is returned.
 
     The DuckDB oracle computes the FULL corpus' signatures from
@@ -1754,10 +1754,9 @@ def q_lsh_index_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     only holds because the signatures are integer-deterministic and
     per-vector independent — see `lsh_int_signatures`.
 
-    Scale: maintenance costs O(batch × planes); the merge rewrites
-    only the CoW snapshot (partition-pruned when the index table is
-    partitioned, e.g. by table id at production scale); rebuild costs
-    O(corpus × planes). Composes with `ann_lsh_topk`: the maintained
+    Scale: maintenance costs O(batch × planes); the merge writes
+    one delta file set of the batch's rows, which readers apply until
+    `tables.compact` folds it; rebuild costs O(corpus × planes). Composes with `ann_lsh_topk`: the maintained
     (vec_id, table, sig) table IS the corpus_sig half of its
     ``index`` argument.
 

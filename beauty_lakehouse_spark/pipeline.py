@@ -267,7 +267,7 @@ def run_media_pipeline(
     2. decode+hash — signature-dispatch decode to the integer raster
                  and the exact-int pHash (``phash_exactint_payload``);
     3. index   — the pHash index published as a versioned table and
-                 MAINTAINED through the copy-on-write MERGE (v1
+                 MAINTAINED through the merge-on-read MERGE (v1
                  snapshot below MEDIA_IDX_SPLIT, overlapping batch
                  upserted — the `media_dedup_maintained` IVM law);
     4. pairs   — banded distinct-hash near-dup candidates

@@ -5,15 +5,16 @@ builds: a CDC/append stream continuously MERGEd into a managed table
 (Delta's ``foreachBatch`` + ``MERGE`` idiom). Each micro-batch is
 deduplicated to the latest row per key (by a monotonically-meaningful
 sequence column, e.g. the event timestamp) and applied as a
-copy-on-write upsert via :mod:`beauty_lakehouse_spark.tables` — so the
+merge-on-read upsert via :mod:`beauty_lakehouse_spark.tables` — so the
 table is always a consistent snapshot, readers time-travel across
 micro-batches, and a replayed batch (streaming's at-least-once
 foreachBatch contract) re-applies the same rows idempotently (same
 keys -> same final state).
 
 Scale: state lives in the table, not the stream — the only streaming
-state is the file-source offset log in the checkpoint dir. The merge
-itself rewrites only the partitions each micro-batch touches.
+state is the file-source offset log in the checkpoint dir. Each
+micro-batch's merge writes one delta file set of that batch's rows;
+`tables.compact` folds accumulated deltas into the base.
 """
 
 from __future__ import annotations

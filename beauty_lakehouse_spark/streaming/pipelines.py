@@ -351,24 +351,8 @@ def run_available_now(
     computes (aggregation/join results are partitioning-independent),
     only how many state stores each micro-batch must load and commit."""
     spark = result.sparkSession
-    n = cores(spark)
-    derived = _plan_state_partitions(result, n)
-    drained_width = derived if state_partitions is None else state_partitions
     if state_partitions is None:
-        state_partitions = derived
-        # The volume-derived hint models JVM state-store cost (load/
-        # commit/fsync per partition per micro-batch). A Python-stateful
-        # drain (applyInPandasWithState; here ``purchase_milestones``)
-        # spends its per-partition budget in per-group Python compute
-        # instead, so shrinking partitions starves it of cores: measured
-        # at sf0.1, the former Python min-2 KM drain ran 13.2 s at the
-        # 4-partition hint vs 5.6 s at the session's 32, with identical
-        # output. Keep such a drain at the session's cores; an explicit
-        # ``state_partitions=`` argument still wins.
-        if state_partitions is not None:
-            plan = result._jdf.queryExecution().analyzed().toString()
-            if "FlatMapGroupsInPandasWithState" in plan:
-                state_partitions = max(state_partitions, n)
+        state_partitions = _plan_state_partitions(result, cores(spark))
     prev = None
     if state_partitions is not None:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -397,8 +381,8 @@ def run_available_now(
     # a big drain (thousands of derived partitions) this is a
     # structural no-op; the finishers' shuffles still run at the
     # session's parallelism.
-    if drained_width is not None:
-        out = out.coalesce(drained_width)
+    if state_partitions is not None:
+        out = out.coalesce(state_partitions)
     return out
 
 

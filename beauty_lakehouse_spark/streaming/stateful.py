@@ -1,98 +1,20 @@
-"""Keyed streaming state: one user-managed operator and two min-k drains.
-
-Built-in streaming aggregates emit updated VALUES; they cannot emit
-TRANSITIONS (a row only at the moment a running total crosses a
-threshold). That shape needs user-managed state — the canonical
-``applyInPandasWithState`` use case (SURVEY.md §2.8 north star).
-
-``purchase_milestones`` keys state by user: cumulative purchase value
-persists in GroupState across micro-batches; each batch emits one row
-per (user, threshold) newly crossed. State is one float per user —
-bounded, shuffle-partitioned, and timeout-free here (add
-``GroupStateTimeout.ProcessingTimeTimeout`` + ``state.setTimeoutDuration``
-for keyed-TTL eviction on unbounded key spaces at 100 TB/day).
+"""Keyed streaming state: the min-k drains.
 
 The min-k drains (``km_firsts``: min-2 per customer; ``url_dedup_state``:
 min-1 per URL) emit values, so they are built-in streaming aggregates
 in update mode with a ``count(*)`` version stamp, the shape
 ``pipelines.rate_capped_grid`` set: they never leave the JVM, and each
 ``*_finish`` keeps the last version per key.
+
+No state here is user-managed (``applyInPandasWithState``): the
+reference has no stateful streaming (SURVEY.md §2.8), and every drain
+the registry runs is expressible as a built-in aggregate.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-MILESTONES = [100.0, 500.0, 1000.0, 5000.0]
-
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("milestone", T.DoubleType(), False),
-        T.StructField("total_at_crossing", T.DoubleType(), False),
-    ]
-)
-
-STATE_SCHEMA = T.StructType([T.StructField("total", T.DoubleType(), True)])
-
-
-def _milestone_fn(thresholds: list[float]):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        total = state.get[0] if state.exists else 0.0
-        out_ms, out_tot = [], []
-        for pdf in pdfs:
-            # deterministic within-batch order: event time
-            for v in pdf.sort_values("ts_us")["value"]:
-                new_total = total + float(v)
-                for m in thresholds:
-                    if total < m <= new_total:
-                        out_ms.append(m)
-                        out_tot.append(round(new_total, 2))
-                total = new_total
-        state.update((total,))
-        if out_ms:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(out_ms),
-                    "milestone": out_ms,
-                    "total_at_crossing": out_tot,
-                }
-            )
-
-    return fn
-
-
-def purchase_milestones(
-    events: DataFrame, thresholds: list[float] | None = None
-) -> DataFrame:
-    """Streaming per-user purchase-milestone detector. ``events`` is the
-    (streaming) events frame; output is append-mode transition rows."""
-    thresholds = sorted(thresholds or MILESTONES)
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        "value",
-    )
-    return purchases.groupBy("user_id").applyInPandasWithState(
-        _milestone_fn(thresholds),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def km_firsts(orders: DataFrame) -> DataFrame:

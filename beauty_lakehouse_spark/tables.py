@@ -5,31 +5,41 @@ The reference's curated zone is Delta Lake (writes at
 :620-667). delta-spark isn't installable in this environment
 (sources.delta_available gates it), so this module implements the
 "table management" half of the lakehouse contract as a Delta-shaped
-copy-on-write layout over plain parquet — the same mechanisms Delta
-uses, expressed Spark-first:
+layout over plain parquet — the same mechanisms Delta uses, expressed
+Spark-first:
 
 - **Snapshot isolation / time travel**: every write produces an
   immutable version; a JSON manifest per version lists the data
   directories that make up the snapshot. Readers resolve a manifest
   and never see a half-written state (the manifest is written last,
   atomically via rename).
-- **Copy-on-write MERGE at partition granularity**: an upsert rewrites
-  ONLY the partitions the source (or delete set) touches; untouched
-  partitions are inherited by reference from the parent manifest. At
-  100 TB with date-partitioned facts and a trickle of late rows, a
-  merge touches a handful of partitions, not the table.
+- **Merge-on-read MERGE**: an upsert writes ONE delta file set — the
+  batch's upsert rows plus its delete keys, tagged — and appends it to
+  the manifest's ordered ``deltas`` list; the base directories are
+  inherited untouched. A MERGE therefore costs its batch, not the
+  partitions the batch touches (with keys spread over every partition,
+  copy-on-write rewrote the whole table per batch). Readers apply the
+  deltas (`read_versioned`), the change feed diffs only the keys they
+  touch (`table_changes`), and `compact` folds them back into the base
+  — once for N merges, rewriting only the partitions that hold touched
+  keys. This is the delete-file answer of lakehouse formats (Delta's
+  deletion vectors) to write amplification.
 
 Layout::
 
     table_path/
-      _manifests/00000001.json   {"version": 1, "parent": 0,
+      _manifests/00000003.json   {"version": 3, "parent": 2,
                                   "partition_by": "order_year",
                                   "dirs": {"1995": "v00000001/__pt=1995",
                                            ...},
+                                  "deltas": [{"version": 2,
+                                              "dir": "v00000002",
+                                              "keys": ["o_orderkey"]},
+                                             {"version": 3, ...}],
                                   "columns": [...],
                                   "schema": {StructType JSON}}
-      v00000001/__pt=1995/*.parquet
-      v00000002/__pt=1996/*.parquet      # v2 merge touched only 1996
+      v00000001/__pt=1995/*.parquet      # base (a full write)
+      v00000002/*.parquet                # MERGE delta: columns + __del
 
 The partition column is DUPLICATED into the directory key (``__pt``)
 rather than stripped by ``partitionBy`` — data files keep the full
@@ -37,6 +47,12 @@ schema, so a snapshot read is a plain multi-path parquet scan with no
 basePath/partition-discovery coupling between versions. The manifest
 also records the schema as Spark reads the files back, so a snapshot
 read passes it to the reader and starts no footer-inference job.
+
+MERGE semantics, per key (keys match null-safely): a delta's upsert
+rows replace the key's current rows; a delta's delete key removes the
+key, applied after that delta's upserts. A snapshot is the base minus
+every key its deltas touch, plus each touched key's upsert rows from
+the LAST delta that touched it — unless that delta also deletes it.
 """
 
 from __future__ import annotations
@@ -45,7 +61,7 @@ import json
 import os
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -54,6 +70,9 @@ from . import memo
 _MANIFEST_DIR = "_manifests"
 _PT = "__pt"
 _UNPARTITIONED = "__all__"
+# delta-file columns: the delete tag, and (on read only) the version
+_DEL = "__del"
+_SEQ = "__seq"
 
 
 # ---------------------------------------------------------------------------
@@ -74,18 +93,14 @@ def _write_manifest(path: str, manifest: dict) -> None:
     os.replace(tmp, final)  # atomic publish: readers see all-or-nothing
 
 
-def _commit_delta_log(
-    path: str,
-    version: int,
-    dirs: dict[str, str],
-    schema=None,
-    op: str = "WRITE",
-) -> None:
+def _commit_delta_log(path: str, manifest: dict, op: str) -> None:
     """Mirror manifest version N as Delta commit N-1 (Delta versions
     are 0-based): a REAL `_delta_log` (public protocol, see the
     `delta_log` module — VERDICT r10 ask #2) whose live set after
-    replay equals the manifest's referenced files, so the versioned
-    CoW table is readable as a protocol-valid Delta table at HEAD.
+    replay equals the manifest's base files and whose pending
+    ``mergeDelta`` set equals its deltas, so the versioned table is a
+    protocol-valid Delta table at HEAD (one that declares the
+    merge-on-read feature once it has taken a MERGE).
     partitionColumns stays [] because this layout duplicates the
     partition key into the ``__pt`` directory while the data files
     keep the full schema (module docstring) — protocol-wise the files
@@ -100,26 +115,59 @@ def _commit_delta_log(
     try:
         dlog.commit_snapshot(
             path,
-            version - 1,
-            schema,
-            sorted(dirs.values()),
+            manifest["version"] - 1,
+            manifest_schema(manifest),
+            sorted(manifest["dirs"].values()),
             partition_columns=None,
             operation=op,
+            delta_rel_dirs={d["dir"]: d["keys"] for d in manifest["deltas"]},
         )
     except (ValueError, FileExistsError, OSError):
         pass
 
 
-def latest_version(path: str) -> int:
-    """Highest committed version, 0 if the table doesn't exist yet."""
+_LOG_OPS = {"write": "WRITE", "merge": "MERGE", "compact": "OPTIMIZE"}
+
+
+def _publish(
+    path: str,
+    version: int,
+    op: str,
+    table: dict,
+    dirs: dict[str, str],
+    deltas: list[dict],
+) -> int:
+    """Commit ``version``: its manifest, then its `_delta_log` mirror.
+    ``table`` gives partition_by, columns and schema (a manifest does)."""
+    manifest = {
+        "version": version,
+        "parent": version - 1,
+        "op": op,
+        "partition_by": table["partition_by"],
+        "dirs": dirs,
+        "deltas": deltas,
+        "columns": table["columns"],
+        "schema": table["schema"],
+    }
+    _write_manifest(path, manifest)
+    _commit_delta_log(path, manifest, _LOG_OPS[op])
+    return version
+
+
+def _versions(path: str) -> list[int]:
+    """The versions whose manifests exist (vacuum drops old ones)."""
     mdir = os.path.join(path, _MANIFEST_DIR)
     if not os.path.isdir(mdir):
-        return 0
-    versions = [
+        return []
+    return sorted(
         int(f[:-5]) for f in os.listdir(mdir)
         if f.endswith(".json") and f[:-5].isdigit()
-    ]
-    return max(versions, default=0)
+    )
+
+
+def latest_version(path: str) -> int:
+    """Highest committed version, 0 if the table doesn't exist yet."""
+    return max(_versions(path), default=0)
 
 
 def _nullable(dt: T.DataType) -> T.DataType:
@@ -178,6 +226,7 @@ def _write_partitioned(
     partition_by: str,
     abs_dir: str,
     files_per_partition: int = 1,
+    cluster_by: list[str] | None = None,
 ) -> None:
     """Partitioned snapshot write with small-file hygiene: without the
     repartition, every one of the N shuffle tasks writes a sliver into
@@ -185,7 +234,8 @@ def _write_partitioned(
     partitionBy mistake); clustering by the partition key first gives
     one writer per partition. For partitions too large for a single
     writer, ``files_per_partition`` fans each partition out to that many
-    writers via a deterministic row-hash salt."""
+    writers via a deterministic row-hash salt. ``cluster_by`` sorts each
+    file's rows (see `compact`)."""
     out = df.withColumn(_PT, F.col(partition_by).cast("string"))
     if files_per_partition > 1:
         salt = F.pmod(
@@ -198,6 +248,8 @@ def _write_partitioned(
         out = out.repartition(max(n, files_per_partition), F.col(_PT), salt)
     else:
         out = out.repartition(F.col(_PT))
+    if cluster_by:
+        out = out.sortWithinPartitions(*cluster_by)
     out.write.mode("errorifexists").partitionBy(_PT).parquet(abs_dir)
 
 
@@ -208,10 +260,10 @@ def write_versioned(
     files_per_partition: int = 1,
 ) -> int:
     """Full-snapshot write: a new version whose manifest references only
-    this write's files (the reference's idempotent full-refresh,
-    ingestion notebook :571-574, plus Delta-style versioning on top)."""
-    prev = latest_version(path)
-    version = prev + 1
+    this write's files and no deltas (the reference's idempotent
+    full-refresh, ingestion notebook :571-574, plus Delta-style
+    versioning on top)."""
+    version = latest_version(path) + 1
     data_dir = f"v{version:08d}"
     abs_dir = os.path.join(path, data_dir)
     if partition_by:
@@ -220,65 +272,85 @@ def write_versioned(
     else:
         df.write.mode("errorifexists").parquet(abs_dir)
         dirs = {_UNPARTITIONED: data_dir}
-    _write_manifest(path, {
-        "version": version,
-        "parent": prev,
-        "op": "write",
+    table = {
         "partition_by": partition_by,
-        "dirs": dirs,
         "columns": df.columns,
         "schema": _nullable(df.schema).jsonValue(),
-    })
-    _commit_delta_log(path, version, dirs, schema=df.schema, op="WRITE")
-    return version
+    }
+    return _publish(path, version, "write", table, dirs, [])
+
+
+def _by_keys(
+    df: DataFrame, keys_df: DataFrame, keys: list[str], how: str
+) -> DataFrame:
+    """``df`` semi- or anti-joined null-safely with the broadcast key
+    rows ``keys_df`` (duplicates there are harmless)."""
+    cond = reduce(
+        lambda a, b: a & b, [df[k].eqNullSafe(keys_df[k]) for k in keys]
+    )
+    return df.join(F.broadcast(keys_df), cond, how)
+
+
+def _read_deltas(
+    spark: SparkSession, path: str, m: dict, deltas: list[dict]
+) -> DataFrame:
+    """The tagged rows of ``deltas`` (a non-empty list of manifest
+    entries of ``m``), each with its version as ``__seq``."""
+    schema = T.StructType(
+        manifest_schema(m).fields + [T.StructField(_DEL, T.BooleanType())]
+    )
+    return reduce(
+        DataFrame.unionByName,
+        [
+            spark.read.schema(schema)
+            .parquet(os.path.join(path, d["dir"]))
+            .withColumn(_SEQ, F.lit(d["version"]))
+            for d in deltas
+        ],
+    )
+
+
+def _upserted(tagged: DataFrame, keys: list[str], cols: list[str]) -> DataFrame:
+    """Each touched key's upsert rows from the last delta that touched
+    it, unless that delta also deletes it: the max of (version, is
+    delete) over the key is that delta's version, and True if it holds
+    a delete row."""
+    last = F.max(F.struct(_SEQ, _DEL)).over(Window.partitionBy(*keys))
+    return (
+        tagged.withColumn("__last", last)
+        .filter((F.col(_SEQ) == F.col(f"__last.{_SEQ}")) & ~F.col(f"__last.{_DEL}"))
+        .select(*cols)
+    )
+
+
+def _merged(base: DataFrame, tagged: DataFrame, keys: list[str]) -> DataFrame:
+    """``base`` with the delta rows ``tagged`` applied: the base minus
+    every touched key (a broadcast anti-join), plus `_upserted`."""
+    return _by_keys(base, tagged.select(*keys), keys, "left_anti").unionByName(
+        _upserted(tagged, keys, base.columns)
+    )
+
+
+def _snapshot(spark: SparkSession, path: str, m: dict) -> DataFrame:
+    base = _read_dirs(spark, m, [os.path.join(path, d) for d in m["dirs"].values()])
+    if not m["deltas"]:
+        return base
+    return _merged(base, _read_deltas(spark, path, m, m["deltas"]), m["deltas"][0]["keys"])
 
 
 def read_versioned(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
-    """Snapshot read (time travel when ``version`` is given): the union
-    of the manifest's data directories — a plain multi-path parquet
-    scan, columns in the manifest's declared order."""
-    m = read_manifest(path, version)
-    return _read_dirs(
-        spark, m, [os.path.join(path, d) for d in m["dirs"].values()]
-    )
+    """Snapshot read (time travel when ``version`` is given), columns
+    in the manifest's declared order: a plain multi-path parquet scan of
+    the base directories, with the version's MERGE deltas applied on
+    top (module docstring) when it has any."""
+    return _snapshot(spark, path, read_manifest(path, version))
 
 
 # ---------------------------------------------------------------------------
-# MERGE (copy-on-write upsert at partition granularity)
+# MERGE (merge-on-read upsert: one delta file set per batch)
 # ---------------------------------------------------------------------------
-
-
-def _merged_state(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    deletes: DataFrame | None,
-) -> DataFrame:
-    """Pure-DataFrame MERGE semantics: matched -> source row (full-row
-    update), not-matched-by-target -> insert, then delete-by-key.
-    One full-outer shuffle join on the merge keys, one anti join."""
-    cols = target.columns
-    src = source.select(
-        *[F.col(c).alias(f"__s_{c}") for c in cols]
-    ).withColumn("__s_present", F.lit(True))
-    cond = reduce(
-        lambda a, b: a & b,
-        [target[k].eqNullSafe(F.col(f"__s_{k}")) for k in keys],
-    )
-    joined = target.join(src, cond, "full_outer")
-    merged = joined.select(
-        *[
-            F.when(F.col("__s_present").isNotNull(), F.col(f"__s_{c}"))
-            .otherwise(target[c])
-            .alias(c)
-            for c in cols
-        ]
-    )
-    if deletes is not None:
-        merged = merged.join(deletes.select(*keys).distinct(), keys, "left_anti")
-    return merged
 
 
 def merge_upsert(
@@ -288,82 +360,46 @@ def merge_upsert(
     keys: list[str],
     deletes: DataFrame | None = None,
 ) -> int:
-    """Copy-on-write MERGE into the latest snapshot -> new version.
+    """Merge-on-read MERGE into the latest snapshot -> new version.
 
     - matched on ``keys``   -> row replaced by the source row
     - unmatched source row  -> inserted
     - key in ``deletes``    -> removed (applied after upsert)
 
-    Partitioned tables rewrite only affected partitions: the partitions
-    present in the source, plus those holding delete keys. Untouched
-    partitions are inherited by manifest reference — zero data movement
-    for them. The affected-partition list is metadata-scale (collected
-    to the driver like Delta's file listing), never the rows."""
+    The call writes ONE parquet file set under ``v{N:08d}/``: the
+    source rows (cast to the table's schema, by column name) tagged
+    ``__del = false`` and the delete keys (other columns null) tagged
+    ``true`` — one Spark job over the batch, no join, no driver collect
+    and no scan of the table. The manifest inherits the base ``dirs``
+    and appends the delta; readers apply it (`read_versioned`) until
+    `compact` folds it into the base. Every pending delta of a table
+    merges on the same ``keys``."""
     m = read_manifest(path)
-    version = latest_version(path) + 1
-    part_col = m.get("partition_by")
-    target = read_versioned(spark, path)
+    if m["deltas"] and m["deltas"][-1]["keys"] != list(keys):
+        raise ValueError(
+            f"merge keys {keys} differ from the pending deltas' "
+            f"{m['deltas'][-1]['keys']}: compact() first"
+        )
+    fields = manifest_schema(m).fields
+    tagged = source.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields],
+        F.lit(False).alias(_DEL),
+    )
+    if deletes is not None:
+        tagged = tagged.unionByName(deletes.select(
+            *[
+                (F.col(f.name) if f.name in keys else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in fields
+            ],
+            F.lit(True).alias(_DEL),
+        ))
+    version = m["version"] + 1
     data_dir = f"v{version:08d}"
-    abs_dir = os.path.join(path, data_dir)
-
-    if not part_col:
-        merged = _merged_state(target, source, keys, deletes)
-        merged.write.mode("errorifexists").parquet(abs_dir)
-        dirs = {_UNPARTITIONED: data_dir}
-    else:
-        # rows being upserted or deleted must ALSO rewrite the partition
-        # they currently live in (an upsert that changes the partition
-        # column would otherwise leave the stale row behind). Locating
-        # them is a key+partition-column-pruned scan of the target joined
-        # against the (small, broadcastable) touched-key set. Source
-        # partitions and current-home partitions are discovered in ONE
-        # driver action (r14 §2.2: the two separate metadata collects
-        # fanned out into 13 AQE jobs ~1.3 s on the anti-entropy path).
-        touched_keys = source.select(*keys)
-        if deletes is not None:
-            touched_keys = touched_keys.unionByName(deletes.select(*keys))
-        current_parts = (
-            target.select(*keys, part_col)
-            .join(F.broadcast(touched_keys.distinct()), keys)
-            .select(F.col(part_col).cast("string").alias("__p"))
-        )
-        affected = {
-            str(r[0])
-            for r in source.select(
-                F.col(part_col).cast("string").alias("__p")
-            )
-            .unionByName(current_parts)
-            .distinct()
-            .collect()
-        }
-        # prune the target read to affected partitions only (directory-
-        # level pruning via the manifest — the CoW analogue of Delta
-        # file skipping)
-        tgt_dirs = [
-            os.path.join(path, d)
-            for k, d in m["dirs"].items()
-            if k in affected
-        ]
-        merged = _merged_state(
-            _read_dirs(spark, m, tgt_dirs), source, keys, deletes
-        )
-        _write_partitioned(merged, part_col, abs_dir)
-        new_dirs = _scan_partition_dirs(path, data_dir)
-        # inherit untouched partitions; affected ones point at the new
-        # files (an affected partition emptied by deletes drops out)
-        dirs = {k: d for k, d in m["dirs"].items() if k not in affected}
-        dirs.update(new_dirs)
-    _write_manifest(path, {
-        "version": version,
-        "parent": m["version"],
-        "op": "merge",
-        "partition_by": part_col,
-        "dirs": dirs,
-        "columns": m["columns"],
-        "schema": m["schema"],
-    })
-    _commit_delta_log(path, version, dirs, op="MERGE")
-    return version
+    tagged.write.mode("errorifexists").parquet(os.path.join(path, data_dir))
+    delta = {"version": version, "dir": data_dir, "keys": list(keys)}
+    return _publish(path, version, "merge", m, m["dirs"], m["deltas"] + [delta])
 
 
 # ---------------------------------------------------------------------------
@@ -383,44 +419,88 @@ def table_changes(
     ``to`` tagged ``delete`` — an update appears as its delete+insert
     pair of images.
 
-    Partition-pruned by manifest diff: a partition whose directory
-    reference is IDENTICAL in both manifests cannot have changed (CoW —
-    files are immutable), so only differing partitions are read and
-    diffed. A trickle merge's change feed therefore costs the touched
-    partitions, not two full snapshots.
+    Pruned to what can differ:
+    - a MERGE-only range (both versions share the base directories)
+      diffs only the keys touched by the deltas one version has and the
+      other lacks: their base rows (a broadcast semi-join) and the delta
+      rows, both images resolved in ONE key window;
+    - a range crossing a full write or a compaction diffs only the
+      base directories whose reference differs (files are immutable,
+      so an identical reference cannot have changed) — when neither
+      version has pending deltas; otherwise the two snapshots whole.
 
-    The diff is ONE tagged-union grouped count (r14 §2.2): the r13
-    form ran two ``exceptAll`` set differences, each shuffling both
-    sides (4 snapshot-sized shuffle passes); counting each full row's
-    occurrences in old vs new needs a single map-side-combinable
-    aggregate, and a row's change multiplicity is |n_new − n_old| —
-    identical multiset semantics (``exceptAll(a, b)`` keeps each row
-    max(0, count_a − count_b) times; groupBy and exceptAll share
-    null-safe row equality)."""
+    The diff is ONE tagged-union grouped count (r14 §2.2): counting
+    each full row's occurrences in old vs new needs a single
+    map-side-combinable aggregate, and a row's change multiplicity is
+    |n_new − n_old| — ``exceptAll`` multiset semantics (groupBy and
+    exceptAll share null-safe row equality)."""
     m_from = read_manifest(path, from_version)
     m_to = read_manifest(path, to_version)
     cols = m_to["columns"]
 
-    keys = set(m_from["dirs"]) | set(m_to["dirs"])
-    from_dirs, to_dirs = [], []
-    for k in keys:
-        a, b = m_from["dirs"].get(k), m_to["dirs"].get(k)
-        if a == b:
-            continue  # immutable files -> identical reference == no change
-        if a is not None:
-            from_dirs.append(os.path.join(path, a))
-        if b is not None:
-            to_dirs.append(os.path.join(path, b))
-
-    old = _read_dirs(spark, m_to, from_dirs)
-    new = _read_dirs(spark, m_to, to_dirs)
-    tagged = new.select(
-        *cols, F.lit(1).alias("__in_new"), F.lit(0).alias("__in_old")
-    ).unionByName(
-        old.select(
-            *cols, F.lit(0).alias("__in_new"), F.lit(1).alias("__in_old")
+    def images(new: DataFrame, old: DataFrame) -> DataFrame:
+        return new.select(
+            *cols, F.lit(1).alias("__in_new"), F.lit(0).alias("__in_old")
+        ).unionByName(
+            old.select(
+                *cols, F.lit(0).alias("__in_new"), F.lit(1).alias("__in_old")
+            )
         )
-    )
+
+    if m_from["dirs"] == m_to["dirs"]:
+        seqs_from = {d["version"] for d in m_from["deltas"]}
+        seqs_to = {d["version"] for d in m_to["deltas"]}
+        deltas = sorted(
+            {d["version"]: d for d in m_from["deltas"] + m_to["deltas"]}.values(),
+            key=lambda d: d["version"],
+        )
+        if seqs_from == seqs_to:
+            empty = _read_dirs(spark, m_to, [])
+            tagged = images(empty, empty)
+        else:
+            # one key window over the touched keys' base rows (version
+            # 0, in both images) and every delta row: a row is in an
+            # image when its version is that image's last for the key
+            # and that delta does not delete the key. The diff's
+            # groupBy below reuses the window's key partitioning.
+            keys = deltas[0]["keys"]
+            rows = _read_deltas(spark, path, m_to, deltas)
+            touched = rows.filter(F.col(_SEQ).isin(seqs_from ^ seqs_to))
+            base = _read_dirs(
+                spark, m_to, [os.path.join(path, d) for d in m_to["dirs"].values()]
+            )
+            rows = _by_keys(base, touched.select(*keys), keys, "left_semi").select(
+                *cols, F.lit(False).alias(_DEL), F.lit(0).alias(_SEQ)
+            ).unionByName(rows)
+
+            def member(seqs: set[int]) -> Column:
+                inside = F.col(_SEQ).isin({0} | seqs)
+                last = F.max(F.when(inside, F.struct(_SEQ, _DEL))).over(
+                    Window.partitionBy(*keys)
+                )
+                return F.when(
+                    inside & (F.col(_SEQ) == last[_SEQ]) & ~last[_DEL], 1
+                ).otherwise(0)
+
+            tagged = rows.select(
+                *cols,
+                member(seqs_to).alias("__in_new"),
+                member(seqs_from).alias("__in_old"),
+            )
+    elif m_from["deltas"] or m_to["deltas"]:
+        tagged = images(_snapshot(spark, path, m_to), _snapshot(spark, path, m_from))
+    else:
+        from_dirs, to_dirs = [], []
+        for k in set(m_from["dirs"]) | set(m_to["dirs"]):
+            a, b = m_from["dirs"].get(k), m_to["dirs"].get(k)
+            if a == b:
+                continue  # immutable files -> identical reference == no change
+            if a is not None:
+                from_dirs.append(os.path.join(path, a))
+            if b is not None:
+                to_dirs.append(os.path.join(path, b))
+        tagged = images(_read_dirs(spark, m_to, to_dirs), _read_dirs(spark, m_to, from_dirs))
+
     counted = tagged.groupBy(*cols).agg(
         F.sum("__in_new").alias("__nn"), F.sum("__in_old").alias("__no")
     )
@@ -443,13 +523,18 @@ def table_changes(
 # ---------------------------------------------------------------------------
 
 
+def _referenced(m: dict) -> set[str]:
+    return set(m["dirs"].values()) | {d["dir"] for d in m["deltas"]}
+
+
 def vacuum(path: str, keep_versions: int = 1) -> list[str]:
-    """Delete data directories referenced ONLY by manifests older than
-    the newest ``keep_versions`` snapshots, then drop those manifests —
-    the retention half of the CoW lifecycle (Delta ``VACUUM``). Returns
-    the removed directory paths. Time travel remains valid for every
-    kept version (their referenced dirs are never touched; a dir shared
-    with a kept manifest survives)."""
+    """Delete base and delta directories referenced ONLY by manifests
+    older than the newest ``keep_versions`` snapshots, then drop those
+    manifests — the retention half of the lifecycle (Delta ``VACUUM``).
+    Returns the removed directory paths. Time travel remains valid for
+    every kept version (the base dirs and the delta files they
+    reference are never touched; a dir shared with a kept manifest
+    survives)."""
     import shutil
 
     latest = latest_version(path)
@@ -458,14 +543,12 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
     keep = set(range(max(1, latest - keep_versions + 1), latest + 1))
     kept_dirs: set[str] = set()
     for v in keep:
-        kept_dirs |= set(read_manifest(path, v)["dirs"].values())
+        kept_dirs |= _referenced(read_manifest(path, v))
     removed: list[str] = []
-    for v in range(1, latest + 1):
+    for v in _versions(path):
         if v in keep:
             continue
-        for d in read_manifest(path, v)["dirs"].values():
-            if d in kept_dirs:
-                continue
+        for d in sorted(_referenced(read_manifest(path, v)) - kept_dirs):
             abs_d = os.path.join(path, d)
             if os.path.isdir(abs_d):
                 shutil.rmtree(abs_d)
@@ -480,7 +563,7 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# OPTIMIZE analogue: compaction + clustering
+# OPTIMIZE analogue: delta folding, compaction + clustering
 # ---------------------------------------------------------------------------
 
 
@@ -491,34 +574,73 @@ def compact(
     cluster_by: list[str] | None = None,
     partitions: list[str] | None = None,
 ) -> int:
-    """Delta ``OPTIMIZE`` analogue: rewrite fragmented partitions into at
-    most ``max_files`` files each, optionally clustering rows by
-    ``cluster_by`` (``sortWithinPartitions`` — the lightweight analogue
-    of Z-ordering: parquet row-group min/max stats on the sort keys
-    become disjoint, so predicate scans skip row groups; true Z-order
-    bit-interleaving only wins when filtering several dimensions with
-    equal priority). A new snapshot version is committed; partitions that
-    are already compact (and no reclustering requested) are inherited by
-    reference, and time travel to pre-compaction versions still works —
-    compaction never deletes data files.
+    """Delta ``OPTIMIZE`` analogue: fold pending MERGE deltas into the
+    base, and rewrite fragmented partitions into at most ``max_files``
+    files each, optionally clustering rows by ``cluster_by``
+    (``sortWithinPartitions`` — the lightweight analogue of Z-ordering:
+    parquet row-group min/max stats on the sort keys become disjoint,
+    so predicate scans skip row groups; true Z-order bit-interleaving
+    only wins when filtering several dimensions with equal priority).
 
-    Returns the new version, or the current one when nothing needed
-    rewriting. The per-partition rewrites run as independent jobs
-    (metadata-scale driver loop, like OPTIMIZE's per-partition file
-    bins); on a busy cluster submit them from a thread pool."""
+    Folding rewrites, once for however many merges are pending, only
+    the partitions that hold a touched key — where a touched key's base
+    rows live, plus where its upserted rows land (an update can move a
+    row across partitions; a partition emptied by deletes drops out).
+    Locating them is one metadata-scale driver collect (like Delta's
+    file listing). An unpartitioned table is rewritten whole. Folding
+    ignores ``partitions``, which limits only the fragment rewrites.
+
+    A new snapshot version is committed with no pending deltas;
+    partitions that need nothing are inherited by reference, and time
+    travel to pre-compaction versions still works — compaction never
+    deletes data files. Returns the new version, or the current one
+    when nothing needed rewriting. The per-partition fragment rewrites
+    run as independent jobs (metadata-scale driver loop, like
+    OPTIMIZE's per-partition file bins); on a busy cluster submit them
+    from a thread pool."""
     m = read_manifest(path)
     version = m["version"] + 1
     data_dir = f"v{version:08d}"
+    part_col = m["partition_by"]
     dirs = dict(m["dirs"])
-    changed = False
+    rewritten: set[str] = set()
+    if m["deltas"] and part_col:
+        tagged = _read_deltas(spark, path, m, m["deltas"])
+        keys = m["deltas"][0]["keys"]
+        base = _read_dirs(spark, m, [os.path.join(path, d) for d in dirs.values()])
+        part = F.col(part_col).cast("string").alias("__p")
+        rewritten = {
+            r[0]
+            for r in _by_keys(base, tagged.select(*keys), keys, "left_semi")
+            .select(part)
+            .unionByName(_upserted(tagged, keys, m["columns"]).select(part))
+            .distinct()
+            .collect()
+        }
+        if rewritten:
+            folded = _merged(
+                _read_dirs(spark, m, [
+                    os.path.join(path, d) for k, d in dirs.items() if k in rewritten
+                ]),
+                tagged,
+                keys,
+            )
+            _write_partitioned(
+                folded, part_col, os.path.join(path, data_dir), max_files, cluster_by
+            )
+            dirs = {k: d for k, d in dirs.items() if k not in rewritten}
+            dirs.update(_scan_partition_dirs(path, data_dir))
     for key, rel in m["dirs"].items():
-        if partitions is not None and key not in partitions:
-            continue
         abs_d = os.path.join(path, rel)
-        n_files = sum(f.endswith(".parquet") for f in os.listdir(abs_d))
-        if n_files <= max_files and not cluster_by:
+        if m["deltas"] and key == _UNPARTITIONED:
+            out = _snapshot(spark, path, m)  # an unpartitioned fold: whole
+        elif key in rewritten or (partitions is not None and key not in partitions):
             continue
-        out = _read_dirs(spark, m, [abs_d]).repartition(max_files)
+        elif sum(f.endswith(".parquet") for f in os.listdir(abs_d)) <= max_files and not cluster_by:
+            continue
+        else:
+            out = _read_dirs(spark, m, [abs_d])
+        out = out.repartition(max_files)
         if cluster_by:
             out = out.sortWithinPartitions(*cluster_by)
         new_rel = (
@@ -527,20 +649,9 @@ def compact(
         )
         out.write.mode("errorifexists").parquet(os.path.join(path, new_rel))
         dirs[key] = new_rel
-        changed = True
-    if not changed:
+    if dirs == m["dirs"] and not m["deltas"]:
         return m["version"]
-    _write_manifest(path, {
-        "version": version,
-        "parent": m["version"],
-        "op": "compact",
-        "partition_by": m.get("partition_by"),
-        "dirs": dirs,
-        "columns": m["columns"],
-        "schema": m["schema"],
-    })
-    _commit_delta_log(path, version, dirs, op="OPTIMIZE")
-    return version
+    return _publish(path, version, "compact", m, dirs, [])
 
 
 # ---------------------------------------------------------------------------
@@ -603,7 +714,7 @@ def q_merge_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     updated rows appear as delete+insert image pairs, inserted rows as
     inserts, deleted rows as deletes. Oracle: EXCEPT ALL set differences
     between the base and merged states in DuckDB, so the CDC read path
-    (manifest-diff pruning + multiset diff) is hash-checked too."""
+    (touched-key pruning + multiset diff) is hash-checked too."""
     path = _merge_scenario(spark, sf_dir)
     return table_changes(spark, path, 1, 2)
 
@@ -620,8 +731,8 @@ def q_incremental_agg_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine.
 
     Scale: this is the whole point of the change feed — a trickle merge
-    touches a few partitions, the feed is pruned to them (manifest
-    diff), and the maintained aggregate costs O(changes), not
+    touches a few keys, the feed is pruned to them (the v2 delta's
+    keys), and the maintained aggregate costs O(changes), not
     O(snapshot). Count/sum are self-inverting under delete images;
     decimal lifts keep the subtraction exact (no FP drift accumulating
     across maintenance cycles). Groups emptied by deletes are dropped
@@ -733,11 +844,11 @@ def q_orders_antientropy_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     1. **detect** — compare per-partition (n_rows, checksum)
        fingerprints (`_orders_partition_fp`, metadata-scale rows);
-    2. **re-ship** — ONE copy-on-write MERGE carrying only the stale
+    2. **re-ship** — ONE merge-on-read MERGE carrying only the stale
        partitions' source rows (plus deletes of replica-only keys
-       there); clean partitions are inherited by manifest reference,
-       zero data movement — the property that makes anti-entropy
-       affordable at 100 TB;
+       there), written as one delta file set; the base is inherited by
+       manifest reference, zero data movement for clean partitions —
+       the property that makes anti-entropy affordable at 100 TB;
     3. **verify** — re-fingerprint the synced snapshot.
 
     Output, per partition: the SOURCE fingerprint, whether the protocol

@@ -92,7 +92,7 @@ HEADLINE = [
     "part_golden_record",     # entity-resolution survivorship merge
     "pca_power_iteration",    # fixed-point iterative PCA
     "ccnet_buckets",          # perplexity-tercile corpus bucketing
-    "merge_upsert_state",     # CoW MERGE with manifest partition pruning
+    "merge_upsert_state",     # merge-on-read MERGE, deltas applied on read
     "lsh_index_maintained",   # ANN index build + incremental MERGE maintenance
     # round-7 heavy tail (VERDICT r7 ask #4): every new expensive entry
     # is benched the round it lands — the r5 part_golden_record lesson
@@ -276,7 +276,7 @@ HEADLINE = [
     "ks_two_sample",          # two-sample KS on the bounded value grid (new in r12)
     "hurst_rs",               # rescaled-range Hurst exponent (new in r12)
     "media_phash_pairs_pngcodec",  # pHash THROUGH the real PNG codec (new in r12)
-    "media_dedup_maintained", # CoW-merged pHash index = rebuild IVM law (new in r12)
+    "media_dedup_maintained", # MERGEd pHash index = rebuild IVM law (new in r12)
     "cliffs_delta",           # rank-derived effect size on the value grid (new in r12)
     "wilcoxon_signed_rank",   # paired signed-rank test, |d| grid ranks (new in r12)
     "holt_linear_forecast",   # exact-integer double exponential smoothing (new in r12)

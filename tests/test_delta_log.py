@@ -2,12 +2,13 @@
 
 delta-spark is uninstallable here, but the Delta transaction-log
 protocol is public JSON — these tests check that the curated sink and
-the versioned CoW table emit protocol-conformant commits: version
-chain from 0, protocol + metaData in commit 0, schemaString that
-round-trips through StructType.fromJson, add/remove consistency under
-replay, and a live set that matches both the files on disk and what
-the engine's own readers return. A malformed-log case proves the
-validator actually rejects protocol violations (no rubber stamp).
+the versioned merge-on-read table emit protocol-conformant commits:
+version chain from 0, protocol + metaData in commit 0, schemaString
+that round-trips through StructType.fromJson, add/remove/mergeDelta
+consistency under replay, and live and pending sets that match both
+the files on disk and what the engine's own readers return.
+Malformed-log cases prove the validator actually rejects protocol
+violations (no rubber stamp).
 """
 
 from __future__ import annotations
@@ -116,33 +117,134 @@ def test_versioned_table_mirrors_manifest_versions(spark, sf_dir, tmp_path):
         path, sorted(m1["dirs"].values())
     )
 
-    # a CoW MERGE commits adds for rewritten partitions + removes for
-    # their replaced files; untouched partitions stay live by replay
+    # a merge-on-read MERGE commits its delta files as mergeDelta
+    # actions and raises the protocol to the named feature; the base
+    # files stay live untouched
     updates = base.filter(F.col("o_orderkey") % 7 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") + 1.0
     )
     deletes = base.filter(F.col("o_orderkey") % 13 == 0).select("o_orderkey")
     tables.merge_upsert(spark, path, updates, keys=["o_orderkey"],
                         deletes=deletes)
-
-    state1 = dlog.replay_log(path)
-    assert state1["n_commits"] == 2
-    m2 = tables.read_manifest(path, 2)
-    assert state1["live_files"] == dlog._rel_parquet_files(
-        path, sorted(m2["dirs"].values())
+    inserts = base.filter(F.col("o_orderkey") % 11 == 0).withColumn(
+        "o_orderkey", F.col("o_orderkey") + 10_000_000
     )
+    tables.merge_upsert(spark, path, inserts, keys=["o_orderkey"],
+                        deletes=updates.filter(F.col("o_orderkey") % 2 == 0)
+                        .select("o_orderkey"))
+
+    state = dlog.replay_log(path)
+    assert state["n_commits"] == 3
+    assert state["live_files"] == state0["live_files"]
+    assert [d["version"] for d in state["deltas"]] == sorted(
+        d["version"] for d in state["deltas"]
+    )
+    assert {d["version"] for d in state["deltas"]} == {1, 2}
+    assert state["protocol"] == dlog.MOR_PROTOCOL_ACTION["protocol"]
     commit1 = _read_commit(path, 1)
     ops = [next(iter(a)) for a in commit1]
-    assert "remove" in ops and "add" in ops  # a real CoW commit shape
-    assert dlog.validate_delta_log(path)["valid"]
+    assert "mergeDelta" in ops and "protocol" in ops
+    assert "add" not in ops and "remove" not in ops
+    report = dlog.validate_delta_log(path)
+    assert report["valid"], report
+    assert report["n_delta_files"] == len(state["deltas"])
 
-    # the log's live set IS the snapshot: reading exactly the live
-    # files reproduces read_versioned (row-for-row)
-    live_paths = [os.path.join(path, p) for p in state1["live_files"]]
-    via_log = spark.read.parquet(*live_paths).select(*m2["columns"])
-    via_manifest = tables.read_versioned(spark, path)
-    assert via_log.exceptAll(via_manifest).count() == 0
-    assert via_manifest.exceptAll(via_log).count() == 0
+    # the log IS the snapshot: the live add files, minus the logged
+    # delete keys and with the upserts applied in commit order,
+    # reproduce read_versioned row for row
+    cols = tables.read_manifest(path)["columns"]
+    rows = {}
+    for rel in state["live_files"]:
+        for r in spark.read.parquet(os.path.join(path, rel)).select(*cols).collect():
+            rows.setdefault(r.o_orderkey, []).append(tuple(r))
+    for version in sorted({d["version"] for d in state["deltas"]}):
+        files = [os.path.join(path, d["path"]) for d in state["deltas"]
+                 if d["version"] == version]
+        assert all(d["mergeKeys"] == ["o_orderkey"] for d in state["deltas"])
+        batch = spark.read.parquet(*files).collect()
+        ups, dead = {}, set()
+        for r in batch:
+            if r["__del"]:
+                dead.add(r.o_orderkey)
+            else:
+                ups.setdefault(r.o_orderkey, []).append(tuple(r[c] for c in cols))
+        rows.update(ups)
+        for k in dead:
+            rows.pop(k, None)
+    via_log = sorted(r for rs in rows.values() for r in rs)
+    via_manifest = sorted(tuple(r) for r in tables.read_versioned(spark, path).collect())
+    assert via_log == via_manifest
+
+    # compact() takes the remove+add commit shape: the folded
+    # partitions' files and every delta are removed, the rewrites added
+    tables.compact(spark, path)
+    ops = [next(iter(a)) for a in _read_commit(path, 3)]
+    assert "remove" in ops and "add" in ops and "mergeDelta" not in ops
+    state = dlog.replay_log(path)
+    assert state["deltas"] == []
+    m = tables.read_manifest(path)
+    assert state["live_files"] == dlog._rel_parquet_files(path, sorted(m["dirs"].values()))
+    assert dlog.validate_delta_log(path)["valid"]
+    via_log = sorted(
+        tuple(r) for r in spark.read.parquet(
+            *[os.path.join(path, p) for p in state["live_files"]]
+        ).select(*cols).collect()
+    )
+    assert via_log == via_manifest
+
+
+def _merged_table(spark, tmp_path):
+    path = str(tmp_path / "mor")
+    df = spark.createDataFrame([(i, i % 3) for i in range(12)], "k int, p int")
+    tables.write_versioned(df, path, partition_by="p")
+    tables.merge_upsert(
+        spark, path, spark.createDataFrame([(1, 2), (20, 0)], "k int, p int"),
+        keys=["k"], deletes=spark.createDataFrame([(4,)], "k int"),
+    )
+    assert dlog.validate_delta_log(path)["valid"]
+    return path, dlog.replay_log(path)["deltas"]
+
+
+def test_validator_reports_a_missing_delta_file(spark, tmp_path):
+    path, deltas = _merged_table(spark, tmp_path)
+    os.remove(os.path.join(path, deltas[0]["path"]))
+    report = dlog.validate_delta_log(path)
+    assert not report["valid"]
+    assert report["missing_files"] == [deltas[0]["path"]]
+
+
+def test_validator_reports_a_delta_size_mismatch(spark, tmp_path):
+    path, deltas = _merged_table(spark, tmp_path)
+    with open(os.path.join(path, deltas[0]["path"]), "ab") as f:
+        f.write(b"\0")
+    report = dlog.validate_delta_log(path)
+    assert not report["valid"]
+    assert report["size_mismatches"] == [deltas[0]["path"]]
+
+
+def test_validator_reports_a_missing_protocol_feature(spark, tmp_path):
+    path, _ = _merged_table(spark, tmp_path)
+    commit = os.path.join(path, "_delta_log", f"{1:020d}.json")
+    with open(commit, encoding="utf-8") as f:
+        kept = [line for line in f if '"protocol"' not in line]
+    with open(commit, "w", encoding="utf-8") as f:
+        f.writelines(kept)
+    report = dlog.validate_delta_log(path)
+    assert not report["valid"] and report["protocol_feature_missing"]
+    assert report["protocol"] == dlog.PROTOCOL_ACTION["protocol"]
+
+
+def test_replay_rejects_a_delta_logged_out_of_order(spark, tmp_path):
+    import pytest
+
+    path, deltas = _merged_table(spark, tmp_path)
+    commit = os.path.join(path, "_delta_log", f"{1:020d}.json")
+    with open(commit, encoding="utf-8") as f:
+        text = f.read()
+    with open(commit, "w", encoding="utf-8") as f:
+        f.write(text.replace('"version":1,', '"version":0,'))
+    with pytest.raises(ValueError, match="logged for version 0"):
+        dlog.replay_log(path)
 
 
 def test_validator_rejects_protocol_violations(spark, tmp_path):

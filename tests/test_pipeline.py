@@ -176,7 +176,7 @@ def test_media_pipeline_end_to_end(spark, sf_dir, tmp_path):
         (r.doc_id, r.phash) for r in maintained.collect()
     ) == sorted((r.doc_id, r.phash) for r in rebuilt.collect())
 
-    # the CoW merge actually produced a second version
+    # the merge actually produced a second version
     assert tables.latest_version(out + "/phash_index") >= 1
 
     # published clusters == recomputing the tail from the maintained index

@@ -46,44 +46,6 @@ def test_stream_source_is_streaming(spark, sf_dir):
     assert stream_events(spark, sf_dir).isStreaming
 
 
-def test_stateful_milestones_match_batch(spark, sf_dir):
-    """applyInPandasWithState custom operator: the set of milestones a
-    user crosses equals the batch-computed crossings of their cumulative
-    purchase total."""
-    from pyspark.sql import functions as F
-
-    from beauty_lakehouse_spark.catalog import load
-    from beauty_lakehouse_spark.streaming.stateful import (
-        MILESTONES,
-        purchase_milestones,
-    )
-
-    stream = stream_events(spark, sf_dir)
-    got = run_available_now(
-        purchase_milestones(stream), "t_milestones", output_mode="append"
-    )
-    crossings = sorted((r.user_id, r.milestone) for r in got.collect())
-
-    totals = (
-        load(spark, sf_dir)
-        .events.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.sum("value").alias("total"))
-        .collect()
-    )
-    expected = sorted(
-        (r.user_id, m) for r in totals for m in MILESTONES if r.total >= m - 1e-9
-    )
-    assert crossings == expected
-    # totals at crossing are monotone per user
-    per_user = {}
-    for r in sorted(got.collect(), key=lambda r: (r.user_id, r.milestone)):
-        assert r.total_at_crossing >= r.milestone
-        per_user.setdefault(r.user_id, []).append(r.total_at_crossing)
-    for vals in per_user.values():
-        assert vals == sorted(vals)
-
-
 def test_multi_batch_state_merging(spark, sf_dir, tmp_path):
     """Split the events fixture into 4 files and stream them one file
     per micro-batch: windowed/session state must merge across batches

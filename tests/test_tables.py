@@ -1,10 +1,14 @@
-"""Versioned curated tables: snapshots, time travel, copy-on-write MERGE."""
+"""Versioned curated tables: snapshots, time travel, merge-on-read MERGE."""
 
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from beauty_lakehouse_spark import tables
@@ -46,19 +50,81 @@ def test_merge_insert_update_delete(spark, tmp_path):
     assert v1 == {(1, "a", 1995), (2, "b", 1995), (3, "c", 1996)}
 
 
+def _tree(path):
+    """Every file under ``path``, relative, with its size."""
+    return {
+        os.path.relpath(os.path.join(root, f), path): os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+    }
+
+
 def test_merge_rewrites_only_affected_partitions(spark, tmp_path):
-    """Copy-on-write at partition granularity: a merge touching only
-    1996 must inherit the 1995 directory from v1 by reference."""
+    """Merge-on-read: a merge writes no file under any base directory —
+    the base is inherited by reference whole, and the batch lands in
+    its own delta directory."""
     path = str(tmp_path / "tbl")
     tables.write_versioned(
         _df(spark, [(1, "a", 1995), (3, "c", 1996)]), path, "year"
     )
+    before = _tree(os.path.join(path, "v00000001"))
     tables.merge_upsert(
-        spark, path, _df(spark, [(3, "C!", 1996)]), keys=["k"]
+        spark, path, _df(spark, [(3, "C!", 1996), (4, "d", 1997)]), keys=["k"],
+        deletes=spark.createDataFrame([(1,)], "k int"),
     )
+    assert _tree(os.path.join(path, "v00000001")) == before
     m = tables.read_manifest(path)
-    assert m["dirs"]["1995"].startswith("v00000001"), m["dirs"]
-    assert m["dirs"]["1996"].startswith("v00000002"), m["dirs"]
+    assert m["dirs"] == tables.read_manifest(path, 1)["dirs"]
+    assert [d["dir"] for d in m["deltas"]] == ["v00000002"]
+    assert {(r.k, r.v, r.year) for r in tables.read_versioned(spark, path).collect()} == {
+        (3, "C!", 1996), (4, "d", 1997)
+    }
+
+
+def test_merge_runs_one_job_and_writes_only_the_batch(spark, tmp_path):
+    """A MERGE whose source and deletes are plain parquet scans runs
+    one Spark job — the delta write: no join, no collect, no target
+    scan — and its files hold exactly the source rows plus the delete
+    keys."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "tbl")
+    tables.write_versioned(
+        _df(spark, [(i, f"v{i}", 1995 + i % 3) for i in range(30)]), path, "year"
+    )
+    ups, dels = str(tmp_path / "ups"), str(tmp_path / "dels")
+    _df(spark, [(i, f"u{i}", 1996) for i in range(0, 40, 4)]).write.parquet(ups)
+    spark.createDataFrame([(i,) for i in range(1, 30, 5)], "k int").write.parquet(dels)
+    source, deletes = spark.read.parquet(ups), spark.read.parquet(dels)
+
+    sc = spark.sparkContext
+    group = "test_merge_runs_one_job_and_writes_only_the_batch"
+    sc.setJobGroup(group, "merge")
+    try:
+        v = tables.merge_upsert(spark, path, source, keys=["k"], deletes=deletes)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    delta_dir = os.path.join(path, f"v{v:08d}")
+    written = sum(
+        pq.ParquetFile(os.path.join(delta_dir, f)).metadata.num_rows
+        for f in os.listdir(delta_dir) if f.endswith(".parquet")
+    )
+    assert written == 10 + 6
+
+
+def test_merge_keys_must_match_pending_deltas(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    tables.write_versioned(_df(spark, [(1, "a", 1995)]), path, "year")
+    tables.merge_upsert(spark, path, _df(spark, [(1, "b", 1995)]), keys=["k"])
+    with pytest.raises(ValueError, match="compact"):
+        tables.merge_upsert(spark, path, _df(spark, [(1, "c", 1995)]), keys=["k", "v"])
+    tables.compact(spark, path)
+    tables.merge_upsert(spark, path, _df(spark, [(1, "c", 1995)]), keys=["k", "v"])
+    assert {(r.k, r.v) for r in tables.read_versioned(spark, path).collect()} == {
+        (1, "b"), (1, "c")
+    }
 
 
 def test_merge_partition_moving_update(spark, tmp_path):
@@ -98,7 +164,14 @@ def test_delete_empties_partition(spark, tmp_path):
     )
     got = {(r.k, r.v, r.year) for r in tables.read_versioned(spark, path).collect()}
     assert got == {(1, "a", 1995)}
-    assert "1996" not in tables.read_manifest(path)["dirs"]
+    # the emptied partition drops out when compact() folds the delete
+    v = tables.compact(spark, path)
+    m = tables.read_manifest(path)
+    assert m["version"] == v and m["deltas"] == []
+    assert "1996" not in m["dirs"]
+    assert m["dirs"]["1995"] == tables.read_manifest(path, 1)["dirs"]["1995"]
+    got = {(r.k, r.v, r.year) for r in tables.read_versioned(spark, path).collect()}
+    assert got == {(1, "a", 1995)}
 
 
 def test_read_missing_table_raises(spark, tmp_path):
@@ -214,6 +287,11 @@ def test_snapshot_reads_take_the_schema_from_the_manifest(spark, tmp_path):
         _df(spark, [(1, "a", 1995), (2, "b", 1996)]), path, "year"
     )
     tables.merge_upsert(spark, path, _df(spark, [(2, "B!", 1996)]), keys=["k"])
+    tables.merge_upsert(
+        spark, path, _df(spark, [(3, "c", 1997)]), keys=["k"],
+        deletes=spark.createDataFrame([(3,)], "k int"),
+    )
+    assert len(tables.read_manifest(path)["deltas"]) == 2
     for p in (npath, path):
         m = tables.read_manifest(p)
         dirs = [os.path.join(p, d) for d in m["dirs"].values()]
@@ -236,6 +314,7 @@ def test_snapshot_reads_take_the_schema_from_the_manifest(spark, tmp_path):
     assert {(r.change_type, r.v) for r in feed.collect()} == {
         ("delete", "b"), ("insert", "B!")
     }
+    assert tables.read_versioned(spark, path, 2).count() == 2
 
 
 def test_vacuum_retention(spark, tmp_path):
@@ -247,11 +326,16 @@ def test_vacuum_retention(spark, tmp_path):
     )
     tables.merge_upsert(spark, path, _df(spark, [(2, "B2", 1996)]), keys=["k"])
     tables.merge_upsert(spark, path, _df(spark, [(2, "B3", 1996)]), keys=["k"])
+    # pending deltas are referenced by the latest version: nothing to drop
+    assert tables.vacuum(path, keep_versions=1) == []
+    tables.compact(spark, path)
 
     removed = tables.vacuum(path, keep_versions=1)
-    # v2's private 1996 dir is gone; v1's 1995 dir survives (inherited
-    # by the latest manifest), v1's 1996 dir is gone
-    assert removed, "expected at least one directory removed"
+    # both deltas and v1's 1996 dir are gone; v1's 1995 dir survives
+    # (inherited by the compacted manifest)
+    assert sorted(os.path.relpath(r, path) for r in removed) == [
+        os.path.join("v00000001", "__pt=1996"), "v00000002", "v00000003"
+    ]
     latest = {(r.k, r.v, r.year) for r in tables.read_versioned(spark, path).collect()}
     assert latest == {(1, "a", 1995), (2, "B3", 1996)}
     with pytest.raises(FileNotFoundError):
@@ -375,3 +459,125 @@ def test_incremental_topk_state_pure_python(spark, sf_dir):
     for (gr, gk, gn, gt), (wr, wk, wn, wt) in zip(got, want):
         assert (gr, gk, gn) == (wr, wk, wn)
         assert abs(gt - wt) < 1e-6
+
+
+# ---------------------------------------------------------------------------
+# merge-on-read against a pure-Python replay
+# ---------------------------------------------------------------------------
+
+_YEARS = st.sampled_from([1995, 1996, 1997])
+
+
+@st.composite
+def _merge_history(draw):
+    """A base table and 1-4 MERGE batches over a small key space, so
+    updates, inserts, deletes, delete+upsert of one key in one batch,
+    partition-moving updates and empty batches all occur; composite
+    keys and unpartitioned tables are drawn too."""
+    composite = draw(st.booleans())
+    key = st.tuples(
+        st.integers(0, 6), st.sampled_from(["x", "y"]) if composite else st.just("x")
+    )
+    row = st.tuples(key, st.sampled_from(["p", "q", "r"]), _YEARS).map(
+        lambda t: (*t[0], t[1], t[2])
+    )
+    rows = st.lists(row, max_size=8, unique_by=lambda r: r[:2])
+    batches = draw(st.lists(
+        st.tuples(rows, st.one_of(st.none(), st.lists(key, max_size=4))),
+        min_size=1, max_size=4,
+    ))
+    return composite, draw(st.booleans()), draw(rows), batches
+
+
+def _replay(base, batches):
+    """Every version's rows: upserts replace their key's rows, then the
+    batch's delete keys remove theirs."""
+    states = [sorted(base)]
+    for ups, dels in batches:
+        touched = {r[:2] for r in ups}
+        dead = set(dels or [])
+        state = [r for r in states[-1] if r[:2] not in touched] + list(ups)
+        states.append(sorted(r for r in state if r[:2] not in dead))
+    return states
+
+
+@settings(max_examples=10, deadline=None)
+@given(history=_merge_history())
+# always run: a partition-moving update, an insert, a delete, a delete
+# plus upsert of one key in one batch and an empty batch under a
+# composite key; an unpartitioned table re-inserting a deleted key
+@example(history=(True, True,
+                  [(1, "x", "p", 1995), (2, "x", "q", 1996), (2, "y", "r", 1997)],
+                  [([(1, "x", "q", 1997), (3, "y", "p", 1995)], [(2, "x")]),
+                   ([(2, "y", "p", 1995)], [(2, "y")]),
+                   ([], None)]))
+@example(history=(False, False,
+                  [(1, "x", "p", 1995), (2, "x", "q", 1996)],
+                  [([(1, "x", "r", 1995)], []),
+                   ([], [(2, "x")]),
+                   ([(2, "x", "p", 1996)], None)]))
+def test_merge_on_read_matches_replay(spark, history):
+    import tempfile
+
+    composite, partitioned, base, batches = history
+    keys = ["k", "t"] if composite else ["k"]
+    with tempfile.TemporaryDirectory() as root:
+        _check_history(spark, os.path.join(root, "tbl"), partitioned, keys, base, batches)
+
+
+def _check_history(spark, path, partitioned, keys, base, batches):
+    """Every version's read and every (from, to) change feed equal the
+    replay; then compact() and vacuum() keep the rows readable."""
+    from collections import Counter
+
+    from beauty_lakehouse_spark import delta_log
+
+    schema = "k int, t string, v string, year int"
+    tables.write_versioned(
+        spark.createDataFrame(base, schema), path, "year" if partitioned else None
+    )
+    for ups, dels in batches:
+        tables.merge_upsert(
+            spark, path, spark.createDataFrame(ups, schema), keys,
+            None if dels is None else spark.createDataFrame(dels, "k int, t string"),
+        )
+    states = _replay(base, batches)
+    n = len(states)
+
+    def tagged(df, *tag):
+        return df.select(*[F.lit(x).alias(f"__tag{i}") for i, x in enumerate(tag)], "*")
+
+    def grouped(df, width):
+        out = {}
+        for r in df.collect():
+            out.setdefault(tuple(r)[:width], []).append(tuple(r)[width:])
+        return out
+
+    snaps = grouped(reduce(DataFrame.unionByName, [
+        tagged(tables.read_versioned(spark, path, v), v) for v in range(1, n + 1)
+    ]), 1)
+    for v in range(1, n + 1):
+        assert sorted(snaps.get((v,), [])) == states[v - 1], v
+
+    feeds = grouped(reduce(DataFrame.unionByName, [
+        tagged(tables.table_changes(spark, path, a, b), a, b)
+        for a in range(1, n + 1) for b in range(1, n + 1)
+    ]), 2)
+    for a in range(1, n + 1):
+        for b in range(1, n + 1):
+            old, new = Counter(states[a - 1]), Counter(states[b - 1])
+            want = sorted(
+                [("insert", *r) for r in (new - old).elements()]
+                + [("delete", *r) for r in (old - new).elements()]
+            )
+            assert sorted(feeds.get((a, b), [])) == want, (a, b)
+
+    v = tables.compact(spark, path)
+    assert v == n + 1 and tables.read_manifest(path)["deltas"] == []
+    assert sorted(tuple(r) for r in tables.read_versioned(spark, path).collect()) == states[-1]
+    assert delta_log.validate_delta_log(path)["valid"]
+
+    tables.vacuum(path, keep_versions=2)
+    for kept in (n, n + 1):
+        got = sorted(tuple(r) for r in tables.read_versioned(spark, path, kept).collect())
+        assert got == states[-1], kept
