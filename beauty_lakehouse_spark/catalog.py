@@ -6,25 +6,33 @@ then a validator diffs expected columns). Our engine inverts that:
 schemas are declared here, reads are verified against them at load time,
 and the declaration doubles as documentation for every operator.
 
-We deliberately do NOT pass the schema into ``spark.read.parquet`` —
-parquet is self-describing, and forcing a user schema would insert casts
-that block predicate pushdown into the scan. Instead we assert
-compatibility after the (lazy, metadata-only) read.
+The schema is read from the table's own parquet footer on the driver
+(``footer_schema``) and passed to ``spark.read.schema(...).parquet``,
+so resolving a table starts no Spark job; inference would run one job
+per table to read that same footer. Because the schema passed is the
+file's own, Spark inserts no cast and the scan keeps its predicate
+pushdown (``tests/test_catalog.py`` compares the pushed filters with
+an inferring read's). The declared columns are then asserted against
+the resolved schema.
 
 Scale notes (100 TB):
 - Reads stay fully lazy; a ``Catalog`` is just a dict of unresolved scans.
 - Fact tables (``lineitem``, ``orders``, ``events``) should be
   date-partitioned at scale; the loader transparently supports
   directory-partitioned layouts because it reads whatever parquet tree
-  sits at ``{sf_dir}/{name}.parquet``.
+  sits at ``{sf_dir}/{name}.parquet`` (such a table's partition
+  columns come from Spark's inference, one job per resolve).
 - Dimension tables are flagged ``broadcastable`` so join builders can
   hint them explicitly instead of trusting size estimation.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 from dataclasses import dataclass, field
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -143,28 +151,212 @@ class Catalog:
 def _resolve_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The resolved, schema-checked table HANDLE, memoized per session
     and per table fingerprint (`memo`) — the metastore role: resolving
-    a path-based parquet read costs a driver round-trip plus a footer
-    schema-inference job (~0.12 s/table measured), and every operator
-    rebuild re-paid it. Only the handle (logical plan metadata) is
-    kept, never rows: every execution still scans the parquet files.
-    A table rewritten in place, including one part file of a directory
-    table, re-resolves; a production deployment gets the same effect
-    from catalog tables instead of path reads."""
+    a path-based parquet read costs a driver round-trip and a footer
+    read (``read_parquet``), and every operator rebuild re-paid it.
+    Only the handle (logical plan metadata) is kept, never rows: every
+    execution still scans the parquet files. A table rewritten in
+    place, including one part file of a directory table, re-resolves;
+    a production deployment gets the same effect from catalog tables
+    instead of path reads."""
     return memo.get_or_build(
         "table", spark, os.path.join(sf_dir, f"{name}.parquet"), _read_table, name
     )
 
 
 def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
-    import re
-
-    # batch reads glob their paths too — escape metacharacters so e.g.
-    # a bracketed fixture dir resolves the literal path instead of
-    # failing/matching wrong files
-    df = spark.read.parquet(re.sub(r"([\[\]{}*?\\])", r"\\\1", path))
-    df = _normalize_nanos(df)
+    df = _normalize_nanos(read_parquet(spark, path))
     _assert_schema(name, df)
     return df
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Batch read of the parquet file or directory at the literal local
+    ``path``, with the schema from its footer (``footer_schema``): no
+    Spark job runs before the first action. Where the footer cannot
+    stand in for Spark's inference, Spark infers it, which runs one
+    job. Batch reads glob their paths, so metacharacters are escaped:
+    a bracketed fixture dir resolves the literal path instead of
+    failing or matching the wrong files."""
+    glob = re.sub(r"([\[\]{}*?\\])", r"\\\1", path)
+    schema = footer_schema(spark, path)
+    if schema is None:
+        return spark.read.parquet(glob)
+    return spark.read.schema(schema).parquet(glob)
+
+
+#: Footer key under which Spark's writer stores the row schema it wrote.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark would infer for the parquet file or directory
+    at ``path``, read from the footer on the driver with pyarrow, by
+    Spark's own rule: the row schema a Spark writer stored in the
+    footer when there is one, else the parquet schema converted; then
+    every field, array element and map value made nullable, as
+    ``HadoopFsRelation`` does. ``TIMESTAMP(NANOS)`` is ``LongType``
+    under ``spark.sql.legacy.parquet.nanosAsLong``; a timestamp not
+    adjusted to UTC is ``TimestampNTZType`` (while
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``), one adjusted to
+    UTC is ``TimestampType``.
+
+    ``None`` where the footer cannot stand in for inference: a remote
+    URI, a directory with subdirectories (a ``k=v`` partitioned table)
+    or summary files, data files whose schemas disagree, a file pyarrow
+    cannot read, and any type this does not map (unsigned ints, INT96,
+    nanos without ``nanosAsLong``, field ids, ...)."""
+    url = urlsplit(path)
+    if url.scheme not in ("", "file"):
+        return None
+    files = _parquet_data_files(url.path if url.scheme else path)
+    if not files:
+        return None
+    import pyarrow.parquet as pq
+
+    conf = tuple(
+        spark.conf.get(key, default).lower() == "true"
+        for key, default in (
+            ("spark.sql.legacy.parquet.nanosAsLong", "false"),
+            ("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
+            ("spark.sql.parquet.binaryAsString", "false"),
+        )
+    )
+    schemas = set()
+    for f in files:
+        try:
+            meta = pq.read_metadata(f)
+        except (OSError, ValueError):  # not parquet, or unreadable
+            return None
+        schema = _file_schema(meta, conf)
+        if schema is None:
+            return None
+        schemas.add(schema.json())
+    if len(schemas) != 1:
+        return None
+    return schema
+
+
+def _parquet_data_files(path: str) -> list[str] | None:
+    """The data files Spark lists at a local ``path`` (names starting
+    with ``_`` or ``.`` are hidden), or ``None`` when the layout is one
+    whose inferred schema a single footer does not give: a
+    subdirectory (partition columns), or a ``_metadata`` /
+    ``_common_metadata`` summary file (Spark reads those first)."""
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for name in sorted(os.listdir(path)):
+        full = os.path.join(path, name)
+        if name.startswith(("_metadata", "_common_metadata")) or os.path.isdir(full):
+            return None
+        if not name.startswith(("_", ".")):
+            files.append(full)
+    return files
+
+
+def _file_schema(meta, conf: tuple[bool, bool, bool]) -> T.StructType | None:
+    """One file's schema from its footer (pyarrow ``FileMetaData``)."""
+    stored = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored is not None:
+        try:
+            return _as_nullable(T.StructType.fromJson(json.loads(stored)))
+        except (ValueError, KeyError, TypeError):  # a legacy schema string
+            return None
+    leaves = iter(meta.schema.column(i) for i in range(len(meta.schema)))
+    fields = []
+    for f in meta.schema.to_arrow_schema():
+        if f.metadata and b"PARQUET:field_id" in f.metadata:
+            return None
+        dtype = _spark_type(f.type, leaves, conf)
+        if dtype is None:
+            return None
+        fields.append(T.StructField(f.name, dtype, True))
+    if next(leaves, None) is not None:
+        return None
+    return T.StructType(fields)
+
+
+def _spark_type(atype, leaves, conf: tuple[bool, bool, bool]) -> T.DataType | None:
+    """Spark type of one arrow field: nesting (struct, list, map) from
+    the arrow schema, each leaf's type from its parquet column, which
+    is what Spark converts (arrow restores types, e.g. dictionaries,
+    that the file does not hold)."""
+    import pyarrow as pa
+
+    if pa.types.is_struct(atype):
+        fields = []
+        for i in range(atype.num_fields):
+            f = atype.field(i)
+            dtype = _spark_type(f.type, leaves, conf)
+            if dtype is None:
+                return None
+            fields.append(T.StructField(f.name, dtype, True))
+        return T.StructType(fields)
+    if pa.types.is_list(atype) or pa.types.is_large_list(atype) or (
+        pa.types.is_fixed_size_list(atype)
+    ):
+        elem = _spark_type(atype.value_type, leaves, conf)
+        return None if elem is None else T.ArrayType(elem, True)
+    if pa.types.is_map(atype):
+        key = _spark_type(atype.key_type, leaves, conf)
+        value = _spark_type(atype.item_type, leaves, conf)
+        return None if key is None or value is None else T.MapType(key, value, True)
+    if isinstance(atype, pa.ExtensionType):
+        return None
+    leaf = next(leaves, None)
+    return None if leaf is None else _leaf_type(leaf, *conf)
+
+
+def _leaf_type(col, nanos_as_long: bool, infer_ntz: bool, binary_as_string: bool):
+    """Spark's type for one parquet leaf column (physical type plus
+    logical annotation), or ``None`` for an unmapped one."""
+    physical = col.physical_type
+    logical = json.loads(col.logical_type.to_json())
+    kind = logical["Type"]
+    if kind == "Decimal":
+        if logical["precision"] > 38:
+            return None
+        return T.DecimalType(logical["precision"], logical["scale"])
+    if kind == "None":
+        return {
+            "BOOLEAN": T.BooleanType(), "INT32": T.IntegerType(), "INT64": T.LongType(),
+            "FLOAT": T.FloatType(), "DOUBLE": T.DoubleType(),
+            "BYTE_ARRAY": T.StringType() if binary_as_string else T.BinaryType(),
+            "FIXED_LEN_BYTE_ARRAY": T.BinaryType(),
+        }.get(physical)
+    if kind == "Int" and logical["isSigned"]:
+        return {
+            ("INT32", 8): T.ByteType(), ("INT32", 16): T.ShortType(),
+            ("INT32", 32): T.IntegerType(), ("INT64", 64): T.LongType(),
+        }.get((physical, logical["bitWidth"]))
+    if kind == "String" and physical == "BYTE_ARRAY":
+        return T.StringType()
+    if kind == "Date" and physical == "INT32":
+        return T.DateType()
+    if kind == "Timestamp" and physical == "INT64":
+        if logical["timeUnit"] == "nanoseconds":
+            return T.LongType() if nanos_as_long else None
+        if logical["isAdjustedToUTC"] or not infer_ntz:
+            return T.TimestampType()
+        return T.TimestampNTZType()
+    return None
+
+
+def _as_nullable(dtype: T.DataType) -> T.DataType:
+    """``dtype`` with every field, array element and map value nullable
+    (Spark's ``DataType.asNullable``)."""
+    if isinstance(dtype, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dtype.fields
+        ])
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(_as_nullable(dtype.elementType), True)
+    if isinstance(dtype, T.MapType):
+        return T.MapType(_as_nullable(dtype.keyType), _as_nullable(dtype.valueType), True)
+    return dtype
 
 
 def load(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> Catalog:

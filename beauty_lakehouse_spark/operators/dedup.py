@@ -747,8 +747,10 @@ def connected_components(
     # materialize the edge pipeline ONCE before mirroring: ``both``
     # references ``edges`` twice (forward ∪ reversed), so an uncached
     # upstream (e.g. setsim's candidate-verify tail) would otherwise
-    # run twice inside the first materializing action (§1.2)
-    edges = edges.localCheckpoint(eager=False)
+    # run twice inside the first materializing action (§1.2). Eager:
+    # lazily, the two union arms' concurrent tasks could both compute
+    # the same checkpoint partition
+    edges = edges.localCheckpoint(eager=True)
     both = edges.select(
         F.col("src").alias("a"), F.col("dst").alias("b")
     ).unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))

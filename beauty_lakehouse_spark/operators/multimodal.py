@@ -2006,12 +2006,15 @@ def exactint_hash_pairs(h: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     wk = Window.partitionBy("phash").orderBy("doc_id")
+    # feeds same-hash pairs and both cross sides: eager, so one job
+    # computes it before those branches' concurrent jobs read it
+    # (lazily, two of them could compute the same partition)
     groups = (
         h.withColumn("rk", F.row_number().over(wk))
         .filter(F.col("rk") <= PHASH_EXACT_FAMILY_CAP)
         .groupBy("phash")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
-    ).localCheckpoint(eager=False)  # feeds same-hash pairs + both cross sides
+    ).localCheckpoint(eager=True)
     band_bits = PHASH_BITS // PHASH_BANDS
     mask = (1 << band_bits) - 1
     hb = groups.select(

@@ -215,6 +215,24 @@ def read_curated(spark: SparkSession, path: str, fmt: str | None = None) -> Data
     return reader.load(path)
 
 
+def _data_files(path: str, fmt: str) -> list[str]:
+    """The data files a reader of the table at ``path`` scans: files
+    with the format's own extension (.parquet, .orc, .csv, .json),
+    recursively, since a partitioned table's files live under
+    key=value/ subdirectories; names starting with ``_`` or ``.``
+    (``_delta_log``, ``_temporary``, ``.crc`` checksums) are hidden,
+    as Spark's file index hides them."""
+    found = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", ".")) or "=" in d]
+        found += [
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(f".{fmt}") and not f.startswith(("_", "."))
+        ]
+    return sorted(found)
+
+
 def validate_curated(
     spark: SparkSession, path: str, expected_rows: int | None = None,
     fmt: str | None = None, df: DataFrame | None = None,
@@ -222,24 +240,17 @@ def validate_curated(
     """Post-write validation scan (S5, 01_dataLake_ingestion.ipynb:620-667):
     assert the table artifacts exist, read back, count, diff schema.
     ``df`` is a read-back of ``path`` to validate instead of reading
-    the table again."""
+    the table again. A parquet table's rows are counted from its data
+    files' footers, the row-group counts Spark's ``count(*)`` over
+    parquet reads too, so no Spark job runs for them; delta and orc
+    tables are counted by Spark."""
     fmt = _curated_format(spark, fmt)
     result: dict = {"path": path, "format": fmt}
     if fmt == "delta":
         result["is_delta_table"] = os.path.isdir(os.path.join(path, "_delta_log"))
     else:
-        # recursive: a partitioned table's files live under key=value/
-        # subdirectories, not at the top level; data files carry the
-        # format's own extension (.parquet, .orc, .csv, .json)
-        result["has_files"] = (
-            any(
-                f.endswith(f".{fmt}")
-                for _, _, files in os.walk(path)
-                for f in files
-            )
-            if os.path.isdir(path)
-            else False
-        )
+        files = _data_files(path, fmt)
+        result["has_files"] = bool(files)
     # REAL `_delta_log` validation (S5, VERDICT r10 ask #2): when the
     # stand-in carries a transaction log, replay it per the public
     # protocol — version chain, protocol/metaData in commit 0, add/
@@ -258,7 +269,12 @@ def validate_curated(
             result["delta_log_error"] = str(e)
     if df is None:
         df = read_curated(spark, path, fmt)
-    result["n_rows"] = df.count()
+    if fmt == "parquet":
+        import pyarrow.parquet as pq
+
+        result["n_rows"] = sum(pq.read_metadata(f).num_rows for f in files)
+    else:
+        result["n_rows"] = df.count()
     result["columns"] = df.columns
     if expected_rows is not None:
         result["row_count_matches"] = result["n_rows"] == expected_rows

@@ -13,7 +13,7 @@ Design rules (the ones that keep a 100 TB/day stream healthy):
 
 Fixture generations vary the on-disk encoding of ``ts`` (TIMESTAMP(NANOS)
 vs plain timestamp[us] without timezone); like the batch catalog
-(catalog.py), the stream reader probes the footer schema and normalizes
+(catalog.py), the stream reader reads the footer schema and normalizes
 to TimestampType, so both paths see identical timestamps.
 """
 
@@ -141,7 +141,7 @@ def _spread_stream_scan(df: DataFrame, path: str, cores: int) -> DataFrame:
 
 
 #: Non-timestamp columns of the events stream; ``ts`` is appended with
-#: whatever type the footer probe observes on disk.
+#: whatever type the footer gives it on disk.
 _EVENTS_FIXED_FIELDS = [
     T.StructField("event_id", T.LongType(), True),
     T.StructField("user_id", T.LongType(), True),
@@ -161,11 +161,13 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     as int64 under ``nanosAsLong`` (→ ``ts div 1000`` integer division,
     then ``timestamp_micros``), plain timestamp[us] arrives as
     TimestampNTZ (→ cast; a no-op instant-wise under the pinned UTC
-    session). A footer-only batch probe picks the branch."""
+    session). The branch follows the type the file's footer gives
+    ``ts``, read on the driver (``catalog.read_parquet``), so building
+    the stream starts no Spark job."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{_escape_glob(sf_dir)}/events.parquet"
-    ts_on_disk = spark.read.parquet(path).schema["ts"].dataType
+    events = catalog.read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
+    ts_on_disk = events.schema["ts"].dataType
     schema = T.StructType(
         [T.StructField("ts", ts_on_disk, True), *_EVENTS_FIXED_FIELDS]
     )

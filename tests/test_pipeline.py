@@ -34,9 +34,10 @@ def test_full_pipeline(spark, tmp_path):
 
 def test_pipeline_counts_rows_from_its_own_writes(spark, tmp_path):
     """Each table's row count comes from its own CSV write, not from a
-    job that re-runs the generator, and each curated table is read
-    back once: the pipeline runs at most 25 Spark jobs before it
-    returns, and the manifest counts are the raw zone's row counts."""
+    job that re-runs the generator, and each curated table's count
+    from its parquet footers, not from a scan: the pipeline runs at
+    most 14 Spark jobs before it returns, and the manifest counts are
+    the raw zone's row counts."""
     import os
 
     sc = spark.sparkContext
@@ -49,7 +50,7 @@ def test_pipeline_counts_rows_from_its_own_writes(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs <= 25, n_jobs
+    assert n_jobs <= 14, n_jobs
     for name in ("customers", "products", "orders", "order_items"):
         raw = spark.read.option("header", True).csv(
             os.path.join(res.raw_dir, name)

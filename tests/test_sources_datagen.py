@@ -38,6 +38,28 @@ def test_curated_write_read_validate(spark, tmp_path):
     assert set(report["columns"]) == set(customers.columns)
 
 
+def test_validation_reports_a_removed_part_file(spark, tmp_path):
+    """Counting rows from the footers still sees a lost part file: the
+    count falls short and the log names a file that is gone; with its
+    only part file removed the table has no files at all."""
+    import os
+
+    for parts, partition_by in ((3, None), (3, ["p"]), (1, None)):
+        df = spark.range(0, 90, numPartitions=parts).withColumn("p", F.col("id") % 2)
+        path = str(tmp_path / f"t{parts}_{bool(partition_by)}")
+        sources.write_curated(df, path, partition_by=partition_by)
+        assert sources.validate_curated(spark, path, expected_rows=90)["row_count_matches"]
+        victim = sources._data_files(path, "parquet")[0]
+        os.remove(victim)
+        report = sources.validate_curated(spark, path, expected_rows=90)
+        assert report["delta_log_valid"] is False, victim
+        if parts == 1 and not partition_by:
+            assert report["has_files"] is False
+        else:
+            assert report["has_files"] and not report["row_count_matches"]
+            assert report["n_rows"] == spark.read.parquet(path).count() < 90
+
+
 def test_metadata_sidecar_round_trip(spark, tmp_path):
     ds = datagen.generate(spark, 50, 30, 100)
     path = str(tmp_path / "metadata.json")
