@@ -792,12 +792,16 @@ def connected_components(
             l2 = labels.select(
                 F.col("id").alias("jid"), F.col("comp").alias("jcomp")
             )
+            # Eager: the next round reads ``labels`` on both sides of
+            # its join, and lazily the two concurrent shuffle stages
+            # computed the same checkpoint partition twice (``Block
+            # rdd_…_0 already exists`` at sf0.1, attributed by RDD id)
             labels = (
                 refs.join(l2, refs.b == F.col("jid"))
                 .select(F.col("a").alias("id"), F.col("jcomp").alias("comp"))
                 .groupBy("id")
                 .agg(F.min("comp").alias("comp"))
-                .localCheckpoint(eager=False)
+                .localCheckpoint(eager=True)
             )
             rounds_done += 1
         sig = labels.agg(F.sum("comp").alias("s")).collect()[0]["s"]

@@ -1287,10 +1287,13 @@ def q_part_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = t.part.select(
         "p_partkey", "p_name", "p_brand", "p_retailprice", "p_size"
     )
-    # name-domain node ids: min part key per name
+    # name-domain node ids: min part key per name. Eager: it feeds
+    # both edge endpoints, the node list and the row expand, and
+    # lazily two concurrent jobs computed the same partition (a
+    # ``Block rdd_…_0 already exists`` warning at sf0.1)
     name_id = part.groupBy("p_name").agg(
         F.min("p_partkey").alias("name_id")
-    ).localCheckpoint(eager=False)  # feeds edges, node list, row expand
+    ).localCheckpoint(eager=True)
     np_ = fuzzy_name_pairs(part)
     ia = name_id.select(F.col("p_name").alias("name_a"), F.col("name_id").alias("src"))
     ib = name_id.select(F.col("p_name").alias("name_b"), F.col("name_id").alias("dst"))

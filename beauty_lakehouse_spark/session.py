@@ -27,6 +27,16 @@ engine makes the cluster-scale decisions explicit here, once:
 - One partition-width rule: ``width`` sizes a stage by its volume,
   ``spread`` fans out a scan with too few splits. Both take the core
   count explicitly; ``cores`` is the one reader of the session's.
+- PySpark's DataFrame debugging is off
+  (``spark.python.sql.dataFrameDebugging.enabled``). With it on, every
+  Column call captures its Python call site, at ~5 extra py4j round
+  trips a call: the lakehouse benchmark's op builds made ~5,500 py4j
+  calls a warm pass with it and ~2,100-2,500 without. An error keeps
+  its error class, message and JVM stack trace; it loses only the
+  "DataFrame query context" line naming the Python call site. Static,
+  so it reaches only sessions ``get_spark`` builds.
+- The driver heap defaults to a quarter of the host's memory, at most
+  16g (``driver_memory``); ``SPARK_DRIVER_MEM`` overrides it.
 """
 
 from __future__ import annotations
@@ -62,12 +72,21 @@ DEFAULT_CONF: dict[str, str] = {
     # order numbers its stages anew and recompiles (segment_priority_chisq:
     # 2-18 classes a run). The id stays in the plan and the source comment.
     "spark.sql.codegen.useIdInClassName": "false",
+    # Static; see the module docstring.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
 def local_cores() -> int:
     """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEM``, else a quarter of this host's physical
+    memory, at most 16g."""
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.environ.get("SPARK_DRIVER_MEM") or f"{min(16 * 1024, host // 4 // 2**20)}m"
 
 
 def cores(spark: SparkSession) -> int:
@@ -108,7 +127,7 @@ def get_spark(app_name: str = "beauty_lakehouse_spark") -> SparkSession:
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.driver.maxResultSize", "4g")
         # no UI server; counters are read from the in-process status store
         .config("spark.ui.enabled", "false")

@@ -332,6 +332,13 @@ def rate_capped_grid_finish(drained: DataFrame) -> DataFrame:
     )
 
 
+#: Spark's checkpoint file manager that renames through ``FileSystem``.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 def run_available_now(
     result: DataFrame,
     name: str,
@@ -351,14 +358,37 @@ def run_available_now(
     restored afterwards), and caps the returned table's scan width.
     Partition count never changes WHAT a drain
     computes (aggregation/join results are partitioning-independent),
-    only how many state stores each micro-batch must load and commit."""
+    only how many state stores each micro-batch must load and commit.
+
+    The drain also checkpoints through Spark's
+    ``FileSystemBasedCheckpointFileManager``, set and restored with the
+    partition count. Spark's default manager renames through
+    ``FileContext``, which without Hadoop's native library forks a
+    ``readlink`` process for every offset, commit and state-store file
+    it renames: 224 forks a warm ``ingest_merge_stream`` pass, whose
+    state-store commits took 0.42 s a run with them and 0.05 s without.
+    ``FileSystem.rename`` is not an atomic no-overwrite rename. That is
+    safe here because the drain checkpoints into a fresh Spark temp dir
+    that only this query writes and nothing resumes; under a
+    session-wide ``spark.sql.streaming.checkpointLocation`` the drain's
+    checkpoint is durable, so the default manager is kept, as it is for
+    ``merge_sink.merge_stream``'s.
+
+    The memory sink's temp view ``name`` is dropped before returning:
+    the returned frame's analyzed plan already holds the sink's rows."""
     spark = result.sparkSession
     if state_partitions is None:
         state_partitions = _plan_state_partitions(result, cores(spark))
-    prev = None
+    drain_conf = {}
     if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        drain_conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+    if spark.conf.get("spark.sql.streaming.checkpointLocation", None) is None:
+        drain_conf["spark.sql.streaming.checkpointFileManagerClass"] = (
+            _FS_CHECKPOINT_MANAGER
+        )
+    prev = {k: spark.conf.get(k, None) for k in drain_conf}
+    for k, v in drain_conf.items():
+        spark.conf.set(k, v)
     try:
         q = (
             result.writeStream.format("memory")
@@ -369,9 +399,13 @@ def run_available_now(
         )
         q.awaitTermination()
     finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     out = spark.table(name)
+    spark.catalog.dropTempView(name)
     # Right-size the drained table's scan width to the explicit or
     # volume-derived state-partition count (r14 §2.6/§5): the memory sink
     # holds the complete-mode snapshot as driver-local rows, and a

@@ -95,3 +95,40 @@ def test_reused_session_gets_every_runtime_default(spark):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
+
+
+def test_checkpoint_manager_is_set_only_by_the_drain_runner():
+    """Only ``run_available_now``, whose drains checkpoint into a fresh
+    temp dir, swaps Spark's checkpoint file manager; a durable
+    checkpoint keeps the default's atomic rename."""
+    setters = sorted(
+        str(p.relative_to(PACKAGE))
+        for p in PACKAGE.rglob("*.py")
+        if "checkpointFileManagerClass" in p.read_text()
+    )
+    assert setters == [os.path.join("streaming", "pipelines.py")]
+
+
+def test_dataframe_debugging_is_off_and_errors_keep_their_class(spark):
+    """No call-site capture per Column call; a bad column still raises
+    with its error class."""
+    import pytest
+    from pyspark.errors import AnalysisException
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    with pytest.raises(AnalysisException) as err:
+        spark.range(3).select("no_such_column").collect()
+    assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
+
+
+def test_driver_memory_is_a_quarter_of_the_host_at_most_16g(monkeypatch):
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    page = 4096
+    for host_gib, want in ((8, "2048m"), (64, "16384m"), (256, "16384m")):
+        sizes = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": host_gib * 2**30 // page}
+        monkeypatch.setattr(os, "sysconf", sizes.__getitem__)
+        assert session.driver_memory() == want
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "1g")
+    assert session.driver_memory() == "1g"

@@ -1115,3 +1115,119 @@ def test_drained_table_scan_width_matches_state_sizing(spark, sf_dir):
     assert derived is not None
     drained = run_available_now(agg, "t_scan_width")
     assert drained.rdd.getNumPartitions() <= derived
+
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+class _ManagerSeen:
+    """A ``StreamingQueryListener`` recording the session's checkpoint
+    manager setting as each query starts (Spark calls
+    ``onQueryStarted`` on the starting thread, before ``start``
+    returns)."""
+
+    def __init__(self, spark):
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        seen = self.seen = []
+
+        class Listener(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                seen.append(spark.conf.get(_MANAGER_KEY, None))
+
+            def onQueryProgress(self, event):
+                pass
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                pass
+
+        self.spark, self.listener = spark, Listener()
+
+    def __enter__(self):
+        self.spark.streams.addListener(self.listener)
+        return self.seen
+
+    def __exit__(self, *exc):
+        self.spark.streams.removeListener(self.listener)
+
+
+def test_drain_checkpoints_through_the_filesystem_manager(spark, sf_dir):
+    """While a drain runs, its session names Spark's FileSystem-based
+    checkpoint manager (no forked ``readlink`` per renamed checkpoint
+    file); once it returns the setting is gone again, and so is the
+    memory sink's query-name view, while the returned frame still reads
+    the drained rows."""
+    from beauty_lakehouse_spark.streaming.pipelines import _FS_CHECKPOINT_MANAGER
+
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+    with _ManagerSeen(spark) as seen:
+        got = run_available_now(
+            hourly_event_counts(stream_events(spark, sf_dir)), "t_fs_manager"
+        )
+    assert seen == [_FS_CHECKPOINT_MANAGER]
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+    assert "t_fs_manager" not in {t.name for t in spark.catalog.listTables()}
+    assert _canon(got) == _canon(batch_events.q_events_hourly(spark, sf_dir))
+
+
+def test_drain_restores_the_checkpoint_manager(spark, sf_dir):
+    """The previous setting comes back after a drain returns and after
+    one raises, whether it was unset or set before."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    default = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for before in (None, default):
+            if before is not None:
+                spark.conf.set(_MANAGER_KEY, before)
+            run_available_now(
+                hourly_event_counts(stream_events(spark, sf_dir)), "t_restore_ok"
+            )
+            assert spark.conf.get(_MANAGER_KEY, None) == before
+            # complete mode over a stream with no aggregate fails to start
+            with pytest.raises(AnalysisException):
+                run_available_now(
+                    stream_events(spark, sf_dir).select("event_id"),
+                    "t_restore_raise",
+                )
+            assert spark.conf.get(_MANAGER_KEY, None) == before
+            assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
+    finally:
+        spark.conf.unset(_MANAGER_KEY)
+
+
+def test_durable_checkpoints_keep_the_default_manager(spark, sf_dir, tmp_path):
+    """``merge_stream``'s user-given checkpoint, and a drain under a
+    session-wide checkpoint location, keep Spark's default (atomic
+    ``FileContext`` rename) manager."""
+    from beauty_lakehouse_spark import tables
+    from beauty_lakehouse_spark.catalog import load
+    from beauty_lakehouse_spark.streaming.merge_sink import merge_stream
+
+    path = str(tmp_path / "events_tbl")
+    tables.write_versioned(load(spark, sf_dir).events.limit(10), path)
+    with _ManagerSeen(spark) as seen:
+        merge_stream(
+            stream_events(spark, sf_dir),
+            path,
+            keys=["event_id"],
+            seq_col="ts",
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        ).awaitTermination()
+        spark.conf.set("spark.sql.streaming.checkpointLocation", str(tmp_path / "loc"))
+        try:
+            run_available_now(
+                hourly_event_counts(stream_events(spark, sf_dir)), "t_durable"
+            )
+        finally:
+            spark.conf.unset("spark.sql.streaming.checkpointLocation")
+    assert seen == [None, None]
+
