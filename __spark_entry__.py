@@ -23,8 +23,10 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from beauty_lakehouse_spark import tables
+from beauty_lakehouse_spark import catalog, streaming, tables
+from beauty_lakehouse_spark.functions import epoch_us
 from beauty_lakehouse_spark.functions import halfup_div_sql as _hud
 from beauty_lakehouse_spark.functions import isqrt_sql as _isq
 from beauty_lakehouse_spark.functions import ln_micro_sql as _lnm
@@ -56,11 +58,7 @@ def entry(spark: SparkSession) -> DataFrame:
 def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched multimodal feature extraction (fake kernel — the
     container has no codecs; rows-only check, determinism via pytest)."""
-    from pyspark.sql import functions as F
-
-    from beauty_lakehouse_spark.catalog import load
-
-    t = load(spark, sf_dir)
+    t = catalog.load(spark, sf_dir)
     media = multimodal.media_from_documents(t.documents)
     feats = multimodal.extract_features(media)
     return feats.select(
@@ -80,9 +78,7 @@ _QUALITY_TABLES = [
 
 
 def _q_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from beauty_lakehouse_spark.catalog import load
-
-    t = load(spark, sf_dir)
+    t = catalog.load(spark, sf_dir)
     return quality.validate({n: t.table(n) for n in _QUALITY_TABLES})
 
 
@@ -1017,7 +1013,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # and integer DFT band-energy audio fingerprint
         "media_phash_pairs_exactint": multimodal.q_media_phash_pairs_exactint,
         "media_audio_pairs_exactint": multimodal.q_media_audio_pairs_exactint,
-        # r9: fingerprint-at-ingest — 14th oracle-matched streaming drain
+        # fingerprint-at-ingest: the streamed twin of the exact-int pHash
         "media_phash_stream": _q_media_phash_stream,
         "cardinality_sketches": quality.q_cardinality_sketches,  # HLL
         # r13: graduated to the portable DDSketch register form (oracle)
@@ -1036,17 +1032,8 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def _q_events_hourly_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window streaming drain, hash-checked against the SAME
     DuckDB oracle as the batch q_events_hourly."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        hourly_event_counts,
-        run_available_now,
-        stream_events,
-    )
-
-    return run_available_now(
-        hourly_event_counts(stream_events(spark, sf_dir)),
-        f"gate_hourly_{uuid.uuid4().hex[:8]}",
+    return streaming.run_available_now(
+        streaming.hourly_event_counts(streaming.stream_events(spark, sf_dir))
     )
 
 
@@ -1055,23 +1042,9 @@ def _q_sprt_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sufficient-statistic grid maintained by the orders landing stream
     (complete-mode, bounded by the calendar span), decision walk
     finished batch-side. Shares q_sprt_decision's oracle row."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.temporal import (
-        sprt_day_grid,
-        sprt_finish,
-    )
-    from beauty_lakehouse_spark.streaming import (
-        run_available_now,
-        stream_orders,
-    )
-
-    return sprt_finish(
-        run_available_now(
-            sprt_day_grid(stream_orders(spark, sf_dir)),
-            f"gate_sprt_{uuid.uuid4().hex[:8]}",
-        )
-    )
+    return temporal.sprt_finish(streaming.run_available_now(
+        temporal.sprt_day_grid(streaming.stream_orders(spark, sf_dir))
+    ))
 
 
 def _q_orders_checksum_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1079,17 +1052,8 @@ def _q_orders_checksum_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained by the landing stream (complete-mode state = two
     numbers). Hash-checked against the orders slice of the same
     canonical-hash CTE the batch table_checksums oracle uses."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        orders_checksum_stream,
-        run_available_now,
-        stream_orders,
-    )
-
-    return run_available_now(
-        orders_checksum_stream(stream_orders(spark, sf_dir)),
-        f"gate_ochk_{uuid.uuid4().hex[:8]}",
+    return streaming.run_available_now(
+        streaming.orders_checksum_stream(streaming.stream_orders(spark, sf_dir))
     )
 
 
@@ -1099,35 +1063,15 @@ def _q_events_multires_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drained minute TABLE at read time (TimescaleDB real-time-
     aggregate semantics). Hash-checked against the SAME DuckDB oracle
     as the batch q_events_multires_rollup."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.events import multires_cascade
-    from beauty_lakehouse_spark.streaming import (
-        multires_minute_values,
-        run_available_now,
-        stream_events,
-    )
-
-    minute = run_available_now(
-        multires_minute_values(stream_events(spark, sf_dir)),
-        f"gate_multires_{uuid.uuid4().hex[:8]}",
-    )
-    return multires_cascade(minute)
+    return events.multires_cascade(streaming.run_available_now(
+        streaming.multires_minute_values(streaming.stream_events(spark, sf_dir))
+    ))
 
 
 def _q_events_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-window streaming drain behind q_events_sessions' oracle."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        run_available_now,
-        session_values,
-        stream_events,
-    )
-
-    return run_available_now(
-        session_values(stream_events(spark, sf_dir)),
-        f"gate_sessions_{uuid.uuid4().hex[:8]}",
+    return streaming.run_available_now(
+        streaming.session_values(streaming.stream_events(spark, sf_dir))
     )
 
 
@@ -1135,34 +1079,16 @@ def _q_dedup_groups_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-dedup group table (complete-mode aggregate over
     micro-batches) behind a batch-equivalent DuckDB oracle — min/count
     are order-insensitive, so the drain is deterministic."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        dedup_group_table,
-        run_available_now,
-        stream_documents,
-    )
-
-    return run_available_now(
-        dedup_group_table(stream_documents(spark, sf_dir)),
-        f"gate_dedup_{uuid.uuid4().hex[:8]}",
+    return streaming.run_available_now(
+        streaming.dedup_group_table(streaming.stream_documents(spark, sf_dir))
     )
 
 
 def _q_latest_event_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming newest-per-key drain behind q_latest_event_per_user's
     oracle (complete-mode max(struct) is slicing-invariant)."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        latest_event_table,
-        run_available_now,
-        stream_events,
-    )
-
-    return run_available_now(
-        latest_event_table(stream_events(spark, sf_dir)),
-        f"gate_latest_{uuid.uuid4().hex[:8]}",
+    return streaming.run_available_now(
+        streaming.latest_event_table(streaming.stream_events(spark, sf_dir))
     )
 
 
@@ -1171,19 +1097,13 @@ def _q_events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (union of two identical stream legs = at-least-once redelivery);
     ``dropDuplicatesWithinWatermark`` on event_id must reduce it back
     to the unique event set — the oracle is simply the events table."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        dedup_events_stream,
-        run_available_now,
-        stream_events,
-    )
-
-    doubled = stream_events(spark, sf_dir).union(stream_events(spark, sf_dir))
-    return run_available_now(
-        dedup_events_stream(doubled),
-        f"gate_evdedup_{uuid.uuid4().hex[:8]}",
-        output_mode="append",
+    return streaming.run_available_now(
+        streaming.dedup_events_stream(
+            streaming.stream_events(spark, sf_dir).union(
+                streaming.stream_events(spark, sf_dir)
+            )
+        ),
+        "append",
     )
 
 
@@ -1192,18 +1112,9 @@ def _q_purchase_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFr
     within 30 minutes, same user) behind a plain SQL self-join oracle.
     Inner time-bounded joins emit in append mode; the drained pair set
     is exactly the batch join's, whatever the micro-batch slicing."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        run_available_now,
-        stream_events,
-        view_purchase_attribution,
-    )
-
-    return run_available_now(
-        view_purchase_attribution(stream_events(spark, sf_dir)),
-        f"gate_attrib_{uuid.uuid4().hex[:8]}",
-        output_mode="append",
+    return streaming.run_available_now(
+        streaming.view_purchase_attribution(streaming.stream_events(spark, sf_dir)),
+        "append",
     )
 
 
@@ -1213,11 +1124,7 @@ def _quality_report_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling fan-out over resized media (fake kernels)."""
-    from pyspark.sql import functions as F
-
-    from beauty_lakehouse_spark.catalog import load
-
-    t = load(spark, sf_dir)
+    t = catalog.load(spark, sf_dir)
     media = multimodal.media_from_documents(t.documents)
     frames = multimodal.sample_frames(multimodal.resize_media(media), n_frames=4)
     return frames.select(
@@ -1234,9 +1141,7 @@ def _q_media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed container). Payload content is still document-derived
     (no image corpus in the fixtures), so the registration stays
     rows-only, but both decodes are real."""
-    from beauty_lakehouse_spark.catalog import load
-
-    t = load(spark, sf_dir)
+    t = catalog.load(spark, sf_dir)
     media = multimodal.mixed_image_from_documents(t.documents)
     return multimodal.media_phash_pairs(
         media, codec=multimodal.image_phash_kernel
@@ -1250,9 +1155,7 @@ def _q_media_audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate/verify pipeline is modality-agnostic, only the kernel
     changes. Rows-only (payload content is document-derived), but the
     decode step is no longer synthetic."""
-    from beauty_lakehouse_spark.catalog import load
-
-    t = load(spark, sf_dir)
+    t = catalog.load(spark, sf_dir)
     media = multimodal.wav_from_documents(t.documents)
     return multimodal.media_phash_pairs(
         media, codec=multimodal.wav_fingerprint_kernel
@@ -1680,20 +1583,12 @@ def _q_media_phash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point integer DCT pHash (`multimodal.phash_exactint`)
     running as a STREAMING transform over the documents landing
     stream (append mode, availableNow drain) — per-doc stateless, so
-    the streaming plan is the batch kernel per micro-batch. The 14th
-    oracle-matched streaming drain; shares the batch twin's hash CTE
-    chain as its DuckDB oracle, so maintained-at-ingest fingerprints
-    ≡ batch recompute bit-for-bit."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.multimodal import phash_exactint
-    from beauty_lakehouse_spark.streaming import run_available_now
-    from beauty_lakehouse_spark.streaming.pipelines import stream_documents
-
-    return run_available_now(
-        phash_exactint(stream_documents(spark, sf_dir)),
-        f"gate_mediafp_{uuid.uuid4().hex[:8]}",
-        output_mode="append",
+    the streaming plan is the batch kernel per micro-batch. Shares the
+    batch twin's hash CTE chain as its DuckDB oracle, so
+    maintained-at-ingest fingerprints ≡ batch recompute bit-for-bit."""
+    return streaming.run_available_now(
+        multimodal.phash_exactint(streaming.stream_documents(spark, sf_dir)),
+        "append",
     )
 
 
@@ -1704,16 +1599,11 @@ def _q_winnow_fps_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch plan per micro-batch: fingerprint-at-ingest, the shape a
     production dedup index maintains. Hash-checked against the batch
     winnow selection's DuckDB list-SQL oracle."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.text import winnow_fingerprints
-    from beauty_lakehouse_spark.streaming import run_available_now
-    from beauty_lakehouse_spark.streaming.pipelines import stream_documents
-
-    return run_available_now(
-        winnow_fingerprints(stream_documents(spark, sf_dir), stream_safe=True),
-        f"gate_winnow_{uuid.uuid4().hex[:8]}",
-        output_mode="append",
+    return streaming.run_available_now(
+        text.winnow_fingerprints(
+            streaming.stream_documents(spark, sf_dir), stream_safe=True
+        ),
+        "append",
     )
 
 
@@ -1723,16 +1613,9 @@ def _q_doc_chunking_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against the batch q_doc_chunking oracle. The chunker
     needs no state at all, so the streaming plan is the batch plan per
     micro-batch: the ingest-time form of example construction."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.curation import chunk_documents
-    from beauty_lakehouse_spark.streaming import run_available_now
-    from beauty_lakehouse_spark.streaming.pipelines import stream_documents
-
-    return run_available_now(
-        chunk_documents(stream_documents(spark, sf_dir)),
-        f"gate_chunk_{uuid.uuid4().hex[:8]}",
-        output_mode="append",
+    return streaming.run_available_now(
+        curation.chunk_documents(streaming.stream_documents(spark, sf_dir)),
+        "append",
     )
 
 
@@ -1743,18 +1626,9 @@ def _q_gopher_quality_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan IS the batch plan per micro-batch, which is exactly how a
     production corpus gate applies quality rules before anything
     lands. Behind the SAME oracle row as the batch
-    ``gopher_quality_flags`` — the 27th oracle-matched streaming
-    drain."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.text import gopher_flags
-    from beauty_lakehouse_spark.streaming import run_available_now
-    from beauty_lakehouse_spark.streaming.pipelines import stream_documents
-
-    return run_available_now(
-        gopher_flags(stream_documents(spark, sf_dir)),
-        f"gate_gqf_{uuid.uuid4().hex[:8]}",
-        output_mode="append",
+    ``gopher_quality_flags``."""
+    return streaming.run_available_now(
+        text.gopher_flags(streaming.stream_documents(spark, sf_dir)), "append"
     )
 
 
@@ -1763,30 +1637,15 @@ def _q_hll_distinct_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the documents landing stream (state ≤ m rows — the
     canonical streaming-sketch shape), drained and finished batch-side
     — behind the SAME oracle as the batch documents.doc_id HLL row."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from beauty_lakehouse_spark.catalog import load
-    from beauty_lakehouse_spark.operators import quality
-    from beauty_lakehouse_spark.streaming import (
-        hll_register_stream,
-        run_available_now,
-        stream_documents,
+    regs = streaming.run_available_now(
+        streaming.hll_register_stream(streaming.stream_documents(spark, sf_dir))
     )
-
-    regs = run_available_now(
-        hll_register_stream(stream_documents(spark, sf_dir)),
-        f"gate_hll_{uuid.uuid4().hex[:8]}",
-    )
-    exact = load(spark, sf_dir).documents.agg(
+    exact = catalog.load(spark, sf_dir).documents.agg(
         F.countDistinct("doc_id").alias("n_exact")
     )
     return quality.hll_estimate_from_registers(regs, exact).select(
         F.lit("documents.doc_id").alias("target"),
-        "n_exact",
-        "hll_estimate",
-        "registers_nonzero",
+        "n_exact", "hll_estimate", "registers_nonzero",
     )
 
 
@@ -1795,61 +1654,31 @@ def _q_hll_users_hourly_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained as a streaming aggregate, drained and finished
     batch-side — behind a grouped-HLL oracle keyed on the hour bucket
     (the canonical 'unique visitors per window' streaming-sketch job)."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from beauty_lakehouse_spark.catalog import load
-    from beauty_lakehouse_spark.functions import epoch_us
-    from beauty_lakehouse_spark.operators import quality
-    from beauty_lakehouse_spark.streaming import (
-        hourly_user_hll_registers,
-        run_available_now,
-        stream_events,
+    regs = streaming.run_available_now(
+        streaming.hourly_user_hll_registers(streaming.stream_events(spark, sf_dir))
     )
-
-    regs = run_available_now(
-        hourly_user_hll_registers(stream_events(spark, sf_dir)),
-        f"gate_hllh_{uuid.uuid4().hex[:8]}",
-    )
-    hour = (
-        epoch_us(F.col("ts")) - epoch_us(F.col("ts")) % F.lit(3_600_000_000)
-    ).alias("hour_us")
+    us = epoch_us(F.col("ts"))
     exact = (
-        load(spark, sf_dir)
-        .events.select(hour, "user_id")
+        catalog.load(spark, sf_dir)
+        .events.select((us - us % F.lit(3_600_000_000)).alias("hour_us"), "user_id")
         .groupBy("hour_us")
         .agg(F.countDistinct("user_id").alias("n_exact"))
     )
-    return quality.hll_estimate_from_registers(
-        regs, exact, keys=("hour_us",)
-    )
+    return quality.hll_estimate_from_registers(regs, exact, keys=("hour_us",))
 
 
 def _q_table_stats_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE-style orders profile with its per-column VALUE GRID
     maintained as one complete-mode streaming aggregate and drained,
-    then finished batch-side into the exact `table_stats` report —
-    the 13th oracle-matched streaming drain, behind the SAME oracle
-    row as the batch profile (register/finish split, exactly like the
-    HLL and volume-anomaly drains). Count over the grid key is
-    additive and order-insensitive, so the report is micro-batch-
-    slicing-independent; exact-NDV state is one row per distinct
-    value (the HLL drain is the bounded-state sibling)."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.quality import table_stats_finish
-    from beauty_lakehouse_spark.streaming import (
-        order_stats_value_grid,
-        run_available_now,
-        stream_orders,
-    )
-
-    grid = run_available_now(
-        order_stats_value_grid(stream_orders(spark, sf_dir)),
-        f"gate_tstats_{uuid.uuid4().hex[:8]}",
-    )
-    return table_stats_finish(grid)
+    then finished batch-side into the exact `table_stats` report,
+    behind the SAME oracle row as the batch profile (register/finish
+    split, exactly like the HLL and volume-anomaly drains). Count over
+    the grid key is additive and order-insensitive, so the report is
+    micro-batch-slicing-independent; exact-NDV state is one row per
+    distinct value (the HLL drain is the bounded-state sibling)."""
+    return quality.table_stats_finish(streaming.run_available_now(
+        streaming.order_stats_value_grid(streaming.stream_orders(spark, sf_dir))
+    ))
 
 
 def _q_ddsketch_quantiles_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1859,24 +1688,11 @@ def _q_ddsketch_quantiles_streamed(spark: SparkSession, sf_dir: str) -> DataFram
     so the drained grid is micro-batch-slicing-independent), then the
     batch finisher turns it into the identical (quantile, rank,
     bracket) report. Behind the SAME oracle row as the batch
-    `ddsketch_value_quantiles` — the 17th oracle-matched streaming
-    drain, the quantile-sketch sibling of the HLL/CMS drains."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.quality import (
-        ddsketch_quantiles_finish,
-    )
-    from beauty_lakehouse_spark.streaming import (
-        orders_value_sketch,
-        run_available_now,
-        stream_orders,
-    )
-
-    grid = run_available_now(
-        orders_value_sketch(stream_orders(spark, sf_dir)),
-        f"gate_ddsk_{uuid.uuid4().hex[:8]}",
-    )
-    return ddsketch_quantiles_finish(grid)
+    `ddsketch_value_quantiles`; the quantile-sketch sibling of the
+    HLL/CMS drains."""
+    return quality.ddsketch_quantiles_finish(streaming.run_available_now(
+        streaming.orders_value_sketch(streaming.stream_orders(spark, sf_dir))
+    ))
 
 
 def _q_user_modal_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1885,22 +1701,10 @@ def _q_user_modal_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     and order-insensitive, so the drain is micro-batch-slicing-
     independent), then the shared `user_modal_finish` turns it into
     the identical modal report. Behind the SAME oracle row as the
-    batch `user_modal_event` — the 18th oracle-matched streaming
-    drain."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.events import user_modal_finish
-    from beauty_lakehouse_spark.streaming import (
-        run_available_now,
-        stream_events,
-        user_event_type_counts,
-    )
-
-    grid = run_available_now(
-        user_event_type_counts(stream_events(spark, sf_dir)),
-        f"gate_umod_{uuid.uuid4().hex[:8]}",
-    )
-    return user_modal_finish(grid)
+    batch `user_modal_event`."""
+    return events.user_modal_finish(streaming.run_available_now(
+        streaming.user_event_type_counts(streaming.stream_events(spark, sf_dir))
+    ))
 
 
 def _q_rate_capped_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1911,27 +1715,11 @@ def _q_rate_capped_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the last snapshot per key and explodes ranks. Eviction-
     correct (a late earlier event displaces a kept row at the next
     emission) and micro-batch-slicing-independent (collect_list up to
-    a deterministic sort is order-insensitive). Replaces the
-    ``applyInPandasWithState`` min-k form (VERDICT r11 ask #4: that
-    channel floored at ~45µs/group × 95k (user, hour) keys at sf0.1 ≈
-    4.3s; this plan never leaves whole-stage codegen, and the Pandas
-    form is deleted). Behind the SAME oracle row as the batch
-    ``events_rate_capped`` — the 19th oracle-matched streaming drain."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        rate_capped_grid,
-        rate_capped_grid_finish,
-        run_available_now,
-        stream_events,
-    )
-
-    drained = run_available_now(
-        rate_capped_grid(stream_events(spark, sf_dir)),
-        f"gate_rcap_{uuid.uuid4().hex[:8]}",
-        output_mode="update",
-    )
-    return rate_capped_grid_finish(drained)
+    a deterministic sort is order-insensitive). Behind the SAME oracle
+    row as the batch ``events_rate_capped``."""
+    return streaming.rate_capped_grid_finish(streaming.run_available_now(
+        streaming.rate_capped_grid(streaming.stream_events(spark, sf_dir)), "update"
+    ))
 
 
 def _q_domain_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1942,23 +1730,10 @@ def _q_domain_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     commutative, so the winner table is micro-batch-slicing-
     independent) — finished through the SHARED
     ``curation.domain_mixture_finish`` tail. Behind the SAME oracle
-    row as the batch ``domain_dedup_mixture`` — the 24th
-    oracle-matched streaming drain."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        run_available_now,
-        stream_documents,
-        url_dedup_finish,
-        url_dedup_state,
-    )
-
-    drained = run_available_now(
-        url_dedup_state(stream_documents(spark, sf_dir)),
-        f"gate_udd_{uuid.uuid4().hex[:8]}",
-        output_mode="update",
-    )
-    return url_dedup_finish(drained)
+    row as the batch ``domain_dedup_mixture``."""
+    return streaming.url_dedup_finish(streaming.run_available_now(
+        streaming.url_dedup_state(streaming.stream_documents(spark, sf_dir)), "update"
+    ))
 
 
 def _q_ks_two_sample_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1967,21 +1742,10 @@ def _q_ks_two_sample_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream (additive + order-insensitive -> slicing-independent), then
     the SHARED `quality.ks_finish` computes the statistic from the
     drained grid. Behind the SAME oracle row as the batch
-    `ks_two_sample` — the 29th oracle-matched streaming drain."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.quality import ks_finish
-    from beauty_lakehouse_spark.streaming import (
-        ks_value_grid,
-        run_available_now,
-        stream_events,
-    )
-
-    grid = run_available_now(
-        ks_value_grid(stream_events(spark, sf_dir)),
-        f"gate_ks_{uuid.uuid4().hex[:8]}",
-    )
-    return ks_finish(grid)
+    `ks_two_sample`."""
+    return quality.ks_finish(streaming.run_available_now(
+        streaming.ks_value_grid(streaming.stream_events(spark, sf_dir))
+    ))
 
 
 def _q_dsir_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1990,22 +1754,10 @@ def _q_dsir_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing stream (additive + order-insensitive → slicing-
     independent), then the SHARED ``curation.dsir_finish`` derives the
     bucket model and scores the raw pool from the drained grid. Behind
-    the SAME oracle row as the batch ``dsir_importance`` — the 25th
-    oracle-matched streaming drain."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.curation import dsir_finish
-    from beauty_lakehouse_spark.streaming import (
-        dsir_doc_bucket_counts,
-        run_available_now,
-        stream_documents,
-    )
-
-    grid = run_available_now(
-        dsir_doc_bucket_counts(stream_documents(spark, sf_dir)),
-        f"gate_dsir_{uuid.uuid4().hex[:8]}",
-    )
-    return dsir_finish(grid)
+    the SAME oracle row as the batch ``dsir_importance``."""
+    return curation.dsir_finish(streaming.run_available_now(
+        streaming.dsir_doc_bucket_counts(streaming.stream_documents(spark, sf_dir))
+    ))
 
 
 def _q_nb_lang_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2014,22 +1766,10 @@ def _q_nb_lang_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents landing stream (additive + order-insensitive →
     slicing-independent), then the SHARED ``text.nb_finish`` trains
     the model on the grid's train fold and scores its test fold.
-    Behind the SAME oracle row as the batch ``nb_lang_classifier`` —
-    the 26th oracle-matched streaming drain."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.text import nb_finish
-    from beauty_lakehouse_spark.streaming import (
-        nb_token_counts,
-        run_available_now,
-        stream_documents,
-    )
-
-    grid = run_available_now(
-        nb_token_counts(stream_documents(spark, sf_dir)),
-        f"gate_nbl_{uuid.uuid4().hex[:8]}",
-    )
-    return nb_finish(grid)
+    Behind the SAME oracle row as the batch ``nb_lang_classifier``."""
+    return text.nb_finish(streaming.run_available_now(
+        streaming.nb_token_counts(streaming.stream_documents(spark, sf_dir))
+    ))
 
 
 def _q_kaplan_meier_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2040,23 +1780,10 @@ def _q_kaplan_meier_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key max date so censoring needs nothing beyond the snapshot
     and ``count(*)`` as the version stamp — finished through the
     SHARED ``operators.events.km_curve`` tail. Behind the same oracle
-    row as the batch ``kaplan_meier_repeat`` — the 20th oracle-matched
-    streaming drain."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        km_firsts,
-        km_firsts_finish,
-        run_available_now,
-        stream_orders,
-    )
-
-    drained = run_available_now(
-        km_firsts(stream_orders(spark, sf_dir)),
-        f"gate_kmf_{uuid.uuid4().hex[:8]}",
-        output_mode="update",
-    )
-    return km_firsts_finish(drained)
+    row as the batch ``kaplan_meier_repeat``."""
+    return streaming.km_firsts_finish(streaming.run_available_now(
+        streaming.km_firsts(streaming.stream_orders(spark, sf_dir)), "update"
+    ))
 
 
 def _q_bootstrap_mean_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2066,24 +1793,10 @@ def _q_bootstrap_mean_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     additive complete-mode aggregate of B+1 rows (replicate −1 carries
     the unweighted full-sample stats), and the shared
     ``bootstrap_finish`` reads off the identical CI. Behind the SAME
-    oracle row as ``bootstrap_mean_ci`` — the 22nd oracle-matched
-    streaming drain."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.quality import (
-        bootstrap_finish,
-        bootstrap_grid,
-    )
-    from beauty_lakehouse_spark.streaming import (
-        run_available_now,
-        stream_orders,
-    )
-
-    grid = run_available_now(
-        bootstrap_grid(stream_orders(spark, sf_dir)),
-        f"gate_boot_{uuid.uuid4().hex[:8]}",
-    )
-    return bootstrap_finish(grid)
+    oracle row as ``bootstrap_mean_ci``."""
+    return quality.bootstrap_finish(streaming.run_available_now(
+        quality.bootstrap_grid(streaming.stream_orders(spark, sf_dir))
+    ))
 
 
 def _q_page_hinkley_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2091,45 +1804,20 @@ def _q_page_hinkley_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained by the orders landing stream — ONE additive complete-
     mode aggregate (the bootstrap_grid shape) — with the shared
     ``ph_finish`` ledgers reading off the identical alarms. Behind
-    the SAME oracle row as ``page_hinkley_drift`` — the 28th
-    oracle-matched streaming drain."""
-    import uuid
-
-    from beauty_lakehouse_spark.operators.temporal import (
-        ph_daily_grid,
-        ph_finish,
-    )
-    from beauty_lakehouse_spark.streaming import (
-        run_available_now,
-        stream_orders,
-    )
-
-    grid = run_available_now(
-        ph_daily_grid(stream_orders(spark, sf_dir)),
-        f"gate_ph_{uuid.uuid4().hex[:8]}",
-    )
-    return ph_finish(grid)
+    the SAME oracle row as ``page_hinkley_drift``."""
+    return temporal.ph_finish(streaming.run_available_now(
+        temporal.ph_daily_grid(streaming.stream_orders(spark, sf_dir))
+    ))
 
 
 def _q_view_purchase_join_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-STREAM inner join drain — the first two-unbounded-inputs
-    shape in the streaming surface: views joined to same-user purchases
-    within the following hour, both sides watermarked, append mode (a
-    match emits exactly once), drained with availableNow. The oracle is
-    the plain batch time-range join — the 21st oracle-matched streaming
-    drain."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        run_available_now,
-        stream_events,
-        view_purchase_join,
-    )
-
-    return run_available_now(
-        view_purchase_join(stream_events(spark, sf_dir)),
-        f"gate_ssj_{uuid.uuid4().hex[:8]}",
-        output_mode="append",
+    """STREAM-STREAM inner join drain: views joined to same-user
+    purchases within the following hour, both sides watermarked,
+    append mode (a match emits exactly once), drained with
+    availableNow. The oracle is the plain batch time-range join."""
+    return streaming.run_available_now(
+        streaming.view_purchase_join(streaming.stream_events(spark, sf_dir)),
+        "append",
     )
 
 
@@ -2138,19 +1826,9 @@ def _q_cms_cells_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained as one complete-mode streaming aggregate and drained —
     count is additive and order-insensitive, so the drained D×W grid
     is bit-identical to the batch sketch the DuckDB oracle computes
-    (the 12th oracle-matched streaming drain; the frequency-sketch
-    sibling of the HLL register drains)."""
-    import uuid
-
-    from beauty_lakehouse_spark.streaming import (
-        cms_user_cells,
-        run_available_now,
-        stream_events,
-    )
-
-    return run_available_now(
-        cms_user_cells(stream_events(spark, sf_dir)),
-        f"gate_cms_{uuid.uuid4().hex[:8]}",
+    (the frequency-sketch sibling of the HLL register drains)."""
+    return streaming.run_available_now(
+        streaming.cms_user_cells(streaming.stream_events(spark, sf_dir))
     )
 
 
@@ -2161,22 +1839,9 @@ def _q_event_anomalies_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     finish over the drained buckets — behind the SAME oracle row as
     the batch q_event_volume_anomalies (register/finish split, exactly
     like the streamed HLL drains)."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from beauty_lakehouse_spark.operators.events import volume_anomaly_finish
-    from beauty_lakehouse_spark.streaming import (
-        hourly_event_counts,
-        run_available_now,
-        stream_events,
-    )
-
-    hourly = run_available_now(
-        hourly_event_counts(stream_events(spark, sf_dir)),
-        f"gate_anom_{uuid.uuid4().hex[:8]}",
-    ).select("event_type", "hour_start_us", "n_events")
-    return volume_anomaly_finish(hourly)
+    return events.volume_anomaly_finish(streaming.run_available_now(
+        streaming.hourly_event_counts(streaming.stream_events(spark, sf_dir))
+    ).select("event_type", "hour_start_us", "n_events"))
 
 
 def _q_beauty_datagen(spark: SparkSession, sf_dir: str) -> DataFrame:

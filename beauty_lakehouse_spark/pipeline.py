@@ -211,9 +211,9 @@ def run_corpus_pipeline(
     )
     n_kept = docs.count()
 
-    # chunk once for all three splits (localCheckpoint: the per-split
-    # filter+write passes read the materialized rows instead of
-    # re-running the explode + join per split); the count read-back
+    # chunk once for all three splits (cached: the first split's write
+    # fills the cache, and the later filter+write passes read the cached
+    # rows instead of re-running the explode + join); the count read-back
     # from the PUBLISHED table doubles as artifact validation
     chunks = (
         curation.chunk_documents(docs)

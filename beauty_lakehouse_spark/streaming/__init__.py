@@ -30,7 +30,6 @@ from .pipelines import (  # noqa: F401
     stream_events,
     stream_orders,
     user_event_type_counts,
-    user_purchase_totals,
     view_purchase_attribution,
     view_purchase_join,
 )

@@ -44,15 +44,10 @@ def merge_stream(
     seq_col: str,
     checkpoint_dir: str,
     partition_by: str | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Start a streaming query that MERGEs each micro-batch into the
-    versioned table at ``path`` (created on first batch if absent).
-
-    ``available_now=True`` drains currently-available input and stops —
-    the backfill/batch-equivalence mode the tests use; pass ``False``
-    (with a processingTime trigger configured by the caller via
-    ``.trigger``-compatible defaults) for a continuous tail."""
+    versioned table at ``path`` (created on first batch if absent). It
+    drains currently-available input and stops (Trigger.AvailableNow)."""
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -63,10 +58,9 @@ def merge_stream(
         else:
             tables.merge_upsert(batch.sparkSession, path, latest, keys=keys)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,9 +69,7 @@ def _plan_state_partitions(result: DataFrame, cores: int) -> int | None:
     empty finalize batch re-commits all of them. Measured at sf0.1
     (32-core local): the stream-stream join drain goes 15.4 s → 3.8 s
     and the NB token-grid drain 4.0 s → 2.0 s when partitions drop
-    32 → 4, with bit-identical output. Production overrides pass
-    ``state_partitions=`` to :func:`run_available_now` (size to state
-    volume and ingest throughput there).
+    32 → 4, with bit-identical output.
 
     Returns ``None`` when the plan has no recognizable file source
     (e.g. a rate/memory source in tests) — the drain then keeps the
@@ -241,22 +240,6 @@ def session_values(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def user_purchase_totals(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming running per-user purchase totals (complete-mode shape;
-    at scale this is the pipeline you'd sink to a keyed store)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchase"),
-            F.round(F.sum(F.col("value").cast("decimal(12,2)")), 2)
-            .cast("double")
-            .alias("purchase_value"),
-        )
-    )
-
-
 def ks_value_grid(events: DataFrame) -> DataFrame:
     """Streaming twin of the KS count grid (`quality.ks_grid`
     unchanged): per distinct cents value, purchase/view counts
@@ -271,10 +254,7 @@ def ks_value_grid(events: DataFrame) -> DataFrame:
 
 
 def rate_capped_grid(events: DataFrame, k: int | None = None) -> DataFrame:
-    """JVM-side streaming rate-cap grid (VERDICT r11 ask #4: the
-    Python ``applyInPandasWithState`` min-k form it replaced floored at
-    ~45µs per (user, hour) group, ~4.3s over sf0.1's 95k keys; this
-    form never leaves the JVM).
+    """JVM-side streaming rate-cap grid.
 
     One built-in streaming aggregate per (user, clock hour): the kept
     set is ``slice(array_sort(collect_list(struct(us, event_id))), k)``
@@ -284,11 +264,12 @@ def rate_capped_grid(events: DataFrame, k: int | None = None) -> DataFrame:
     count strictly grows ⇒ last-version-wins picks the final snapshot).
 
     State tradeoff vs a bounded min-k state: that would hold ≤ k pairs
-    per key but pay the Python channel per group per batch; this one
-    holds the key's events-so-far JVM-side (naturally bounded by one
-    user's activity in one clock hour; production adds
-    ``withWatermark`` so closed hours are purged — omitted here because
-    the batch-equivalence drain must not drop late fixture slices)."""
+    per key but pay the Python channel per group per batch (~45µs a
+    group, ~4.3s over sf0.1's 95k keys); this one holds the key's
+    events-so-far JVM-side (naturally bounded by one user's activity
+    in one clock hour; production adds ``withWatermark`` so closed
+    hours are purged — omitted here because the batch-equivalence
+    drain must not drop late fixture slices)."""
     from ..operators.events import RATE_CAP_PER_HOUR
 
     kk = RATE_CAP_PER_HOUR if k is None else k
@@ -339,26 +320,21 @@ _FS_CHECKPOINT_MANAGER = (
 )
 
 
-def run_available_now(
-    result: DataFrame,
-    name: str,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> DataFrame:
+def run_available_now(result: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drain all currently-available input through the streaming plan
     (Trigger.AvailableNow), collect into an in-memory table, and return
-    it as a DataFrame. This is the backfill/batch-equivalence runner the
-    tests use; production sinks swap ``format``/``outputMode``.
+    it as a DataFrame. This is the backfill/batch-equivalence runner
+    every registry drain goes through.
 
-    ``state_partitions`` (default: derived from THIS plan's file
-    sources, :func:`_plan_state_partitions`) sets
-    ``spark.sql.shuffle.partitions`` — which streaming queries
-    freeze as their state-store partition count at first start — for
-    the duration of the drain only (the previous session value is
-    restored afterwards), and caps the returned table's scan width.
-    Partition count never changes WHAT a drain
-    computes (aggregation/join results are partitioning-independent),
-    only how many state stores each micro-batch must load and commit.
+    The drain sets ``spark.sql.shuffle.partitions`` (which streaming
+    queries freeze as their state-store partition count at first start)
+    to the count derived from THIS plan's file sources
+    (:func:`_plan_state_partitions`) for the duration of the drain only,
+    and caps the returned table's scan width at it. A plan with no
+    recognizable file source keeps the session's setting. Partition
+    count never changes WHAT a drain computes (aggregation/join results
+    are partitioning-independent), only how many state stores each
+    micro-batch must load and commit.
 
     The drain also checkpoints through Spark's
     ``FileSystemBasedCheckpointFileManager``, set and restored with the
@@ -374,11 +350,12 @@ def run_available_now(
     checkpoint is durable, so the default manager is kept, as it is for
     ``merge_sink.merge_stream``'s.
 
-    The memory sink's temp view ``name`` is dropped before returning:
-    the returned frame's analyzed plan already holds the sink's rows."""
+    The memory sink's query name is made up here and its temp view is
+    dropped before returning: the returned frame's analyzed plan
+    already holds the sink's rows."""
     spark = result.sparkSession
-    if state_partitions is None:
-        state_partitions = _plan_state_partitions(result, cores(spark))
+    name = f"drain_{uuid.uuid4().hex}"
+    state_partitions = _plan_state_partitions(result, cores(spark))
     drain_conf = {}
     if state_partitions is not None:
         drain_conf["spark.sql.shuffle.partitions"] = str(state_partitions)
@@ -406,8 +383,8 @@ def run_available_now(
                 spark.conf.set(k, v)
     out = spark.table(name)
     spark.catalog.dropTempView(name)
-    # Right-size the drained table's scan width to the explicit or
-    # volume-derived state-partition count (r14 §2.6/§5): the memory sink
+    # Right-size the drained table's scan width to the volume-derived
+    # state-partition count (r14 §2.6/§5): the memory sink
     # holds the complete-mode snapshot as driver-local rows, and a
     # LocalTableScan fans out to one task per core, all of which
     # contend on the driver feeding them serialized slices — measured

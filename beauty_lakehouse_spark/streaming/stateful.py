@@ -6,9 +6,9 @@ in update mode with a ``count(*)`` version stamp, the shape
 ``pipelines.rate_capped_grid`` set: they never leave the JVM, and each
 ``*_finish`` keeps the last version per key.
 
-No state here is user-managed (``applyInPandasWithState``): the
-reference has no stateful streaming (SURVEY.md §2.8), and every drain
-the registry runs is expressible as a built-in aggregate.
+No state here is user-managed: the reference has no stateful
+streaming (SURVEY.md §2.8), and every drain the registry runs is
+expressible as a built-in aggregate.
 """
 
 from __future__ import annotations
@@ -33,9 +33,9 @@ def km_firsts(orders: DataFrame) -> DataFrame:
 
     State tradeoff: the state holds each customer's orders so far, not
     2 (days, orderkey) pairs — bounded by one customer's order history.
-    In exchange the drain never leaves the JVM; the replaced
-    ``applyInPandasWithState`` form paid the Python channel per
-    customer per micro-batch (9.8 s vs 2.1 s at sf0.1, ``local[4]``)."""
+    In exchange the drain never leaves the JVM; a Python-side min-2
+    state pays the Python channel per customer per micro-batch (9.8 s
+    vs 2.1 s at sf0.1, ``local[4]``)."""
     keyed = orders.select(
         "o_custkey",
         "o_orderkey",
